@@ -1,6 +1,53 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
+  /** Wall time of one noop-format write of `fn`'s frame, or the
+    * failure's message. The catch sits outside the timed value: a query
+    * that throws is reported as failed, never timed as a fast one. */
+  private[graft] def timed(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case NonFatal(e) => Left(s"${e.getClass.getName}: ${e.getMessage}")
+    }
+  }
+
+  /** Times every query `runs` times, calling `release` after each run
+    * and settling the heap every 12 queries. Returns the per-query run
+    * times and, separately, the queries that threw (name -> message):
+    * a query that fails on any run gets no time at all. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame], runs: Int)(
+      release: () => Unit): (Map[String, Seq[Double]], Map[String, String]) = {
+    var qIdx = 0
+    val outcomes = queries.map { case (name, fn) =>
+      val times = (1 to runs).foldLeft[Either[String, Seq[Double]]](
+          Right(Vector.empty)) { (acc, _) =>
+        acc.flatMap { ts =>
+          val t = timed(spark, sfDir, fn)
+          release()
+          t.map(ts :+ _)
+        }
+      }
+      qIdx += 1
+      if (qIdx % 12 == 0) { System.gc(); Thread.sleep(200) }
+      name -> times
+    }
+    (outcomes.collect { case (n, Right(ts)) => n -> ts },
+      outcomes.collect { case (n, Left(e)) => n -> e })
+  }
+
+  private def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -39,13 +86,8 @@ object Bench {
     // Catalyst eliminate final sorts (EliminateSorts), so presentation
     // ORDER BYs would be planned but never timed. The noop sink
     // executes the declared plan in full and discards rows.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(fn: (SparkSession, String) => DataFrame): Double =
+      timed(spark, sfDir, fn).fold(e => sys.error(e), identity)
     // Per-query fixed floor: the cost of planning + noop-writing a
     // trivial one-row frame. Small queries (~0.2 s of this harness
     // overhead on ~0.6 s total) would otherwise read as plan
@@ -133,13 +175,8 @@ object Bench {
     // force a GC + settle between query families.
     def release(): Unit = spark.sparkContext.getPersistentRDDs
       .valuesIterator.foreach(_.unpersist(blocking = true))
-    var qIdx = 0
-    val detail = SparkEntry.queries.map { case (name, fn) =>
-      val times = (1 to 2).map { _ => val t = run(fn); release(); t }
-      qIdx += 1
-      if (qIdx % 12 == 0) { System.gc(); Thread.sleep(200) }
-      name -> times
-    }
+    val (detail, errors) =
+      timeQueries(spark, sfDir, SparkEntry.queries, runs = 2)(() => release())
     val results = detail.map { case (name, times) => name -> times.min }
     def r3(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
@@ -148,10 +185,14 @@ object Bench {
     val runsDetail = detail.map { case (k, ts) =>
       s"\"" + k + "\":[" + ts.map(r3).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val errs = errors.map { case (k, m) => s"\"$k\":\"${jsonEscape(m)}\"" }
+      .mkString("{", ",", "}")
+    errors.foreach { case (k, m) =>
+      System.err.println(s"[bench] $k failed: $m") }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val sfNum = raw"sf([0-9.]+)".r.findFirstMatchIn(sfDir)
       .map(_.group(1).stripSuffix(".")).getOrElse("0")
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":$sfNum,"n_queries":${results.size},"runs":2,"agg":"min","exec":"noop-write","floor_s":${r3(floor)},"canary_s":${r3(canary)},"canary_mt_s":${r3(canaryM)}$guard,"runs_detail":$runsDetail}"""
+    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":$sfNum,"n_queries":${results.size},"runs":2,"agg":"min","exec":"noop-write","floor_s":${r3(floor)},"canary_s":${r3(canary)},"canary_mt_s":${r3(canaryM)}$guard,"runs_detail":$runsDetail,"errors":$errs}"""
     // The driver captures only the LAST ~2000 chars of stdout (plus sbt's
     // trailing "[success] Total time" line) and json-parses the final JSON
     // line it finds. The full per-query map for ~100 queries is ~3000
@@ -164,7 +205,7 @@ object Bench {
       java.nio.file.Paths.get("bench_detail.json"), full)
     catch { case _: Throwable => () }
     println(full)
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":$sfNum,"n_queries":${results.size},"runs":2,"agg":"min","exec":"noop-write","floor_s":${r3(floor)},"canary_s":${r3(canary)},"canary_mt_s":${r3(canaryM)}$guard,"detail":"bench_detail.json","queries":"""
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":$sfNum,"n_queries":${results.size},"runs":2,"agg":"min","exec":"noop-write","floor_s":${r3(floor)},"canary_s":${r3(canary)},"canary_mt_s":${r3(canaryM)}$guard,"n_errors":${errors.size},"detail":"bench_detail.json","queries":"""
     val budget = 1500 - head.length - 2
     val slowest = results.toSeq.sortBy(-_._2)
     val sb = new StringBuilder

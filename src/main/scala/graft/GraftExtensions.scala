@@ -8,10 +8,17 @@ import graft.functions.{BloomMightContain, CharGrams, DotProduct, NGrams, PqAdc,
 
 /** Engine extension point, applied via
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
-  * public SparkSessionExtensions surface. Registers the native vector
-  * kernels so SQL and `call_function` resolve them, and the
-  * GraftLake SQL planning rule (reads + row-level UPDATE/DELETE for
-  * `graft.<ns>.<table>` relations).
+  * public SparkSessionExtensions surface. Injects the GraftLake SQL
+  * planning rule (reads + row-level UPDATE/DELETE for
+  * `graft.<ns>.<table>` relations) and the bucket-local scan claim,
+  * and registers the eight native kernels by name.
+  *
+  * The engine's own queries never need that registration: they build
+  * each kernel directly as a Column (`graft.functions.vec`,
+  * `graft.functions.grams`), so they plan identically on a session
+  * without these extensions. Registering the names has one job left —
+  * letting SQL text and `call_function` resolve `vec_dot`,
+  * `simhash64`, `ngrams` and the rest.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

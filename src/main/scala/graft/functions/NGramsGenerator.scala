@@ -1,12 +1,27 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** The gram generators as Columns: [[NGrams]] and [[CharGrams]] built
+  * directly, so every query takes the generator on every session —
+  * no function registration needed. */
+object grams {
+  /** One `gram` row per word n-gram of `text` (see [[NGrams]]). */
+  def words(text: Column, n: Int): Column =
+    column(NGrams(expression(text), Literal(n)))
+
+  /** One `gram` row per character n-gram of `text` (see [[CharGrams]]). */
+  def chars(text: Column, n: Int): Column =
+    column(CharGrams(expression(text), Literal(n)))
+}
 
 /** Shared shape of the native gram GENERATORS (word n-grams, char
   * n-grams): a (string, foldable positive int) generator emitting one
@@ -84,12 +99,12 @@ trait GramGenerator extends Generator {
   * GenerateExec with one UTF8String allocation per gram and nothing
   * buffered per document.
   *
-  * Semantics (pinned in NGramsSpec, bit-equal with the HOF form and
-  * the DuckDB oracle): tokens are split on single spaces (consecutive
-  * separators yield empty tokens, exactly like `split(text, ' ')` /
-  * DuckDB string_split); documents with fewer than n tokens emit
-  * nothing; NULL input emits nothing; n must be a foldable positive
-  * integer (analysis error otherwise).
+  * Semantics (pinned in NGramsSpec, bit-equal with the HOF reference
+  * form and the DuckDB oracle): tokens are split on single spaces
+  * (consecutive separators yield empty tokens, exactly like
+  * `split(text, ' ')` / DuckDB string_split); documents with fewer
+  * than n tokens emit nothing; NULL input emits nothing; n must be a
+  * foldable positive integer (analysis error otherwise).
   */
 case class NGrams(child: Expression, n: Expression) extends GramGenerator {
 
@@ -124,7 +139,8 @@ case class NGrams(child: Expression, n: Expression) extends GramGenerator {
   * offsets, then emits each gram as a byte-range slice — O(len) per
   * document, one UTF8String allocation per gram.
   *
-  * Semantics (pinned in CharGramsSpec, bit-equal with the HOF form):
+  * Semantics (pinned in CharGramsSpec, bit-equal with the HOF
+  * reference form):
   * grams are the FULL n-grams, positions 1..len-n+1 in SQL substring
   * terms — for n = 2 exactly the `sequence(1, length - 1)` bigrams the
   * langid family declares (those queries also pre-filter length >= 2,

@@ -173,7 +173,7 @@ case class SimHash64(child: Expression)
   * `aggregate(sequence(...))` formulation allocates the 32-element
   * sequence and boxes the accumulator per row; this compiles to a
   * tight allocation-free primitive loop in WholeStageCodegen.
-  * Measured (tools/SignpackBench, 2M cached 64-dim rows, local[4]):
+  * Measured (2M cached 64-dim rows, local[4]):
   * ~1.3x over the HOF — modest at this dimensionality because the
   * loop is only 32 iterations; the kernel's main value is keeping the
   * packing pass allocation-free inside the scan stage, where at 10^9

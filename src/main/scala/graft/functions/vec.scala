@@ -1,130 +1,39 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
 /** Column helpers for vector math over array<float> embedding columns.
   *
-  * `dot` resolves to the native codegen'd [[DotProduct]] when the
-  * session was built with graft.GraftExtensions (all engine entry
-  * points do this); on a vanilla session it falls back to a Scala UDF
-  * with identical double-precision semantics — slower (one boxed call
-  * per row) but correct, so the query catalog never hard-depends on
-  * session wiring. The fallback covers the stored embedding type
-  * (array<float>).
+  * Each helper builds its native codegen'd kernel ([[DotProduct]],
+  * [[SignPack]], [[PqEncode]], [[PqAdc]]) directly as a Column, so the
+  * kernel is the one physical path on every session — the helpers need
+  * no function registration and never consult the session catalog.
   */
 object vec {
 
-  private val dotUdf = udf { (a: Seq[Float], b: Seq[Float]) =>
-    val n = math.min(a.length, b.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  def dot(s: SparkSession, a: Column, b: Column): Column =
-    if (s.catalog.functionExists("vec_dot")) call_function("vec_dot", a, b)
-    else dotUdf(a, b)
+  def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def norm(s: SparkSession, a: Column): Column = sqrt(dot(s, a, a))
+  /** 32 sign bits of `a` from 0-based `offset`, packed into a long. */
+  def signpack(a: Column, offset: Int): Column =
+    column(SignPack(expression(a), Literal(offset)))
 
-  /** 32 sign bits of `a` from 0-based `offset`, packed into a long —
-    * native [[SignPack]] kernel when registered, HOF fallback with
-    * identical bit semantics otherwise. */
-  def signpack(s: SparkSession, a: Column, offset: Int): Column =
-    if (s.catalog.functionExists("vec_signpack"))
-      call_function("vec_signpack", a, lit(offset))
-    else signpackHof(a, offset)
-
-  private[graft] def signpackHof(a: Column, offset: Int): Column = {
-    // mirror the native kernel's analysis-time rejection: a negative
-    // offset under try_element_at would silently read from the END of
-    // the array (negative indexing) instead of failing
-    require(offset >= 0 && offset <= Int.MaxValue - 31,
-      s"signpack offset must be in [0, ${Int.MaxValue - 31}], got $offset")
-    aggregate(sequence(lit(0), lit(31)), lit(0L), (acc, i) =>
-      // try_element_at: out-of-range indices yield null (-> 0 bit) to
-      // match the native kernel's zero-fill under ANSI mode, where
-      // element_at would throw INVALID_ARRAY_INDEX_IN_ELEMENT_AT.
-      acc + when(try_element_at(a, i + lit(offset + 1)) > 0d,
-        call_function("shiftleft", lit(1L), i)).otherwise(0L))
-  }
-
-  def cosine(s: SparkSession, a: Column, b: Column,
-      normA: Column, normB: Column): Column =
-    dot(s, a, b) / (normA * normB)
+  def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
+    dot(a, b) / (normA * normB)
 
   /** PQ encode of an integer-quantized vector against a flattened
     * codebook (layout cb[(m*16 + k)*D + d], M=8/K=16 contract):
-    * array<bigint> [packedCodes, qerr]. Native [[PqEncode]] kernel
-    * when registered; HOF fallback with identical integer semantics
-    * (argmin ties to the smallest k, missing elements read 0)
-    * otherwise. */
-  def pqEncode(s: SparkSession, q: Column, cb: Array[Long]): Column =
-    if (s.catalog.functionExists("pq_encode"))
-      call_function("pq_encode", q, lit(cb))
-    else pqEncodeHof(q, cb)
-
-  private[graft] def pqEncodeHof(q: Column, cb: Array[Long]): Column = {
-    val cbCol = lit(cb)
-    def dsz = (size(q) / 8).cast("int")
-    // degenerate sub-8-element vectors: D = 0, the kernel's inner loop
-    // is empty so every subspace scores 0 against codeword 0 — mirror
-    // that here rather than letting sequence(0, -1) run descending
-    val enc0 = struct(lit(0L).as("codes"), lit(0L).as("qerr"))
-    val enc = aggregate(
-      sequence(lit(0), lit(7)),
-      struct(lit(0L).as("codes"), lit(0L).as("qerr")),
-      (acc, m) => {
-        val bm = aggregate(
-          sequence(lit(0), lit(15)),
-          struct(lit(Long.MaxValue).as("bd"), lit(0).as("bk")),
-          (bacc, k) => {
-            val d = aggregate(
-              sequence(lit(0), dsz - 1),
-              lit(0L),
-              (s2, i) => {
-                val diff =
-                  coalesce(try_element_at(q, (m * dsz + i + 1).cast("int")),
-                    lit(0L)) -
-                  coalesce(try_element_at(cbCol,
-                    ((m * 16 + k) * dsz + i + 1).cast("int")), lit(0L))
-                s2 + diff * diff
-              })
-            when(d < bacc.getField("bd"),
-              struct(d.as("bd"), k.as("bk"))).otherwise(bacc)
-          })
-        struct(
-          acc.getField("codes").bitwiseOR(
-            call_function("shiftleft", bm.getField("bk").cast("long"),
-              (m * 4).cast("int"))).as("codes"),
-          (acc.getField("qerr") + bm.getField("bd")).as("qerr"))
-      })
-    val encSafe = when(size(q) < 8, enc0).otherwise(enc)
-    // null-in/null-out parity with the kernel's nullSafeEval: without
-    // this guard a NULL vector flows through the aggregates as
-    // (MaxValue, 0) garbage instead of NULL
-    when(q.isNull, lit(null).cast("array<bigint>"))
-      .otherwise(array(encSafe.getField("codes"), encSafe.getField("qerr")))
-  }
+    * array<bigint> [packedCodes, qerr]. */
+  def pqEncode(q: Column, cb: Array[Long]): Column =
+    column(PqEncode(expression(q), expression(lit(cb))))
 
   /** ADC scoring of packed PQ codes against a flattened query LUT
-    * (lut[16*m + k]): native [[PqAdc]] kernel when registered, HOF
-    * fallback with identical semantics otherwise. */
-  def pqAdc(s: SparkSession, codes: Column, lut: Column): Column =
-    if (s.catalog.functionExists("pq_adc"))
-      call_function("pq_adc", codes, lut)
-    else pqAdcHof(codes, lut)
-
-  private[graft] def pqAdcHof(codes: Column, lut: Column): Column =
-    // null-in/null-out parity with the kernel's nullSafeEval: the
-    // coalesce zero-fill below would otherwise turn a NULL input into
-    // a spurious score of 0
-    when(codes.isNull.or(lut.isNull), lit(null).cast("bigint"))
-      .otherwise(aggregate(sequence(lit(0), lit(7)), lit(0L), (a, m) =>
-        a + coalesce(try_element_at(lut,
-          (lit(16) * m +
-            call_function("shiftrightunsigned", codes, (m * 4).cast("int"))
-              .bitwiseAND(lit(15L)).cast("int") + 1).cast("int")), lit(0L))))
+    * (lut[16*m + k]). */
+  def pqAdc(codes: Column, lut: Column): Column =
+    column(PqAdc(expression(codes), expression(lut)))
 }

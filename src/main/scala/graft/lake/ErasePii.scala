@@ -22,9 +22,13 @@ object ErasePii {
     * takes any literal-able value (String case ids, Long custkeys) so
     * the predicate is TYPED — a string against a numeric key would
     * ride implicit coercion and defeat stats pruning on the erase's
-    * discovery scan. */
+    * discovery scan. A permanent erase on a `gc.enabled=false` table
+    * (a snapshot fork) refuses before its first commit: expiry could
+    * not finish it, and a half-done erase would leave the PII in
+    * history while the table already shows it gone. */
   def run(table: GraftTable, keyColumn: String, keyValue: Any,
       mode: Mode, permanent: Boolean = true): Unit = {
+    if (permanent) table.requireGcEnabled("permanently erase PII")
     val pred = col(keyColumn) === lit(keyValue)
     mode match {
       case NullifyColumns(cols) =>

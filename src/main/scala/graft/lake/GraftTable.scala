@@ -3616,7 +3616,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * the source's directory), so expiry here could destroy the
     * source's history. Iceberg's snapshot procedure makes the same
     * promise the same way. */
-  private def requireGcEnabled(op: String): Unit =
+  private[lake] def requireGcEnabled(op: String): Unit =
     require(properties.getOrElse("gc.enabled", "true").toBoolean,
       s"Cannot $op on $name: gc.enabled=false (this table references " +
         "data files it does not own — a snapshot fork's source would " +

@@ -1636,7 +1636,7 @@ object LakeQueries extends QueryCatalog {
     // per-cell residual LUTs
     mark("create-tables")
     val (model, trainRows) =
-      ivfPqTrainLocal(s, emb.filter(col("vec_id") < 250))
+      ivfPqTrainLocal(emb.filter(col("vec_id") < 250))
     mark("ivfPqTrain")
     val qv: Array[Long] = trainRows.find(_._1 == 0L).get._2
     val plan = ivfPqQueryPlan(model, qv, 2)
@@ -1645,11 +1645,11 @@ object LakeQueries extends QueryCatalog {
     // frozen-model encode of a batch of (vec_id, embedding) rows
     def encoded(rows: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = rows
-      .withColumn("cell", coarseCellCol(s, model.seeds))
+      .withColumn("cell", coarseCellCol(model.seeds))
       .withColumn("q", expr(pqQuantExpr))
       .withColumn("r", residualCol(model))
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
-        element_at(vec.pqEncode(s, col("r"), model.cb), 1).as("codes"))
+        element_at(vec.pqEncode(col("r"), model.cb), 1).as("codes"))
     var from: Option[Long] = None
     def maintain(firstWindow: Boolean): Unit = {
       val head = vecs.currentSnapshot.get.snapshotId
@@ -1689,8 +1689,8 @@ object LakeQueries extends QueryCatalog {
         .withColumn("qd", expr(
           "transform(" + pqQuantExpr + ", x -> CAST(x AS DOUBLE))"))
         .withColumn("d2",
-          (vec.dot(s, col("qd"), col("qd"))
-            - lit(2.0) * vec.dot(s, col("qd"), qvd) + lit(qq))
+          (vec.dot(col("qd"), col("qd"))
+            - lit(2.0) * vec.dot(col("qd"), qvd) + lit(qq))
             .cast("long"))
         .orderBy("d2", "vec_id").limit(10)
         .collect().map(r => (r.getLong(0), r.getLong(1),
@@ -1699,7 +1699,7 @@ object LakeQueries extends QueryCatalog {
       .filter(col("vec_id") =!= 0 &&
         col("cell").isin(probes.map(Long.box): _*))
       .select(col("vec_id"), col("cell"),
-        ivfPqAdcCol(s, plan).as("adc"))
+        ivfPqAdcCol(plan).as("adc"))
       .orderBy("adc", "vec_id").limit(50))
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(String, Long, Long, Long, Long)]
@@ -1713,7 +1713,7 @@ object LakeQueries extends QueryCatalog {
             .filter(col("vec_id") =!= 0 &&
               col("cell").isin(probes.map(Long.box): _*))
             .select(col("vec_id"), col("cell"),
-              ivfPqAdcCol(s, plan).as("adc"))
+              ivfPqAdcCol(plan).as("adc"))
             .orderBy("adc", "vec_id").limit(50))
         require(top.sameElements(direct),
           s"index-served IVF-PQ diverged at $phase: " +

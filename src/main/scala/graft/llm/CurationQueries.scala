@@ -2,8 +2,11 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import graft.{Q, QueryCatalog}
+import graft.functions.BloomMightContain
 import graft.rel.Tables
 
 /** SURVEY.md §2l [EXT] corpus-curation operators, round-6 batch: the
@@ -478,7 +481,7 @@ object CurationQueries extends QueryCatalog {
     import graft.functions.vec
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", vec.norm(s, col("v")))
+      .withColumn("nrm", vec.norm(col("v")))
     val cen = Tables.embeddings(s, dir)
       .select(col("label"),
         posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
@@ -488,7 +491,7 @@ object CurationQueries extends QueryCatalog {
       .groupBy(col("label").as("cl"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, m))), " +
         "s -> s.m)").as("cen"))
-      .withColumn("cnrm", vec.norm(s, col("cen")))
+      .withColumn("cnrm", vec.norm(col("cen")))
       // tiny (label-vocabulary rows); materialized so the assignment
       // AND the overflow-split's _cen join both reuse it instead of
       // recomputing the centroid pipeline from the raw table
@@ -502,7 +505,7 @@ object CurationQueries extends QueryCatalog {
     // reuse it instead of recomputing the centroid pipeline each time.
     val cell = e.crossJoin(broadcast(cen))
       .withColumn("cosd",
-        vec.cosine(s, col("v"), col("cen"), col("nrm"), col("cnrm")))
+        vec.cosine(col("v"), col("cen"), col("nrm"), col("cnrm")))
       .groupBy("vec_id")
       .agg(first(col("v")).as("v"), first(col("nrm")).as("nrm"),
         (-max(struct(col("cosd"), (-col("cl")).as("n")))
@@ -521,7 +524,7 @@ object CurationQueries extends QueryCatalog {
       col("sub"), col("v").as("vb"), col("nrm").as("nb"))
     val nb = a.join(b, Seq("cell", "sub"))
       .filter(col("vec_id") =!= col("id_b"))
-      .filter(vec.cosine(s, col("va"), col("vb"), col("na"), col("nb"))
+      .filter(vec.cosine(col("va"), col("vb"), col("na"), col("nb"))
         >= 0.3)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_dups"),
@@ -685,14 +688,10 @@ object CurationQueries extends QueryCatalog {
       bf.writeTo(bos)
       bos.toByteArray
     }
-    // on a session without the graft extensions the native probe is
-    // unavailable; the prune is a pure performance layer (the join
-    // below confirms exactly), so degrade to unpruned rather than
-    // depend on session wiring — same contract as functions.vec.
+    // the prune is a pure performance layer: the join below confirms
+    // exactly, so bloom false positives never reach the result
     val probe =
-      if (s.catalog.functionExists("bloom_might_contain"))
-        call_function("bloom_might_contain", lit(bytes), col("g"))
-      else lit(true)
+      column(BloomMightContain(Literal(bytes), expression(col("g"))))
     grams(docs.filter(col("source") =!= "src4"))
       .filter(probe)
       .select("source", "doc_id", "g").distinct()

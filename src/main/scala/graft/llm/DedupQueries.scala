@@ -1,9 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import graft.{Q, QueryCatalog}
+import graft.functions.{SimHash64, grams}
 import graft.rel.Tables
 
 /** SURVEY.md §2l [EXT] deduplication family on the `documents` table:
@@ -31,54 +33,23 @@ object DedupQueries extends QueryCatalog {
     docs.select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
 
-  /** Distinct (doc_id, shingle) pairs — word-trigram shingles built with
-    * one pass of higher-order functions (no self-join on positions).
-    * Docs with fewer than 3 tokens emit no shingles (the guard keeps
-    * sequence(0, size-3) from going descending into negative indices,
-    * an ANSI runtime error; DuckDB's range() likewise emits nothing).
+  /** Distinct (doc_id, shingle) pairs — word-trigram shingles streamed
+    * out of the native [[graft.functions.NGrams]] generator (one
+    * UTF8String per gram, nothing buffered per document). Docs with
+    * fewer than 3 tokens and NULL docs emit no shingles, as DuckDB's
+    * range() emits nothing for them.
     */
   private[graft] def shingleSets(docs: DataFrame): DataFrame =
-    // r17: route through the native NGrams GENERATOR when the graft
-    // extensions are registered (always true in Bench/Verify) — the
-    // HOF form materializes the full gram array per document before
-    // the explode copies it out again; the generator streams one
-    // UTF8String per gram out of GenerateExec (guide §1.2 per-task
-    // work; NGramsSpec pins bit-equality of the two forms incl.
-    // NULL/short-document edges, so the distinct sees identical rows)
-    (if (docs.sparkSession.catalog.functionExists("ngrams"))
-      docs.select(col("doc_id"),
-        call_function("ngrams", col("text"), lit(3)).as("sh"))
-    else docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(toks) - 3), " +
-          "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("sh")))
+    docs.select(col("doc_id"), grams.words(col("text"), 3).as("sh"))
       .distinct()
 
   /** Exploded word n-grams of `df` (the generalized [[shingleSets]]
-    * shape): the token array is projected ONCE by name and the lambda
-    * indexes it as `__toks[i + j]`, so the split evaluates once per
-    * row. Do NOT rebuild this with a Column-level lambda that closes
-    * over `split(text)` — CollapseProject inlines the split into every
-    * element_at, re-splitting the string per gram element (measured 5×
-    * on q_pipe_decontaminate at sf0.1). Sub-n-token and NULL docs emit
-    * nothing (the filter is also the ANSI guard: sequence() would
-    * count DOWN for short docs). */
+    * shape) from the native [[graft.functions.NGrams]] generator, one
+    * `as` row per gram next to the `keep` columns. Sub-n-token and
+    * NULL docs emit nothing. */
   private[graft] def wordGrams(df: DataFrame, n: Int,
-      keep: Seq[String], as: String = "g"): DataFrame = {
-    // r17: native NGrams generator when registered (see shingleSets —
-    // same bit-equality contract, same fallback)
-    if (df.sparkSession.catalog.functionExists("ngrams"))
-      return df.select(keep.map(col) :+
-        call_function("ngrams", col("text"), lit(n)).as(as): _*)
-    val parts = (0 until n).map(j => s"__toks[i + $j]").mkString(", ")
-    df.select(keep.map(col) :+ split(col("text"), " ").as("__toks"): _*)
-      .filter(size(col("__toks")) >= n)
-      .select(keep.map(col) :+ explode(expr(
-        s"transform(sequence(0, size(__toks) - $n), " +
-          s"i -> concat_ws(' ', $parts))")).as(as): _*)
-  }
+      keep: Seq[String], as: String = "g"): DataFrame =
+    df.select(keep.map(col) :+ grams.words(col("text"), n).as(as): _*)
 
   /** [[shingleSets]] materialized ONCE per invocation with an eager
     * localCheckpoint (the q_dedup_semantic idiom). Every consumer in the
@@ -469,37 +440,15 @@ object DedupQueries extends QueryCatalog {
     * (+1/-1) contributions of each token's hash bit i. Hamming-near
     * fingerprints ~ similar token sets. Runs through the native
     * one-pass simhash64 kernel ([[graft.functions.SimHash64]]) — zero
-    * shuffles, no 64x bit-row inflation; on a session without
-    * GraftExtensions it falls back to the equivalent relational
-    * pipeline (explode doc x token x bit -> two partial-aggregated
-    * groupBys -> bit_or). LlmSpec asserts both paths are bit-identical.
-    * No oracle (xxhash64 has no DuckDB twin).
+    * shuffles, no 64x bit-row inflation. LlmSpec pins it bit-identical
+    * to the relational formulation (explode doc x token x bit -> two
+    * partial-aggregated groupBys -> bit_or). No oracle (xxhash64 has
+    * no DuckDB twin).
     */
   private val simhash = Q.noOracle("q_dedup_simhash") { (s, dir) =>
-    if (s.catalog.functionExists("simhash64"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          expr("simhash64(array_distinct(split(text, ' ')))").as("simhash"))
-        .orderBy("doc_id")
-    else simhashRelational(s, dir)
-  }
-
-  /** The kernel-free SimHash formulation (also the LlmSpec cross-check
-    * for [[graft.functions.SimHash64]]). */
-  private[llm] def simhashRelational(s: SparkSession, dir: String): DataFrame = {
-    val toks = tokenSets(Tables.documents(s, dir))
-      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    val contrib = toks
-      .select(col("doc_id"), col("h"), explode(expr("sequence(0, 63)")).as("i"))
-      .select(col("doc_id"), col("i"),
-        expr("CASE WHEN (shiftright(h, cast(i AS int)) & 1) = 1 " +
-          "THEN 1 ELSE -1 END").as("sgn"))
-    contrib
-      .groupBy("doc_id", "i").agg(sum(col("sgn")).as("s"))
-      .select(col("doc_id"), expr(
-        "CASE WHEN s > 0 THEN shiftleft(CAST(1 AS BIGINT), CAST(i AS int)) " +
-          "ELSE CAST(0 AS BIGINT) END").as("bit"))
-      .groupBy("doc_id").agg(expr("bit_or(bit)").as("simhash"))
+    Tables.documents(s, dir)
+      .select(col("doc_id"), column(SimHash64(expression(
+        array_distinct(split(col("text"), " "))))).as("simhash"))
       .orderBy("doc_id")
   }
 
@@ -642,14 +591,14 @@ object DedupQueries extends QueryCatalog {
     import graft.functions.vec
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      .withColumn("nrm", vec.norm(s, col("v")))
+      .withColumn("nrm", vec.norm(col("v")))
     val a = e.select(col("vec_id").as("id_a"), col("label"),
       col("v").as("va"), col("nrm").as("na"))
     val b = e.select(col("vec_id").as("id_b"), col("label"),
       col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, Seq("label")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("label"),
-        vec.cosine(s, col("va"), col("vb"), col("na"), col("nb")).as("cosd"))
+        vec.cosine(col("va"), col("vb"), col("na"), col("nb")).as("cosd"))
       .orderBy(desc("cosd"), col("id_a"), col("id_b"))
       .limit(100)
       .select(col("id_a"), col("id_b"), col("label"),

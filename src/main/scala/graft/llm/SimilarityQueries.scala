@@ -27,10 +27,10 @@ object SimilarityQueries extends QueryCatalog {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      .withColumn("nrm", graft.functions.vec.norm(s, col("v")))
+      .withColumn("nrm", graft.functions.vec.norm(col("v")))
 
-  private def cosCol(s: SparkSession) =
-    graft.functions.vec.cosine(s, col("v"), col("qv"), col("nrm"), col("qn"))
+  private def cosCol =
+    graft.functions.vec.cosine(col("v"), col("qv"), col("nrm"), col("qn"))
 
   /** Brute-force cosine top-10 for query = vector of vec_id 0. The
     * single-row query side is broadcast; LIMIT orders on the unrounded
@@ -57,7 +57,7 @@ object SimilarityQueries extends QueryCatalog {
       .select(col("v").as("qv"), col("nrm").as("qn"))
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"), cosCol(s).as("cosd"))
+      .select(col("vec_id"), col("label"), cosCol.as("cosd"))
       .orderBy(desc("cosd"), col("vec_id"))
       .limit(10)
       .select(col("vec_id"), col("label"), round(col("cosd"), 4).as("cos_sim"))
@@ -77,13 +77,13 @@ object SimilarityQueries extends QueryCatalog {
     // float-widening vec_dot kernel (centroids are approximate anyway)
     val cents = centroids(e)
       .withColumn("cv", expr("transform(cv, x -> CAST(x AS FLOAT))"))
-      .withColumn("cnrm", vec.norm(s, col("cv")))
+      .withColumn("cnrm", vec.norm(col("cv")))
     // map-side cell assignment: nearest centroid by cosine
     val byCos = Window.partitionBy("vec_id")
       .orderBy(desc("ccos"), col("cell"))
     val assigned = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("cell"),
-        vec.cosine(s, col("v"), col("cv"), col("nrm"), col("cnrm")).as("ccos"))
+        vec.cosine(col("v"), col("cv"), col("nrm"), col("cnrm")).as("ccos"))
       .withColumn("rk", row_number().over(byCos))
       .filter(col("rk") === 1)
       .drop("rk", "ccos")
@@ -91,13 +91,13 @@ object SimilarityQueries extends QueryCatalog {
       .select(col("v").as("qv"), col("nrm").as("qn"))
       .crossJoin(broadcast(cents))
       .select(col("cell"), col("qv"), col("qn"),
-        vec.cosine(s, col("qv"), col("cv"), col("qn"), col("cnrm")).as("qcos"))
+        vec.cosine(col("qv"), col("cv"), col("qn"), col("cnrm")).as("qcos"))
       .orderBy(desc("qcos"), col("cell"))
       .limit(3)
       .select(col("cell"), col("qv"), col("qn"))
     assigned.filter(col("vec_id") =!= 0)
       .join(broadcast(probed), Seq("cell"))
-      .select(col("vec_id"), col("cell"), cosCol(s).as("cosd"))
+      .select(col("vec_id"), col("cell"), cosCol.as("cosd"))
       .orderBy(desc("cosd"), col("vec_id"))
       .limit(10)
       .select(col("vec_id"), col("cell"), round(col("cosd"), 4).as("cos_sim"))
@@ -132,13 +132,13 @@ object SimilarityQueries extends QueryCatalog {
     val e = emb(s, dir)
     val cents = centroids(e)
       .withColumn("cv", expr("transform(cv, x -> CAST(x AS FLOAT))"))
-      .withColumn("cnrm", vec.norm(s, col("cv")))
+      .withColumn("cnrm", vec.norm(col("cv")))
     val byCos = Window.partitionBy("vec_id")
       .orderBy(desc("ccos"), col("cell"))
     val assigned = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"),
         col("cell"),
-        vec.cosine(s, col("v"), col("cv"), col("nrm"), col("cnrm"))
+        vec.cosine(col("v"), col("cv"), col("nrm"), col("cnrm"))
           .as("ccos"))
       .withColumn("rk", row_number().over(byCos))
       .filter(col("rk") === 1)
@@ -150,7 +150,7 @@ object SimilarityQueries extends QueryCatalog {
       .select(col("cell"), col("qv"), col("qn"))
     assigned.filter(col("vec_id") =!= 0)
       .join(broadcast(probed), Seq("cell"))
-      .select(col("vec_id"), col("label"), cosCol(s).as("cosd"))
+      .select(col("vec_id"), col("label"), cosCol.as("cosd"))
       .orderBy(desc("cosd"), col("vec_id"))
       .limit(10)
       .select(col("vec_id"), col("label"),
@@ -179,7 +179,7 @@ object SimilarityQueries extends QueryCatalog {
     import graft.functions.vec
     val e = emb(s, dir)
     val bucketCol = hyperplanes.zipWithIndex.map { case (h, j) =>
-      when(vec.dot(s, col("v"), typedlit(h)) > 0, lit(1L << j))
+      when(vec.dot(col("v"), typedlit(h)) > 0, lit(1L << j))
         .otherwise(lit(0L))
     }.reduce(_ + _)
     val bucketed = e.withColumn("bucket", bucketCol)
@@ -187,7 +187,7 @@ object SimilarityQueries extends QueryCatalog {
       .select(col("bucket"), col("v").as("qv"), col("nrm").as("qn"))
     bucketed.filter(col("vec_id") =!= 0)
       .join(broadcast(q), Seq("bucket"))
-      .select(col("vec_id"), col("bucket"), cosCol(s).as("cosd"))
+      .select(col("vec_id"), col("bucket"), cosCol.as("cosd"))
       .orderBy(desc("cosd"), col("vec_id"))
       .limit(10)
       .select(col("vec_id"), col("bucket"), round(col("cosd"), 4).as("cos_sim"))
@@ -277,7 +277,7 @@ object SimilarityQueries extends QueryCatalog {
     val maxExact = s.conf.get("spark.graft.knn.exactMaxRows", "100000").toLong
     // column-less parquet count: row-group row counts, no column IO
     val n = Tables.embeddings(s, dir).count()
-    if (n <= maxExact) knnJoinExact(s, e) else knnJoinIvf(s, e)
+    if (n <= maxExact) knnJoinExact(s, e) else knnJoinIvf(e)
   }
 
   /** Exact all-pairs k-NN join — the small-n oracle twin. The left
@@ -298,7 +298,7 @@ object SimilarityQueries extends QueryCatalog {
     e.repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .join(broadcast(right), col("vec_id") =!= col("nn_id"))
       .select(col("vec_id"), col("nn_id"),
-        vec.cosine(s, col("v"), col("w"), col("nrm"), col("wn")).as("cosd"))
+        vec.cosine(col("v"), col("w"), col("nrm"), col("wn")).as("cosd"))
       .transform(rankTop3)
   }
 
@@ -315,8 +315,8 @@ object SimilarityQueries extends QueryCatalog {
     * one home cell. Exact cosine re-ranking inside the candidate set
     * reuses the same kernel as the exact path.
     */
-  private[graft] def knnJoinIvf(s: SparkSession, e: DataFrame,
-      nprobe: Int = 3): DataFrame = {
+  private[graft] def knnJoinIvf(e: DataFrame, nprobe: Int = 3)
+      : DataFrame = {
     import graft.functions.vec
     val cents: Seq[(Long, Seq[Double], Double)] = centroids(e)
       .select(col("cell").cast("long"), col("cv").cast("array<double>"))
@@ -328,10 +328,10 @@ object SimilarityQueries extends QueryCatalog {
     val centLit = typedlit(cents)
     // per-row (ccos, cell) structs, sorted descending by cosine —
     // array_sort orders struct fields lexicographically, so ccos first
-    val scoresCol = expr(s"""
-      reverse(array_sort(transform(__cents, c -> struct(
-        vec_dot(v, c._2) / (nrm * c._3) AS ccos,
-        c._1 AS cell))))""")
+    val scoresCol = reverse(array_sort(transform(col("__cents"), c =>
+      struct(
+        (vec.dot(col("v"), c("_2")) / (col("nrm") * c("_3"))).as("ccos"),
+        c("_1").as("cell")))))
     val assigned = e
       .withColumn("__cents", centLit)
       .withColumn("__scores", scoresCol)
@@ -347,7 +347,7 @@ object SimilarityQueries extends QueryCatalog {
       .join(right, Seq("cell"))
       .filter(col("vec_id") =!= col("nn_id"))
       .select(col("vec_id"), col("nn_id"),
-        vec.cosine(s, col("v"), col("w"), col("nrm"), col("wn")).as("cosd"))
+        vec.cosine(col("v"), col("w"), col("nrm"), col("wn")).as("cosd"))
       .transform(rankTop3)
   }
 
@@ -396,8 +396,8 @@ object SimilarityQueries extends QueryCatalog {
   ) { (s, dir) =>
     val codes = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
-        graft.functions.vec.signpack(s, col("embedding"), 0).as("c_lo"),
-        graft.functions.vec.signpack(s, col("embedding"), 32).as("c_hi"))
+        graft.functions.vec.signpack(col("embedding"), 0).as("c_lo"),
+        graft.functions.vec.signpack(col("embedding"), 32).as("c_hi"))
     val q = codes.filter(col("vec_id") === 0)
       .select(col("c_lo").as("q_lo"), col("c_hi").as("q_hi"))
     codes.filter(col("vec_id") =!= 0)
@@ -453,11 +453,11 @@ object SimilarityQueries extends QueryCatalog {
       .groupBy("label")
       .agg(expr("transform(array_sort(collect_list(struct(dim, m))), " +
         "s -> s.m)").as("cen"))
-      .withColumn("cn", vec.norm(s, col("cen")))
+      .withColumn("cn", vec.norm(col("cen")))
     val e = emb(s, dir)
     e.join(broadcast(cen), "label")
       .select(col("vec_id"), col("label"),
-        vec.cosine(s, col("v"), col("cen"), col("nrm"), col("cn"))
+        vec.cosine(col("v"), col("cen"), col("nrm"), col("cn"))
           .as("cosd"))
       .orderBy("cosd", "vec_id")
       .limit(20)
@@ -503,8 +503,8 @@ object SimilarityQueries extends QueryCatalog {
     * vec_dot per cell against an array literal, argmin via array_min
     * over (dist, cid) structs. Shared by q_sim_topk_ivfpq and the lake
     * vector index (q_lake_vector_index). */
-  private[graft] def coarseCellCol(s: SparkSession,
-      seeds: Array[(Long, Array[Long])]): org.apache.spark.sql.Column = {
+  private[graft] def coarseCellCol(seeds: Array[(Long, Array[Long])])
+      : org.apache.spark.sql.Column = {
     import graft.functions.vec
     val qd = expr("transform(embedding, x -> round(CAST(x AS DOUBLE)" +
       " * 1000))")
@@ -512,7 +512,7 @@ object SimilarityQueries extends QueryCatalog {
       val cv: Seq[Double] = c.map(_.toDouble).toSeq
       val cc = c.map(x => x.toDouble * x).sum
       struct(
-        (lit(cc) - lit(2.0) * vec.dot(s, qd, typedlit(cv))).as("dist"),
+        (lit(cc) - lit(2.0) * vec.dot(qd, typedlit(cv))).as("dist"),
         lit(cid).as("cid"))
     }
     array_min(array(centStructs: _*)).getField("cid")
@@ -581,14 +581,14 @@ object SimilarityQueries extends QueryCatalog {
       |GROUP BY vec_id ORDER BY vec_id""".stripMargin
   ) { (s, dir) =>
     // Encoding runs in the native pq_encode kernel (one primitive
-    // 8x16xD loop per row inside WholeStageCodegen); the HOF twin is
-    // the registered fallback and VecSpec pins bit-equality. The
-    // interpreted HOF formulation measured ~40 ms/row (CollapseProject
-    // re-inlines the nested lambdas into every consumer).
+    // 8x16xD loop per row inside WholeStageCodegen); VecSpec pins
+    // bit-equality with the HOF reference form, which measured
+    // ~40 ms/row (CollapseProject re-inlines the nested lambdas into
+    // every consumer).
     Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(pqQuantExpr).as("q"))
       .withColumn("enc",
-        graft.functions.vec.pqEncode(s, col("q"), pqCodebook))
+        graft.functions.vec.pqEncode(col("q"), pqCodebook))
       .select(col("vec_id"),
         concat_ws("-", expr("transform(sequence(0, 7), m -> " +
           "CAST(shiftrightunsigned(element_at(enc, 1), m * 4) & 15" +
@@ -633,14 +633,14 @@ object SimilarityQueries extends QueryCatalog {
     // per query anyway.
     val codes = base.filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
-        element_at(graft.functions.vec.pqEncode(s, col("q"), pqCodebook),
+        element_at(graft.functions.vec.pqEncode(col("q"), pqCodebook),
           1).as("codes"))
     val lut = base.filter(col("vec_id") === 0)
       .withColumn("dists", expr(pqDistsExpr))
       .select(expr("flatten(dists)").as("lut"))
     codes.crossJoin(broadcast(lut))
       .select(col("vec_id"),
-        graft.functions.vec.pqAdc(s, col("codes"), col("lut")).as("adc"))
+        graft.functions.vec.pqAdc(col("codes"), col("lut")).as("adc"))
       .orderBy("adc", "vec_id")
       .limit(10)
   }
@@ -717,11 +717,10 @@ object SimilarityQueries extends QueryCatalog {
     val (probes, lut) = ivfpqProbesAndLut(seeds, qv, NProbe)
     Tables.embeddings(s, dir)
       .filter(col("vec_id") =!= 0)
-      .withColumn("cell", coarseCellCol(s, seeds))
+      .withColumn("cell", coarseCellCol(seeds))
       .filter(col("cell").isin(probes.map(Long.box): _*))
       .select(col("vec_id"), col("cell"),
-        vec.pqAdc(s,
-          element_at(vec.pqEncode(s, expr(pqQuantExpr), pqCodebook), 1),
+        vec.pqAdc(element_at(vec.pqEncode(expr(pqQuantExpr), pqCodebook), 1),
           typedlit(lut.toSeq)).as("adc"))
       .orderBy("adc", "vec_id")
       .limit(10)
@@ -838,9 +837,9 @@ object SimilarityQueries extends QueryCatalog {
 
   private[graft] def kmeansFitOn(s: SparkSession, embDf: DataFrame)
       : (Array[Array[Long]], DataFrame) =
-    kmeansFitOnBase(s, kmeansShiftedBase(embDf))
+    kmeansFitOnBase(kmeansShiftedBase(embDf))
 
-  private[graft] def kmeansFitOnBase(s: SparkSession, base: DataFrame)
+  private[graft] def kmeansFitOnBase(base: DataFrame)
       : (Array[Array[Long]], DataFrame) = {
     import graft.functions.vec
     val Dim = 64
@@ -858,7 +857,7 @@ object SimilarityQueries extends QueryCatalog {
         val cv: Seq[Double] = c.map(_.toDouble).toSeq
         val cc = c.map(x => x.toDouble * x).sum
         struct(
-          (lit(cc) - lit(2.0) * vec.dot(s, col("qd"), typedlit(cv)))
+          (lit(cc) - lit(2.0) * vec.dot(col("qd"), typedlit(cv)))
             .as("dist"),
           lit(cid.toLong).as("cid"))
       }
@@ -984,7 +983,7 @@ object SimilarityQueries extends QueryCatalog {
     e.filter(col("vec_id") % 10 =!= 0)
       .crossJoin(broadcast(ev))
       .select(col("vec_id"), col("eval_id"),
-        graft.functions.vec.cosine(s, col("v"), col("w"),
+        graft.functions.vec.cosine(col("v"), col("w"),
           col("nrm"), col("wn")).as("cosd"))
       .groupBy("vec_id")
       .agg(max(struct(col("cosd"), col("eval_id"))).as("m"))
@@ -1075,7 +1074,7 @@ object SimilarityQueries extends QueryCatalog {
     // per-(m, k) floor-mean of the assigned subvectors
     val asn = base
       .select(col("q"),
-        element_at(vec.pqEncode(s, col("q"), pqCodebook), 1).as("codes"))
+        element_at(vec.pqEncode(col("q"), pqCodebook), 1).as("codes"))
       .select(col("q"), explode(expr(
         "transform(sequence(0, 7), m -> struct(m AS m, " +
           "CAST(shiftrightunsigned(codes, m * 4) & 15 AS INT) AS k))"))
@@ -1109,8 +1108,7 @@ object SimilarityQueries extends QueryCatalog {
     }
     base.filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
-        vec.pqAdc(s,
-          element_at(vec.pqEncode(s, col("q"), cb2), 1),
+        vec.pqAdc(element_at(vec.pqEncode(col("q"), cb2), 1),
           typedlit(lut2.toSeq)).as("adc"))
       .orderBy("adc", "vec_id")
       .limit(10)
@@ -1144,12 +1142,12 @@ object SimilarityQueries extends QueryCatalog {
     * (Long./ ≡ DuckDB `//`, the q_sim_pq_trained precedent), empty
     * codewords keep their previous value. One corpus pass + a 128-row
     * collect. */
-  private def lloydPqStep(s: SparkSession, rbase: DataFrame,
+  private def lloydPqStep(rbase: DataFrame,
       cb: Array[Long]): Array[Long] = {
     import graft.functions.vec
     val asn = rbase
       .select(col("r"),
-        element_at(vec.pqEncode(s, col("r"), cb), 1).as("codes"))
+        element_at(vec.pqEncode(col("r"), cb), 1).as("codes"))
       .select(col("r"), explode(expr(
         "transform(sequence(0, 7), m -> struct(m AS m, " +
           "CAST(shiftrightunsigned(codes, m * 4) & 15 AS INT) AS k))"))
@@ -1189,14 +1187,14 @@ object SimilarityQueries extends QueryCatalog {
     // under the common +5000 shift, and every intermediate stays an
     // exact integer in doubles, so ties break identically).
     val base = kmeansShiftedBase(embDf)
-    val centsShifted = kmeansFitOnBase(s, base)._1
+    val centsShifted = kmeansFitOnBase(base)._1
     val cents = centsShifted.map(_.map(_ - 5000L))
     val cellCol = {
       val centStructs = centsShifted.zipWithIndex.map { case (c, cid) =>
         val cv: Seq[Double] = c.map(_.toDouble).toSeq
         val cc = c.map(x => x.toDouble * x).sum
         struct(
-          (lit(cc) - lit(2.0) * vec.dot(s, col("qd"), typedlit(cv)))
+          (lit(cc) - lit(2.0) * vec.dot(col("qd"), typedlit(cv)))
             .as("dist"),
           lit(cid.toLong).as("cid"))
       }
@@ -1209,8 +1207,8 @@ object SimilarityQueries extends QueryCatalog {
         expr("transform(q, x -> x - 5000)").as("q"), col("cell"))
       .withColumn("r", residualCol(m0))
       .localCheckpoint()
-    val cb1 = lloydPqStep(s, rbase, pqCodebook)
-    val cb2 = lloydPqStep(s, rbase, cb1)
+    val cb1 = lloydPqStep(rbase, pqCodebook)
+    val cb2 = lloydPqStep(rbase, cb1)
     (IvfPqModel(cents, cb2), rbase)
   }
 
@@ -1232,7 +1230,7 @@ object SimilarityQueries extends QueryCatalog {
     * callers read query vectors without another job. The DISTRIBUTED
     * trainer stays the oracled q_sim_topk_ivfpq_trained path for
     * corpora too large to sample driver-side. */
-  private[graft] def ivfPqTrainLocal(s: SparkSession, embDf: DataFrame)
+  private[graft] def ivfPqTrainLocal(embDf: DataFrame)
       : (IvfPqModel, Array[(Long, Array[Long])]) = {
     val rows: Array[(Long, Array[Long])] = embDf
       .select(col("vec_id"), expr(pqQuantExpr).as("q"))
@@ -1349,15 +1347,15 @@ object SimilarityQueries extends QueryCatalog {
   /** ADC column for a trained plan: each probed row scores through the
     * LUT of its OWN home cell (bounded when-chain — nprobe is a plan
     * constant, so this stays inside whole-stage codegen). */
-  private[graft] def ivfPqAdcCol(s: SparkSession,
-      plan: Array[(Long, Array[Long])]): org.apache.spark.sql.Column = {
+  private[graft] def ivfPqAdcCol(plan: Array[(Long, Array[Long])])
+      : org.apache.spark.sql.Column = {
     import graft.functions.vec
     plan.tail.foldLeft(
       when(col("cell") === plan.head._1,
-        vec.pqAdc(s, col("codes"), typedlit(plan.head._2.toSeq)))) {
+        vec.pqAdc(col("codes"), typedlit(plan.head._2.toSeq)))) {
       case (acc, (cid, lut)) =>
         acc.when(col("cell") === cid,
-          vec.pqAdc(s, col("codes"), typedlit(lut.toSeq)))
+          vec.pqAdc(col("codes"), typedlit(lut.toSeq)))
     }
   }
 
@@ -1491,16 +1489,16 @@ object SimilarityQueries extends QueryCatalog {
     rbase.filter(col("vec_id") =!= 0)
       .filter(col("cell").isin(plan.map(p => Long.box(p._1)): _*))
       .withColumn("codes",
-        element_at(vec.pqEncode(s, col("r"), model.cb), 1))
-      .withColumn("adc", ivfPqAdcCol(s, plan))
+        element_at(vec.pqEncode(col("r"), model.cb), 1))
+      .withColumn("adc", ivfPqAdcCol(plan))
       .orderBy("adc", "vec_id")
       .limit(200)
       // refine: exact squared grid distance on the 200-row shortlist
       // (|q|² − 2 q·qv + |qv|² — exact integer arithmetic in double)
       .withColumn("qd", expr("transform(q, x -> CAST(x AS DOUBLE))"))
       .withColumn("d2",
-        (vec.dot(s, col("qd"), col("qd"))
-          - lit(2.0) * vec.dot(s, col("qd"), qvLit) + lit(qq))
+        (vec.dot(col("qd"), col("qd"))
+          - lit(2.0) * vec.dot(col("qd"), qvLit) + lit(qq))
           .cast("long"))
       .orderBy("d2", "vec_id")
       .limit(10)
@@ -1592,7 +1590,7 @@ object SimilarityQueries extends QueryCatalog {
     val projected = base.select(
       col("vec_id") +: col("q") +: jlSigns.zipWithIndex.map {
         case (row, j) =>
-          vec.dot(s, col("qd"),
+          vec.dot(col("qd"),
             typedlit(row.map(_.toDouble).toSeq))
             .cast("long").as(s"p$j")
       }: _*)
@@ -1683,7 +1681,7 @@ object SimilarityQueries extends QueryCatalog {
     val qp: Array[Long] = signs.map(row =>
       row.indices.map(d => row(d) * qv(d)).sum)
     val d16 = signs.indices.map { j =>
-      val pj = vec.dot(s, col("qd"),
+      val pj = vec.dot(col("qd"),
         typedlit(signs(j).map(_.toDouble).toSeq)).cast("long")
       (pj - lit(qp(j))) * (pj - lit(qp(j)))
     }.reduce(_ + _)
@@ -1694,8 +1692,8 @@ object SimilarityQueries extends QueryCatalog {
       .orderBy("d16_sq", "vec_id")
       .limit(200)
       .withColumn("d64_sq",
-        (vec.dot(s, col("qd"), col("qd"))
-          - lit(2.0) * vec.dot(s, col("qd"), qvLit) + lit(qq))
+        (vec.dot(col("qd"), col("qd"))
+          - lit(2.0) * vec.dot(col("qd"), qvLit) + lit(qq))
           .cast("long"))
       .orderBy("d64_sq", "vec_id")
       .limit(10)
@@ -1863,7 +1861,7 @@ object SimilarityQueries extends QueryCatalog {
     // match the oracle's rank-then-filter formulation
     val vtop = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(col("vec_id").as("doc_id"), cosCol(s).as("cosd"))
+      .select(col("vec_id").as("doc_id"), cosCol.as("cosd"))
       .orderBy(desc("cosd"), col("doc_id")).limit(100)
     val vleg = vtop.withColumn("vrank",
       row_number().over(Window.orderBy(desc("cosd"), col("doc_id")))
@@ -2069,7 +2067,7 @@ object SimilarityQueries extends QueryCatalog {
     val p = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("qlab"), col("vec_id"), col("label"),
-        cosCol(s).as("cosd"))
+        cosCol.as("cosd"))
     val w = Window.partitionBy(col("qid"), col("label") === col("qlab"))
       .orderBy(desc("cosd"), col("vec_id"))
     p.select(col("qid"), col("vec_id"),
@@ -2336,7 +2334,7 @@ object SimilarityQueries extends QueryCatalog {
         col("nrm").as("qn"))
     def p = e.filter(col("vec_id") % 2 === 1)
       .crossJoin(broadcast(a))
-      .select(col("a_id"), col("vec_id").as("b_id"), cosCol(s).as("cosd"))
+      .select(col("a_id"), col("vec_id").as("b_id"), cosCol.as("cosd"))
     val wf = Window.partitionBy("a_id").orderBy(desc("cosd"), col("b_id"))
     val wb = Window.partitionBy("b_id").orderBy(desc("cosd"), col("a_id"))
     // each rank filter sits DIRECTLY on its own window, so Spark's

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, QueryCatalog}
+import graft.functions.grams
 import graft.rel.Tables
 
 /** SURVEY.md §2l [EXT] text analysis over `documents`: corpus stats,
@@ -112,26 +113,14 @@ object TextQueries extends QueryCatalog {
     * profile is tiny and broadcast; the corpus never shuffles for
     * scoring — only the per-(doc, lang) counts do.
     */
-  /** Exploded character bigrams of `df` (r18): the native CharGrams
-    * GENERATOR when the graft extensions are registered (always, in
-    * Bench/Verify) — one byte-walk per document, one UTF8String per
-    * gram, whole-stage-codegen'd GenerateExec — with the HOF explode
-    * kept as the fallback (the shingleSets idiom). The fallback's
-    * `length >= 2` guard lives here too: Spark's sequence(1, 0) is
-    * DESCENDING ([1, 0]) and would emit spurious grams for empty/
-    * 1-char docs; the generator emits nothing for them by
-    * construction. CharGramsSpec pins bit-equality of the two forms
-    * (incl. NULL/short/multibyte documents). */
+  /** Exploded character bigrams of `textCol` from the native
+    * [[graft.functions.CharGrams]] generator — one byte-walk per
+    * document, one UTF8String per gram, whole-stage-codegen'd
+    * GenerateExec. Empty, 1-char and NULL documents emit nothing. */
   private[llm] def charBigrams(df: org.apache.spark.sql.DataFrame,
       textCol: String, keep: Seq[String], as: String)
       : org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.catalog.functionExists("chargrams"))
-      df.select(keep.map(col) :+
-        call_function("chargrams", col(textCol), lit(2)).as(as): _*)
-    else df.filter(length(col(textCol)) >= 2)
-      .select(keep.map(col) :+ explode(expr(
-        s"transform(sequence(1, length($textCol) - 1), " +
-          s"i -> substring($textCol, i, 2))")).as(as): _*)
+    df.select(keep.map(col) :+ grams.chars(col(textCol), 2).as(as): _*)
 
   private def profileArgmax(
       docs: org.apache.spark.sql.DataFrame,
@@ -253,8 +242,7 @@ object TextQueries extends QueryCatalog {
       |FROM ranked WHERE rk = 1 ORDER BY doc_id""".stripMargin
   ) { (s, dir) =>
     val docs = Tables.documents(s, dir)
-    // r18: native CharGrams generator (HOF fallback + its length >= 2
-    // guard live in charBigrams)
+    // native CharGrams generator (see charBigrams)
     profileArgmax(docs,
       charBigrams(docs, "text", Seq("doc_id", "lang"), "item"),
       topK = 20)
@@ -313,9 +301,8 @@ object TextQueries extends QueryCatalog {
     // the prefix is projected ONCE by name before the gram explode
     // (the wordGrams idiom) — inlining the substring into a lambda
     // would re-slice the document per gram element under
-    // CollapseProject (measured ~2.3x at sf0.1). r18: native
-    // CharGrams generator (HOF fallback + length >= 2 guard in
-    // charBigrams)
+    // CollapseProject (measured ~2.3x at sf0.1). Native CharGrams
+    // generator (see charBigrams)
     profileArgmax(docs,
       charBigrams(
         docs.select(col("doc_id"), col("lang"),
@@ -607,7 +594,7 @@ object TextQueries extends QueryCatalog {
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-    // r18: native CharGrams generator (HOF fallback in charBigrams)
+    // native CharGrams generator (see charBigrams)
     charBigrams(words, "w", Seq("freq"), "pair")
       .groupBy("pair").agg(sum("freq").cast("long").as("merge_count"))
       .orderBy(desc("merge_count"), col("pair"))

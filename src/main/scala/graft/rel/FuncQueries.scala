@@ -175,10 +175,9 @@ object FuncQueries extends QueryCatalog {
   /** F20 [EXT]: custom native GENERATOR — word 3-grams emitted as rows
     * straight from [[graft.functions.NGrams]] inside GenerateExec,
     * instead of materializing the gram array per document and
-    * exploding it (the HOF form buffers every gram twice). Falls back
-    * to the HOF form on a session without the graft extensions — same
-    * contract as the scalar kernels; NGramsSpec pins bit-equality of
-    * the two forms plus null/short-document edges. */
+    * exploding it (the HOF form buffers every gram twice). NGramsSpec
+    * pins bit-equality with the HOF reference form plus
+    * null/short-document edges. */
   private val ngramsNative = Q(
     "q_func_ngrams_native",
     """SELECT g.gram, count(*) AS freq
@@ -191,39 +190,12 @@ object FuncQueries extends QueryCatalog {
       |GROUP BY g.gram
       |ORDER BY freq DESC, g.gram LIMIT 10""".stripMargin
   ) { (s, dir) =>
-    val grams =
-      if (s.catalog.functionExists("ngrams"))
-        call_function("ngrams", col("text"), lit(3))
-      else ngramsHof(col("text"), 3)
     Tables.documents(s, dir)
-      .select(grams.as("gram"))
+      .select(graft.functions.grams.words(col("text"), 3).as("gram"))
       .groupBy("gram")
       .agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("gram"))
       .limit(10)
-  }
-
-  /** HOF twin of the native ngrams generator (explode of the
-    * materialized gram array) — the fallback and the spec's
-    * bit-equality reference. NULL and sub-n-token inputs emit no rows,
-    * exactly like the generator (size(NULL) = -1 takes the empty
-    * branch; sequence() would otherwise count DOWN for short docs).
-    *
-    * PERF WARNING: this Column-level lambda closes over `split(text)`,
-    * and CollapseProject inlines that split into EVERY element_at —
-    * the string re-splits per gram element (measured 5× on
-    * q_pipe_decontaminate at sf0.1 before it moved to
-    * DedupQueries.wordGrams). Fine as the generator's correctness
-    * fallback; for hot paths use wordGrams (token array projected once
-    * by name) or the native generator. */
-  private[graft] def ngramsHof(text: org.apache.spark.sql.Column,
-      n: Int): org.apache.spark.sql.Column = {
-    val toks = split(text, " ")
-    val arr = when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - n), i =>
-        concat_ws(" ",
-          (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
-    explode(arr)
   }
 
   /** F15 [EXT]: string ops + explode generator — token frequencies. */

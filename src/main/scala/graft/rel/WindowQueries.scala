@@ -448,18 +448,29 @@ object WindowQueries extends QueryCatalog {
         expr("cast(floor(value * 10000 + 0.5) as bigint)"))
       .withColumn("rn", row_number().over(w))
       .withColumn("winr", collect_list(col("vi")).over(wf))
-      .filter(col("rn") >= 10 && expr(
-        "transform(array(sort_array(winr)), s -> " +
-          "abs(vi - s[4]) > " +
-          "3 * sort_array(transform(s, x -> abs(x - s[4])))[4])[0]"))
+      .filter(col("rn") >= 10 && expr(madIsAnomaly))
       .select(col("user_id"), col("event_id"), col("vi"),
-        expr("sort_array(winr)[4]").as("med"), // Spark [] is 0-based
-        expr("transform(array(sort_array(winr)), s -> " +
-          "sort_array(transform(s, x -> abs(x - s[4])))[4])[0]")
-          .as("mad"),
+        expr("try_element_at(sort_array(winr), 5)").as("med"),
+        expr(madOfWindow).as("mad"),
         lit(1).as("anomaly"))
       .orderBy("user_id", "event_id")
   }
+
+  /** q_window_mad's MAD of the sorted window `s`. Every lower-median
+    * read is `try_element_at(…, 5)` (1-based), which yields NULL on a
+    * window shorter than 5 — collect_list drops NULL values, so a row
+    * with rn ≥ 10 can still carry one — instead of the ANSI
+    * out-of-bounds error `s[4]` would raise. The expressions are total
+    * whatever order the optimizer evaluates the filter's conjuncts in,
+    * like DuckDB's `win[5]`, which is NULL past the end. */
+  private val madOf =
+    "try_element_at(sort_array(transform(s, x -> " +
+      "abs(x - try_element_at(s, 5)))), 5)"
+  private[rel] val madIsAnomaly =
+    "transform(array(sort_array(winr)), s -> " +
+      s"abs(vi - try_element_at(s, 5)) > 3 * $madOf)[0]"
+  private[rel] val madOfWindow =
+    s"transform(array(sort_array(winr)), s -> $madOf)[0]"
 
   override def all: Seq[Q] = Seq(
     ranks, lagLead, runningSum, slidingAvg, topKPerGroup, firstLast,

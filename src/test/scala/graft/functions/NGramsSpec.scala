@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** The native [[NGrams]] generator against its HOF fallback twin
-  * (FuncQueries.ngramsHof): bit-equal gram streams on the real corpus,
+/** The native [[NGrams]] generator against its HOF reference twin
+  * ([[NGramsSpec.ngramsHof]]): bit-equal gram streams on the real corpus,
   * identical edge semantics (NULL text, sub-n-token docs, consecutive
   * separators), and the analysis guards for bad arguments.
   */
@@ -20,7 +20,7 @@ class NGramsSpec extends SparkSuite {
       .groupBy("g").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val native = counts(call_function("ngrams", col("text"), lit(3)))
-    val hof = counts(graft.rel.FuncQueries.ngramsHof(col("text"), 3))
+    val hof = counts(NGramsSpec.ngramsHof(col("text"), 3))
     assert(native.nonEmpty)
     assert(native === hof)
   }
@@ -39,7 +39,7 @@ class NGramsSpec extends SparkSuite {
     val native = rows(call_function("ngrams", col("text"), lit(3)))
     assert(native === Seq((1L, "a b c"), (1L, "b c d"),
       (4L, " b c"), (4L, "a  b")))
-    assert(native === rows(graft.rel.FuncQueries.ngramsHof(col("text"), 3)))
+    assert(native === rows(NGramsSpec.ngramsHof(col("text"), 3)))
   }
 
   test("analysis guards: non-positive or non-literal n is rejected") {
@@ -54,5 +54,23 @@ class NGramsSpec extends SparkSuite {
     }
     assert(nonLit.getMessage.contains("foldable") ||
       nonLit.getMessage.contains("DATATYPE_MISMATCH"))
+  }
+}
+
+object NGramsSpec {
+
+  /** HOF twin of the native ngrams generator (explode of the
+    * materialized gram array) — the spec's bit-equality reference.
+    * NULL and sub-n-token inputs emit no rows, exactly like the
+    * generator (size(NULL) = -1 takes the empty branch; sequence()
+    * would otherwise count DOWN for short docs). */
+  def ngramsHof(text: org.apache.spark.sql.Column,
+      n: Int): org.apache.spark.sql.Column = {
+    val toks = split(text, " ")
+    val arr = when(size(toks) < n, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(0), size(toks) - n), i =>
+        concat_ws(" ",
+          (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
+    explode(arr)
   }
 }

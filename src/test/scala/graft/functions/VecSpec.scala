@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Native vec_dot kernel: SQL-resolvable via GraftExtensions, equal to
@@ -69,7 +70,7 @@ class VecSpec extends SparkSuite {
     assert(hand.isNullAt(2))
     // the Column helper resolves to the same kernel values
     val viaHelper = df.select(
-      vec.signpack(spark, col("embedding"), 0).as("c")).collect()
+      vec.signpack(col("embedding"), 0).as("c")).collect()
       .map(_.getLong(0))
     val native = rows.map(_.getLong(0))
     assert(native.sameElements(viaHelper))
@@ -90,8 +91,8 @@ class VecSpec extends SparkSuite {
     " matching the native kernel") {
     val df = spark.sql("SELECT array(0.5D, -1.0D, 0.0D, 2.0D) AS a")
     val r = df.select(
-      vec.signpackHof(col("a"), 0).as("lo"),
-      vec.signpackHof(col("a"), 32).as("past_end"),
+      VecSpec.signpackHof(col("a"), 0).as("lo"),
+      VecSpec.signpackHof(col("a"), 32).as("past_end"),
       expr("vec_signpack(a, 0)").as("n_lo"),
       expr("vec_signpack(a, 32)").as("n_past")).collect().head
     assert(r.getLong(0) == r.getLong(2) && r.getLong(0) == 9L)
@@ -111,7 +112,7 @@ class VecSpec extends SparkSuite {
     val rows = df.select(
       expr(s"pq_encode(q, ${cb.mkString("array(", "L,", "L)")})")
         .as("native"),
-      vec.pqEncodeHof(col("q"), cb).as("hof")).collect()
+      VecSpec.pqEncodeHof(col("q"), cb).as("hof")).collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1),
         s"native=${r.getSeq[Long](0)} hof=${r.getSeq[Long](1)}")
@@ -149,7 +150,7 @@ class VecSpec extends SparkSuite {
       s"SELECT pq_encode($arr, ${cbTiny.mkString("array(", "L,", "L)")})" +
         " AS e").collect().head.getSeq[Long](0)
     def viaHof(arr: String) = spark.range(1)
-      .select(vec.pqEncodeHof(expr(arr), cbTiny).as("e"))
+      .select(VecSpec.pqEncodeHof(expr(arr), cbTiny).as("e"))
       .collect().head.getSeq[Long](0)
     for (empty <- Seq("array()", "array(1L, 2L, 3L)")) {
       val arr = if (empty == "array()") "CAST(array() AS ARRAY<BIGINT>)"
@@ -174,7 +175,7 @@ class VecSpec extends SparkSuite {
       .limit(50)
       .select(expr("transform(embedding, x -> CAST(round(CAST(x AS " +
         "DOUBLE) * 1000) AS BIGINT))").as("q"))
-      .withColumn("enc", vec.pqEncode(spark, col("q"),
+      .withColumn("enc", vec.pqEncode(col("q"),
         cb))
       // own LUT: distance of q to EVERY codeword, flattened 16*m + k
       .withColumn("lut", expr(
@@ -186,7 +187,7 @@ class VecSpec extends SparkSuite {
           |      CAST(0 AS BIGINT), (a, x) -> a + x * x))))""".stripMargin))
     val rows = df.select(
       expr("pq_adc(element_at(enc, 1), lut)").as("native"),
-      vec.pqAdcHof(expr("element_at(enc, 1)"), col("lut")).as("hof"),
+      VecSpec.pqAdcHof(expr("element_at(enc, 1)"), col("lut")).as("hof"),
       expr("element_at(enc, 2)").as("qerr")).collect()
     rows.foreach { r =>
       assert(r.getLong(0) == r.getLong(1),
@@ -204,13 +205,13 @@ class VecSpec extends SparkSuite {
     val row = spark.range(1).select(
       expr(s"pq_encode(CAST(NULL AS ARRAY<BIGINT>), " +
         s"${cbTiny.mkString("array(", "L,", "L)")})").as("ker_enc"),
-      vec.pqEncodeHof(expr("CAST(NULL AS ARRAY<BIGINT>)"), cbTiny)
+      VecSpec.pqEncodeHof(expr("CAST(NULL AS ARRAY<BIGINT>)"), cbTiny)
         .as("hof_enc"),
       expr("pq_adc(CAST(NULL AS BIGINT), array(1L, 2L))").as("ker_adc_c"),
-      vec.pqAdcHof(expr("CAST(NULL AS BIGINT)"), expr("array(1L, 2L)"))
+      VecSpec.pqAdcHof(expr("CAST(NULL AS BIGINT)"), expr("array(1L, 2L)"))
         .as("hof_adc_c"),
       expr("pq_adc(0L, CAST(NULL AS ARRAY<BIGINT>))").as("ker_adc_l"),
-      vec.pqAdcHof(lit(0L), expr("CAST(NULL AS ARRAY<BIGINT>)"))
+      VecSpec.pqAdcHof(lit(0L), expr("CAST(NULL AS ARRAY<BIGINT>)"))
         .as("hof_adc_l")).collect().head
     (0 until 6).foreach(i =>
       assert(row.isNullAt(i), s"column $i (${row.schema(i).name}) " +
@@ -234,14 +235,87 @@ class VecSpec extends SparkSuite {
     assert(row.getLong(1) == 0L)
   }
 
-  test("vec helper falls back to the UDF without the extension and" +
-    " produces identical values") {
-    // a bare session view: simulate by calling the udf path directly
+  test("vec helpers build the native kernels directly as Columns") {
     val df = graft.rel.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .limit(20).select(col("embedding").as("a"), reverse(col("embedding")).as("b"))
     val nat = df.select(expr("vec_dot(a, b)").as("d")).collect().map(_.getDouble(0))
-    val viaHelper = df.select(
-      vec.dot(spark, col("a"), col("b")).as("d")).collect().map(_.getDouble(0))
-    assert(nat.sameElements(viaHelper))
+    val viaHelper = df.select(vec.dot(col("a"), col("b")).as("d"))
+    assert(nat.sameElements(viaHelper.collect().map(_.getDouble(0))))
+    val plan = viaHelper.queryExecution.executedPlan.toString
+    assert(plan.contains("vec_dot(") && !plan.contains("ScalaUDF"), plan)
   }
+}
+
+/** Interpreted higher-order-function forms of the vector kernels — the
+  * bit-equality references the specs above hold the kernels to. */
+object VecSpec {
+
+  def signpackHof(a: Column, offset: Int): Column = {
+    // mirror the native kernel's analysis-time rejection: a negative
+    // offset under try_element_at would silently read from the END of
+    // the array (negative indexing) instead of failing
+    require(offset >= 0 && offset <= Int.MaxValue - 31,
+      s"signpack offset must be in [0, ${Int.MaxValue - 31}], got $offset")
+    aggregate(sequence(lit(0), lit(31)), lit(0L), (acc, i) =>
+      // try_element_at: out-of-range indices yield null (-> 0 bit) to
+      // match the native kernel's zero-fill under ANSI mode, where
+      // element_at would throw INVALID_ARRAY_INDEX_IN_ELEMENT_AT.
+      acc + when(try_element_at(a, i + lit(offset + 1)) > 0d,
+        call_function("shiftleft", lit(1L), i)).otherwise(0L))
+  }
+
+  /** argmin ties to the smallest k; missing elements read 0. */
+  def pqEncodeHof(q: Column, cb: Array[Long]): Column = {
+    val cbCol = lit(cb)
+    def dsz = (size(q) / 8).cast("int")
+    // degenerate sub-8-element vectors: D = 0, the kernel's inner loop
+    // is empty so every subspace scores 0 against codeword 0 — mirror
+    // that here rather than letting sequence(0, -1) run descending
+    val enc0 = struct(lit(0L).as("codes"), lit(0L).as("qerr"))
+    val enc = aggregate(
+      sequence(lit(0), lit(7)),
+      struct(lit(0L).as("codes"), lit(0L).as("qerr")),
+      (acc, m) => {
+        val bm = aggregate(
+          sequence(lit(0), lit(15)),
+          struct(lit(Long.MaxValue).as("bd"), lit(0).as("bk")),
+          (bacc, k) => {
+            val d = aggregate(
+              sequence(lit(0), dsz - 1),
+              lit(0L),
+              (s2, i) => {
+                val diff =
+                  coalesce(try_element_at(q, (m * dsz + i + 1).cast("int")),
+                    lit(0L)) -
+                  coalesce(try_element_at(cbCol,
+                    ((m * 16 + k) * dsz + i + 1).cast("int")), lit(0L))
+                s2 + diff * diff
+              })
+            when(d < bacc.getField("bd"),
+              struct(d.as("bd"), k.as("bk"))).otherwise(bacc)
+          })
+        struct(
+          acc.getField("codes").bitwiseOR(
+            call_function("shiftleft", bm.getField("bk").cast("long"),
+              (m * 4).cast("int"))).as("codes"),
+          (acc.getField("qerr") + bm.getField("bd")).as("qerr"))
+      })
+    val encSafe = when(size(q) < 8, enc0).otherwise(enc)
+    // null-in/null-out parity with the kernel's nullSafeEval: without
+    // this guard a NULL vector flows through the aggregates as
+    // (MaxValue, 0) garbage instead of NULL
+    when(q.isNull, lit(null).cast("array<bigint>"))
+      .otherwise(array(encSafe.getField("codes"), encSafe.getField("qerr")))
+  }
+
+  def pqAdcHof(codes: Column, lut: Column): Column =
+    // null-in/null-out parity with the kernel's nullSafeEval: the
+    // coalesce zero-fill below would otherwise turn a NULL input into
+    // a spurious score of 0
+    when(codes.isNull.or(lut.isNull), lit(null).cast("bigint"))
+      .otherwise(aggregate(sequence(lit(0), lit(7)), lit(0L), (a, m) =>
+        a + coalesce(try_element_at(lut,
+          (lit(16) * m +
+            call_function("shiftrightunsigned", codes, (m * 4).cast("int"))
+              .bitwiseAND(lit(15L)).cast("int") + 1).cast("int")), lit(0L))))
 }

@@ -251,6 +251,24 @@ class GraftTableSpec extends SparkSuite {
     assert(t.read().count() === 3)
   }
 
+  test("ErasePii refuses a permanent erase on a snapshot fork before " +
+      "its first commit") {
+    val cat = new GraftCatalog(spark, freshWarehouse())
+    cat.createNamespace("default")
+    val src = cat.createTable("default", "pii_data", piiSchema, Map.empty)
+    src.append(seedDf)
+    val fork = cat.snapshotTable("default", "pii_fork", src)
+    def state(t: GraftTable) = (t.meta.snapshots.map(_.snapshotId),
+      t.read().orderBy("case_id").collect().toSeq)
+    val (forkBefore, srcBefore) = (state(fork), state(src))
+    val e = intercept[IllegalArgumentException](
+      ErasePii.run(fork, "case_id", "case-2", ErasePii.DeleteRow))
+    assert(e.getMessage.contains("gc.enabled=false"))
+    assert(state(fork) === forkBefore)
+    assert(state(src) === srcBefore)
+    assert(forkBefore._2.exists(_.getString(0) == "case-2"))
+  }
+
   test("equality delete (content=2) masks by key columns") {
     val t = newTable()
     t.append(seedDf)

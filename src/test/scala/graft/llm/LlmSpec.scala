@@ -1,7 +1,9 @@
 package graft.llm
 
 import graft.SparkSuite
-import org.apache.spark.sql.DataFrame
+import graft.rel.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Correctness checks for the §2l operators that have no DuckDB oracle
   * (hash functions, typed aggs, binary decode): each is pinned against
@@ -19,7 +21,7 @@ class LlmSpec extends SparkSuite {
     val emb = graft.rel.Tables.embeddings(spark, dir)
       .filter(col("vec_id") < 250).select("vec_id", "embedding")
     val (distModel, rbase) = SimilarityQueries.ivfPqTrain(spark, emb)
-    val (localModel, rows) = SimilarityQueries.ivfPqTrainLocal(spark, emb)
+    val (localModel, rows) = SimilarityQueries.ivfPqTrainLocal(emb)
     assert(localModel.cents.map(_.toSeq).toSeq ===
       distModel.cents.map(_.toSeq).toSeq, "coarse centroids diverged")
     assert(localModel.cb.toSeq === distModel.cb.toSeq,
@@ -264,7 +266,7 @@ class LlmSpec extends SparkSuite {
   test("simhash kernel is bit-identical to the relational formulation") {
     val kernel = run("q_dedup_simhash").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val relational = DedupQueries.simhashRelational(spark, dir).collect()
+    val relational = LlmSpec.simhashRelational(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(kernel.sameElements(relational))
   }
@@ -337,17 +339,17 @@ class LlmSpec extends SparkSuite {
     import graft.functions.vec
     val e = graft.rel.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      .withColumn("nrm", vec.norm(spark, col("v")))
+      .withColumn("nrm", vec.norm(col("v")))
     val exact = SimilarityQueries.knnJoinExact(spark, e).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivf = SimilarityQueries.knnJoinIvf(spark, e)
+    val ivf = SimilarityQueries.knnJoinIvf(e)
     // every IVF cosine must be the exact cosine of that pair (the IVF
     // route prunes candidates, it never approximates the math)
     val mism = ivf
       .join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
       .join(e.select(col("vec_id").as("nn_id"), col("v").as("w"),
         col("nrm").as("wn")), "nn_id")
-      .filter(round(vec.cosine(spark, col("v"), col("w"), col("nrm"),
+      .filter(round(vec.cosine(col("v"), col("w"), col("nrm"),
         col("wn")), 4) =!= col("cos_sim"))
       .count()
     assert(mism == 0, s"$mism IVF pairs with non-exact cosines")
@@ -749,5 +751,30 @@ class LlmSpec extends SparkSuite {
     // the batch is 32 queries; mutual-best can only shrink it
     assert(got.map(_._1).distinct.length == got.length)
     assert(got.length <= 32)
+  }
+}
+
+object LlmSpec {
+
+  /** The kernel-free SimHash formulation — the cross-check for
+    * [[graft.functions.SimHash64]]: explode doc x token x bit, two
+    * partial-aggregated groupBys, bit_or. */
+  def simhashRelational(s: SparkSession, dir: String): DataFrame = {
+    val toks = Tables.documents(s, dir)
+      .select(col("doc_id"),
+        explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
+    val contrib = toks
+      .select(col("doc_id"), col("h"), explode(expr("sequence(0, 63)")).as("i"))
+      .select(col("doc_id"), col("i"),
+        expr("CASE WHEN (shiftright(h, cast(i AS int)) & 1) = 1 " +
+          "THEN 1 ELSE -1 END").as("sgn"))
+    contrib
+      .groupBy("doc_id", "i").agg(sum(col("sgn")).as("s"))
+      .select(col("doc_id"), expr(
+        "CASE WHEN s > 0 THEN shiftleft(CAST(1 AS BIGINT), CAST(i AS int)) " +
+          "ELSE CAST(0 AS BIGINT) END").as("bit"))
+      .groupBy("doc_id").agg(expr("bit_or(bit)").as("simhash"))
+      .orderBy("doc_id")
   }
 }

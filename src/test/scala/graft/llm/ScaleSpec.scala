@@ -102,8 +102,8 @@ class ScaleSpec extends SparkSuite {
     val top = rbase.filter(col("vec_id") =!= 0)
       .filter(col("cell").isin(plan.map(p => Long.box(p._1)): _*))
       .withColumn("codes",
-        element_at(vec.pqEncode(spark, col("r"), model.cb), 1))
-      .withColumn("adc", SimilarityQueries.ivfPqAdcCol(spark, plan))
+        element_at(vec.pqEncode(col("r"), model.cb), 1))
+      .withColumn("adc", SimilarityQueries.ivfPqAdcCol(plan))
       .orderBy("adc", "vec_id").limit(10)
       .select("vec_id").collect()
     assert(top.length == 10)

@@ -105,8 +105,8 @@ class TablesSpec extends SparkSuite {
     val e = Tables.embeddings(spark, dir.toString)
     import graft.functions.vec
     val dots = e.select(
-        vec.dot(spark, col("embedding"), col("embedding")).as("dd"),
-        vec.signpack(spark, col("embedding"), 0).as("sp"),
+        vec.dot(col("embedding"), col("embedding")).as("dd"),
+        vec.signpack(col("embedding"), 0).as("sp"),
         expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)" +
           " * 1000) AS BIGINT))").as("q"))
       .collect()
@@ -114,7 +114,7 @@ class TablesSpec extends SparkSuite {
     // vec_id 0: dot = sum (d/64)^2, exactly computable
     val want = (0 until 64).map(d => math.pow(d / 64.0, 2)).sum
     val d0 = e.filter(col("vec_id") === 0)
-      .select(vec.dot(spark, col("embedding"), col("embedding")))
+      .select(vec.dot(col("embedding"), col("embedding")))
       .head().getDouble(0)
     assert(math.abs(d0 - want) < 1e-12)
   }

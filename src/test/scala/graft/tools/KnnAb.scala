@@ -22,7 +22,7 @@ object KnnAb {
     spark.sparkContext.setLogLevel("ERROR")
     def emb(): DataFrame = graft.rel.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      .withColumn("nrm", graft.functions.vec.norm(spark, col("v")))
+      .withColumn("nrm", graft.functions.vec.norm(col("v")))
     def run(e: DataFrame): Double = {
       val t0 = System.nanoTime()
       graft.llm.SimilarityQueries.knnJoinExact(spark, e)
@@ -40,7 +40,7 @@ object KnnAb {
       val t0 = System.nanoTime()
       e.join(broadcast(right), col("vec_id") =!= col("nn_id"))
         .select(col("vec_id"), col("nn_id"),
-          graft.functions.vec.cosine(spark, col("v"), col("w"),
+          graft.functions.vec.cosine(col("v"), col("w"),
             col("nrm"), col("wn")).as("cosd"))
         .withColumn("nn_rank", row_number().over(w))
         .filter(col("nn_rank") <= 3)
