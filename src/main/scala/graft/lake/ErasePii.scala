@@ -37,9 +37,15 @@ object ErasePii {
         table.delete(pred)
     }
     if (permanent) {
-      // demo.py:419-447: apply MOR deletes + drop rewritten files
-      table.rewriteDataFiles(Map("rewrite-all" -> "true",
-        "target-file-size-bytes" -> (128L * 1024 * 1024).toString))
+      // demo.py:419-447: apply MOR deletes + drop rewritten files; the
+      // same commit refolds the NDV sketches of the erased columns so
+      // the current metadata keeps no hash of the erased values
+      val erased = mode match {
+        case NullifyColumns(cols) => cols
+        case DeleteRow => table.schema.fieldNames.toSeq
+      }
+      table.rewriteDataFilesErasing(Map("rewrite-all" -> "true",
+        "target-file-size-bytes" -> (128L * 1024 * 1024).toString), erased)
       table.rewritePositionDeleteFiles()
       // demo.py:289-296: history must stop resolving pre-erase snapshots
       table.expireSnapshots(olderThanMs = System.currentTimeMillis() + 1)

@@ -1441,17 +1441,22 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * skip-not-prune file stats). Returns logical column → NDV.
     *
     * One distributed pass: every column's 60-bit [[graft.rel.Kmv]]
-    * hash explodes into (column, hash) rows, and the shared two-level
-    * salted kSmallest bounds every reducer at salt·k rows — the same
-    * machinery the oracled KMV queries pin, so the estimator
-    * ((k-1)·2^60 div theta) is integer-exact and mergeable. After the
-    * ANALYZE, every plain MAIN append folds its new files' hashes in
-    * (O(change): one bounded scan of just-written bytes); any other
-    * row-changing commit (deletes, overwrites, branch appends landing
-    * via fast_forward, cherry-picks) flips the `stale` flag `.stats`
-    * surfaces. While fresh the estimate is the exact-merge value (an
-    * upper bound once rows were masked); while stale it may be off in
-    * either direction until re-analyzed. Consumers:
+    * hash explodes into (column, hash) rows, and one
+    * [[graft.rel.Kmv.bottomK]] aggregate per column (map-side
+    * combined, one shuffle, no buffer over k) keeps the k smallest
+    * distinct hashes — the same hash and bottom-k set the oracled KMV
+    * queries pin, so the estimator ((k-1)·2^60 div theta) is
+    * integer-exact and mergeable. After the ANALYZE, every plain MAIN
+    * append folds its new files' hashes in (O(change): hashing the
+    * rows still in hand when the driver-side writer took them, zero
+    * Spark jobs; else one bottom-k pass over just-written bytes); any
+    * other row-changing commit (deletes, overwrites, branch appends
+    * landing via fast_forward, cherry-picks) flips the `stale` flag
+    * `.stats` surfaces, except a permanent [[ErasePii]] erase, whose
+    * rewrite commit refolds the sketches fresh. While fresh the
+    * estimate is the exact-merge value (an upper bound once rows were
+    * masked); while stale it may be off in either direction until
+    * re-analyzed. Consumers:
     * [[columnNdv]] and the SQL runtime-prune route, which refuses a
     * dim side whose stored NDV already exceeds maxKeys without
     * scanning it. */
@@ -1548,7 +1553,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * readForJoin's bounded collect self-vets a stale-low estimate.) */
   def columnNdvIfFresh(column: String): Option[Long] =
     sketchWithMeta(column)
-      .filter { case (m, s) => !ndvStaleIn(m, s.analyzedSnapshotId) }
+      .filter { case (m, s) =>
+        !ndvStaleIn(m, s.analyzedSnapshotId, parentIndex(m)) }
       .map { case (_, s) => GraftTable.ndvEstimate(s) }
 
   /** The `<table>.stats` metadata relation: one row per analyzed
@@ -1565,7 +1571,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val rows = StructType.fromDDL(m.schemaDdl).fields.toSeq.flatMap { f =>
       m.columnNdv.get(physName(pn)(f.name)).map { s =>
         Row(f.name, GraftTable.ndvEstimate(s), s.k, s.hashes.size,
-          s.analyzedSnapshotId, ndvStaleIn(m, s.analyzedSnapshotId),
+          s.analyzedSnapshotId, ndvStaleIn(m, s.analyzedSnapshotId, parents),
           foldAge(m, s.analyzedSnapshotId, parents)._1)
       }
     }
@@ -1587,23 +1593,23 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * table -1 once commits exist) as "at least retained-depth old" —
     * over any threshold. One walk serves both consumers. */
   private def foldAge(m: TableMeta, analyzedId: Long,
-      parents: Map[Long, Option[Long]]): (Long, Boolean) = {
+      parents: Map[Long, SnapshotMeta]): (Long, Boolean) = {
     var cursor = m.currentSnapshotId
     var cnt = 0L
     while (cursor.isDefined && !cursor.contains(analyzedId)) {
       cnt += 1
-      cursor = parents.get(cursor.get).flatten
+      cursor = parents.get(cursor.get).flatMap(_.parentId)
     }
     (cnt, cursor.isDefined ||
       (analyzedId < 0 && m.currentSnapshotId.isEmpty))
   }
 
-  /** snapshotId → parentId index, built ONCE per caller so each
-    * lineage hop in [[foldAge]] is O(1) instead of a linear
-    * `snapshots.find` — `.stats` on a long-lineage, many-column table
-    * was quadratic in snapshot count without it. */
-  private def parentIndex(m: TableMeta): Map[Long, Option[Long]] =
-    m.snapshots.iterator.map(s => s.snapshotId -> s.parentId).toMap
+  /** snapshotId → snapshot index, built ONCE per caller so each
+    * lineage hop in [[foldAge]] and [[ndvStaleIn]] is O(1) instead of
+    * a linear `snapshots.find` — `.stats` on a long-lineage,
+    * many-column table was quadratic in snapshot count without it. */
+  private def parentIndex(m: TableMeta): Map[Long, SnapshotMeta] =
+    m.snapshots.iterator.map(s => s.snapshotId -> s).toMap
 
   /** NDV-eligible = the atomic types file stats also cover; complex
     * and binary columns have no hashable scalar domain worth a
@@ -1624,8 +1630,10 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * were masked); while STALE it may be off in EITHER direction —
     * consumers must keep their own self-vet (readForJoin does).
     * Takes the meta EXPLICITLY so one statsTable row reads one
-    * consistent version (and no per-row metadata re-parse). */
-  private def ndvStaleIn(m: TableMeta, analyzedId: Long): Boolean = {
+    * consistent version (and no per-row metadata re-parse), and the
+    * caller's [[parentIndex]] of it so every hop is O(1). */
+  private def ndvStaleIn(m: TableMeta, analyzedId: Long,
+      parents: Map[Long, SnapshotMeta]): Boolean = {
     // analyzedId = -1 records an ANALYZE of the EMPTY table (no
     // current snapshot existed). That sketch — zero hashes — is
     // exactly right as long as the table still has no row-changing
@@ -1639,7 +1647,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case None => return true // fold point not an ancestor
       case Some(id) if id == analyzedId => return false
       case Some(id) =>
-        m.snapshots.find(_.snapshotId == id) match {
+        parents.get(id) match {
           case None => return true // expired mid-walk
           case Some(s) =>
             if ((s.operation != "append" && s.operation != "replace") ||
@@ -1652,52 +1660,68 @@ class GraftTable(val spark: SparkSession, val root: Path,
     true // unreachable
   }
 
-  /** One distributed (column, hash60) pass over `df`, k smallest
-    * DISTINCT hashes per column via the shared salted ladder. */
-  private def ndvHashJob(df: DataFrame, logicalCols: Seq[String],
-      k: Int): Map[String, Seq[Long]] = {
-    import graft.rel.Kmv
+  /** (column, hash60) rows of `df`, one per column per row. */
+  private def ndvHashes(df: DataFrame, logicalCols: Seq[String],
+      keep: Column*): DataFrame = {
     val entries = logicalCols.map(c =>
-      struct(lit(c).as("c"), Kmv.hash60(col(quoted(c))).as("h")))
-    val hashed = df.select(explode(array(entries: _*)).as("e"))
-      .select(col("e.c").as("c"), col("e.h").as("h"))
-      .where(col("h").isNotNull)
-      .distinct()
-    Kmv.kSmallest(hashed, k, Seq("c"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (c, rs) => c -> rs.map(_.getLong(1)).sorted.toSeq }
+      struct(lit(c).as("c"), graft.rel.Kmv.hash60(col(quoted(c))).as("h")))
+    df.select(keep :+ explode(array(entries: _*)).as("e"): _*)
+      .select(col("*"), col("e.c").as("c"), col("e.h").as("h")).drop("e")
   }
+
+  /** One distributed (column, hash60) pass over `df`, k smallest
+    * DISTINCT hashes per column via one [[graft.rel.Kmv.bottomK]]
+    * aggregate: map-side combined, one shuffle. Columns with no
+    * non-null value map to an empty list. */
+  private def ndvHashJob(df: DataFrame, logicalCols: Seq[String],
+      k: Int): Map[String, Seq[Long]] =
+    ndvHashes(df, logicalCols)
+      .groupBy("c").agg(graft.rel.Kmv.bottomK(col("h"), k))
+      .collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1))
+      .toMap
 
   /** One distributed (file, column, hash60) pass over `files`' RAW
     * bytes (unmasked — a per-file sketch describes the FILE), k
-    * smallest DISTINCT hashes per (file, column) via the shared
-    * salted ladder. Keys are normalized absolute file paths; inner
-    * keys are LOGICAL column names. One job regardless of file or
-    * column count — the per-file grouping rides the same shuffle. */
-  private def ndvFileHashJob(m: TableMeta, files: Seq[String],
+    * smallest DISTINCT hashes per (file, column) via one
+    * [[graft.rel.Kmv.bottomK]] aggregate. Keys are normalized absolute
+    * file paths; inner keys are LOGICAL column names. One shuffle
+    * regardless of file or column count — the per-file grouping rides
+    * the aggregate's grouping key. */
+  private[lake] def ndvFileHashJob(m: TableMeta, files: Seq[String],
       logicalCols: Seq[String], k: Int)
       : Map[String, Map[String, Seq[Long]]] = {
-    import graft.rel.Kmv
     val cur = StructType.fromDDL(m.schemaDdl)
     // callers hand freshly written local paths (no manifest entry
     // yet): one nio stat per file feeds the manifest-backed scan
     val df = scanParquet(
       files.map(p => (p, Files.size(java.nio.file.Paths.get(p)))),
       cur, m.physicalNames, lineage = true)
-    val entries = logicalCols.map(c =>
-      struct(lit(c).as("c"), Kmv.hash60(col(quoted(c))).as("h")))
-    val hashed = df
-      .select(col(FileCol).as("f"), explode(array(entries: _*)).as("e"))
-      .select(col("f"), col("e.c").as("c"), col("e.h").as("h"))
-      .where(col("h").isNotNull)
-      .distinct()
-    Kmv.kSmallest(hashed, k, Seq("f", "c"))
+    ndvHashes(df, logicalCols, col(FileCol).as("f"))
+      .groupBy("f", "c").agg(graft.rel.Kmv.bottomK(col("h"), k))
       .collect()
       .groupBy(r => Io.normalize(r.getString(0)))
       .map { case (f, rs) => f ->
-        rs.groupBy(_.getString(1)).map { case (c, xs) =>
-          c -> xs.map(_.getLong(2)).sorted.toSeq } }
+        rs.map(r => r.getString(1) -> r.getSeq[Long](2)).toMap }
+  }
+
+  /** [[ndvFileHashJob]]'s answer for the one file the driver-side
+    * writer produced from `inHand` (its rows, PHYSICAL column names):
+    * the hash projection folds into the LocalRelation
+    * (ConvertToLocalRelation), so the collect runs no Spark job, and
+    * the hashes are of exactly the rows the file holds. */
+  private def ndvInHandHashes(m: TableMeta, file: String,
+      inHand: logical.LocalRelation, logicalCols: Seq[String], k: Int)
+      : Map[String, Map[String, Seq[Long]]] = {
+    val pn = m.physicalNames
+    val rows = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, inHand)
+      .select(logicalCols.map(c =>
+        graft.rel.Kmv.hash60(col(quoted(physName(pn)(c))))): _*)
+      .collect()
+    Map(Io.normalize(file) -> logicalCols.indices.map { i =>
+      logicalCols(i) -> rows.iterator.filterNot(_.isNullAt(i))
+        .map(_.getLong(i)).toSeq.distinct.sorted.take(k)
+    }.toMap)
   }
 
   /** Per-file sketch stamping is on unless the table opts out ('a
@@ -1753,27 +1777,36 @@ class GraftTable(val spark: SparkSession, val root: Path,
       tracked.map(f => m.columnNdv(physName(pn)(f.name)).k).max))
   }
 
-  /** NDV maintenance for `newFiles`' hashes: fold every stored sketch
-    * (KMV merge law: k smallest of a distinct union — the table fold
-    * is the union of the per-file bottom-k sets, exact by closure)
-    * and stamp each new entry with its own file's sketch. Callers
-    * invoke it only for PLAIN MAIN appends (appendRaw main path, file
-    * imports, rowDelta's insert-only form) — branch appends never
-    * fold (ndvStaleIn flips on their branch-summary snapshots when
-    * fast_forward brings them to main). The fold point advances to
+  /** NDV maintenance for the `written` files' hashes: fold every
+    * stored sketch (KMV merge law: k smallest of a distinct union —
+    * the table fold is the union of the per-file bottom-k sets, exact
+    * by closure) and stamp each new entry with its own file's sketch.
+    * Callers invoke it only for PLAIN MAIN appends (appendRaw main
+    * path, file imports, rowDelta's insert-only form) — branch appends
+    * never fold (ndvStaleIn flips on their branch-summary snapshots
+    * when fast_forward brings them to main). The fold point advances to
     * this commit ONLY when the sketch is still fresh under the base
     * meta: folding hashes is always sound (adds only), but advancing
     * past an un-subtracted delete would silently clear the stale
-    * flag the delete earned. Identity when never analyzed. */
-  private def ndvFoldTweak(m: TableMeta, newFiles: Seq[String],
+    * flag the delete earned. Identity when never analyzed. The hashes
+    * come from the rows in hand when the driver-side writer took them
+    * (zero Spark jobs), else from one [[ndvFileHashJob]] over the
+    * files; both yield the same per-file bottom-k sets. */
+  private def ndvFoldTweak(m: TableMeta, written: Written,
       snapId: Long): NdvFold = {
+    val newFiles = written.files
     if (newFiles.isEmpty) return ndvFoldIdentity
     val (tracked, kMax) = ndvTracked(m) match {
       case None => return ndvFoldIdentity
       case Some(tk) => tk
     }
     val pn = m.physicalNames
-    val perFile = ndvFileHashJob(m, newFiles, tracked.map(_.name), kMax)
+    val cols = tracked.map(_.name)
+    val perFile = written.inHand match {
+      case Some(rows) => ndvInHandHashes(m, newFiles.head, rows, cols, kMax)
+      case None => ndvFileHashJob(m, newFiles, cols, kMax)
+    }
+    val parents = parentIndex(m)
     val folded = tracked.map { f =>
       val phys = physName(pn)(f.name)
       val old = m.columnNdv(phys)
@@ -1782,21 +1815,20 @@ class GraftTable(val spark: SparkSession, val root: Path,
       val merged = (old.hashes ++ fresh)
         .distinct.sorted.take(old.k)
       phys -> NdvSketch(old.k, merged,
-        if (ndvStaleIn(m, old.analyzedSnapshotId))
+        if (ndvStaleIn(m, old.analyzedSnapshotId, parents))
           old.analyzedSnapshotId
         else snapId)
     }.toMap
     NdvFold(
       mm => mm.copy(columnNdv = mm.columnNdv ++ folded),
-      if (fileNdvEnabled(m))
-        ndvStampOf(m, newFiles, tracked.map(_.name), perFile, kMax)
+      if (fileNdvEnabled(m)) ndvStampOf(m, newFiles, cols, perFile, kMax)
       else identity)
   }
 
   /** Stamp-ONLY variant for row-removing writers (COW rewrites,
     * compaction, overwrites): the table sketch cannot subtract, so no
     * meta fold — but the NEW files' own sketches land on their
-    * entries (one bounded scan of just-written bytes), keeping the
+    * entries (one bottom-k pass over just-written bytes), keeping the
     * table refold-eligible after the commit. Identity when the table
     * has no sketches or opted out. */
   private def ndvStampTweak(m: TableMeta, newFiles: Seq[String])
@@ -1830,19 +1862,30 @@ class GraftTable(val spark: SparkSession, val root: Path,
       : Option[Map[String, Long]] = {
     val b = captureBase()
     val m = b.meta
-    if (m.columnNdv.isEmpty) return None
-    val cur = StructType.fromDDL(m.schemaDdl)
     val pn = m.physicalNames
-    val tracked = cur.fields.toSeq
-      .filter(f => m.columnNdv.contains(physName(pn)(f.name)))
+    val tracked = ndvTracked(m).toSeq.flatMap(_._1)
       .filter(f => columns.isEmpty ||
         columns.exists(_.equalsIgnoreCase(f.name)))
     if (tracked.isEmpty) return None
-    val entries = b.entries
+    val refolded = ndvRefold(m, b.entries, tracked,
+      m.currentSnapshotId.getOrElse(-1L)).getOrElse(return None)
+    commitMeta(b, m.copy(columnNdv = m.columnNdv ++ refolded))
+    Some(tracked.map(f => f.name -> GraftTable.ndvEstimate(
+      refolded(physName(pn)(f.name)))).toMap)
+  }
+
+  /** The refold rule behind [[refoldColumnStats]]: `tracked`'s table
+    * sketches (keyed physically) re-derived from `entries`' per-file
+    * sketches, folded at snapshot `at`. None when `entries` has a
+    * delete file or a data entry without a usable sketch. */
+  private def ndvRefold(m: TableMeta, entries: Seq[ManifestEntry],
+      tracked: Seq[StructField], at: Long)
+      : Option[Map[String, NdvSketch]] = {
     if (entries.exists(_.content != 0)) return None
+    val pn = m.physicalNames
     // zero-row files are trivially covered: they contribute no hashes
     val data = entries.filter(e => e.content == 0 && e.recordCount > 0)
-    val refolded = tracked.map { f =>
+    Some(tracked.map { f =>
       val phys = physName(pn)(f.name)
       val old = m.columnNdv(phys)
       val perFile = data.map { e =>
@@ -1852,14 +1895,33 @@ class GraftTable(val spark: SparkSession, val root: Path,
           case _ => return None // uncovered or under-k entry
         }
       }
-      val merged = perFile.flatten.distinct.sorted.take(old.k)
-      phys -> NdvSketch(old.k, merged,
-        m.currentSnapshotId.getOrElse(-1L))
-    }.toMap
-    commitMeta(b, m.copy(columnNdv = m.columnNdv ++ refolded))
-    Some(tracked.map(f => f.name -> GraftTable.ndvEstimate(
-      refolded(physName(pn)(f.name)))).toMap)
+      phys -> NdvSketch(old.k, perFile.flatten.distinct.sorted.take(old.k),
+        at)
+    }.toMap)
   }
+
+  /** NDV upkeep for a permanent erase ([[ErasePii]]), applied inside
+    * the erase's rewrite commit: the table sketches may still hold the
+    * erased values' hashes, so they refold from `entries` (the
+    * rewritten, freshly stamped snapshot) at `at`; when a refold is
+    * not possible (per-file stamping off, an unstamped entry), the
+    * `erased` columns' sketches are dropped instead. Identity on a
+    * table without sketches. */
+  private def ndvEraseTweak(m: TableMeta, erased: Seq[String],
+      entries: Seq[ManifestEntry], at: Long): TableMeta => TableMeta =
+    ndvTracked(m) match {
+      case None => identity
+      case Some((tracked, _)) =>
+        ndvRefold(m, entries, tracked, at) match {
+          case Some(refolded) =>
+            mm => mm.copy(columnNdv = mm.columnNdv ++ refolded)
+          case None =>
+            val drop = tracked
+              .filter(f => erased.exists(_.equalsIgnoreCase(f.name)))
+              .map(f => physName(m.physicalNames)(f.name))
+            mm => mm.copy(columnNdv = mm.columnNdv -- drop)
+        }
+    }
 
   /** Incremental changelog (CDC) read — the Iceberg
     * `create_changelog_view` semantics: every row change committed in
@@ -2453,18 +2515,20 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val b = captureBase()
     branch.foreach(branchHead(b, _)) // validate before writing files
     val snapId = nextSnapshotHint
-    val moved = writeDataFiles(aligned)
-    val newEntries = statEntries(moved, content = 0, snapId)
+    val written = writeDataFiles(aligned)
+    val newEntries = statEntries(written.files, content = 0, snapId)
     val summary = extraSummary ++
       Map("added-data-files" -> newEntries.size.toString,
         "added-records" -> newEntries.map(_.recordCount).sum.toString)
     // incremental NDV maintenance: fold the new files' hashes into
-    // any stored column sketches (O(change) — one bounded scan of
-    // just-written bytes, only for analyzed columns). MAIN appends
-    // only: branch rows stay out of the sketch until fast_forward,
-    // whose branch-summary snapshots ndvStaleIn flags.
+    // any stored column sketches (O(change), only for analyzed
+    // columns: rows the driver-side writer still holds are hashed with
+    // no Spark job, anything else takes one bottom-k pass over the
+    // just-written bytes). MAIN appends only: branch rows stay out of
+    // the sketch until fast_forward, whose branch-summary snapshots
+    // ndvStaleIn flags.
     val ndv: NdvFold =
-      if (branch.isEmpty) ndvFoldTweak(b.meta, moved, snapId)
+      if (branch.isEmpty) ndvFoldTweak(b.meta, written, snapId)
       else ndvFoldIdentity
     val stamped = newEntries.map(ndv.stamp)
     // O(delta) fast path: a pure append never reads parent segments
@@ -2659,7 +2723,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val summary = Map("operation-origin" -> origin,
       "added-data-files" -> newEntries.size.toString,
       "added-records" -> newEntries.map(_.recordCount).sum.toString)
-    val ndv = ndvFoldTweak(b.meta, moved, snapId)
+    val ndv = ndvFoldTweak(b.meta, Written(moved), snapId)
     val stamped = newEntries.map(ndv.stamp)
     commitAddOnlyFast(b, snapId, None, "append", stamped, summary,
       ndv.metaTweak).getOrElse(
@@ -2801,7 +2865,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case Some(br) => manifestOf(branchHead(b, br))
     }
     val snapId = nextSnapshotHint
-    val moved = writeDataFiles(toWrite)
+    val moved = writeDataFiles(toWrite).files
     val newEntries = statEntries(moved, content = 0, snapId)
     val summary = extraSummary ++ Map(
       "replaced-data-files" ->
@@ -3023,7 +3087,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         hits.select(col(FileCol).as("file_path"), col(PosCol).as("pos")),
         bound)
       if (n == 0) return None
-      val newMoved = writeDataFiles(transform(hits.drop(FileCol, PosCol)))
+      val newMoved =
+        writeDataFiles(transform(hits.drop(FileCol, PosCol))).files
       val snapId = nextSnapshotHint
       val delEntries = statEntries(delMoved, content = 1, snapId)
       val dataEntries = statEntries(newMoved, content = 0, snapId)
@@ -3136,7 +3201,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       } else es
     }
     val movedData = writeDataFiles(aligned)
-    val dataEntries = statEntries(movedData, content = 0, snapId)
+    val dataEntries = statEntries(movedData.files, content = 0, snapId)
     val summary = extraSummary ++
       Map("added-data-files" -> dataEntries.size.toString,
         "added-records" -> dataEntries.map(_.recordCount).sum.toString) ++
@@ -3186,7 +3251,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case None => None
       case Some((affected, outRows, summary)) =>
         val snapId = nextSnapshotHint
-        val moved = writeDataFiles(outRows)
+        val moved = writeDataFiles(outRows).files
         // row-removing rewrite: the table sketch cannot subtract (the
         // op flips stale), but stamping the NEW files' own sketches
         // keeps the table refold-eligible — refoldColumnStats then
@@ -3286,7 +3351,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
           val bound = entries.filter(_.content == 0)
             .map(_.recordCount).sum
           val (delMoved, _) = writeDeleteFiles(cached, bound)
-          val newMoved = writeDataFiles(appendRows)
+          val newMoved = writeDataFiles(appendRows).files
           val snapId = nextSnapshotHint
           val delEntries = statEntries(delMoved, content = 1, snapId)
           val dataEntries = statEntries(newMoved, content = 0, snapId)
@@ -3571,7 +3636,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
               foldAge(m, s.analyzedSnapshotId, parents)
             // a fold point that expired out of the retained lineage
             // is "at least retained-depth old" — over any threshold
-            ndvStaleIn(m, s.analyzedSnapshotId) &&
+            ndvStaleIn(m, s.analyzedSnapshotId, parents) &&
               (!foldInLineage || age >= min)
           }
         }
@@ -3954,7 +4019,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case Some(fields) => clustered(aligned, fields, clusterFileCount)
       case None => aligned
     }
-    val moved = writeDataFiles(toWrite)
+    val moved = writeDataFiles(toWrite).files
     val newEntries = statEntries(moved, content = 0, snapId)
     val summary = extraSummary ++ Map(
       "added-data-files" -> newEntries.size.toString,
@@ -4090,11 +4155,25 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * (the demo's setting) rewrites everything and drops all delete
     * files; otherwise only undersized or delete-carrying files move. */
   def rewriteDataFiles(options: Map[String, String] = Map.empty)
-      : Option[SnapshotMeta] = {
+      : Option[SnapshotMeta] = rewriteDataFilesErasing(options, Nil)
+
+  /** [[rewriteDataFiles]] as the rewrite step of a permanent erase:
+    * when `erased` (the logical columns whose values the erase
+    * removed) is non-empty, the same commit also clears the erased
+    * values out of the table NDV sketches ([[ndvEraseTweak]]). */
+  private[lake] def rewriteDataFilesErasing(options: Map[String, String],
+      erased: Seq[String]): Option[SnapshotMeta] = {
     val b = captureBase()
     val entries = b.entries
     val data = entries.filter(_.content == 0)
-    if (data.isEmpty) return None
+    if (data.isEmpty) {
+      // nothing to rewrite (a COW erase dropped the last file): the
+      // sketches still need their own commit
+      if (erased.nonEmpty && ndvTracked(b.meta).isDefined)
+        commitMeta(b, ndvEraseTweak(b.meta, erased, entries,
+          b.meta.currentSnapshotId.getOrElse(-1L))(b.meta))
+      return None
+    }
     val rewriteAll = options.getOrElse("rewrite-all", "false").toBoolean
     val target = options.getOrElse("target-file-size-bytes",
       (128L * 1024 * 1024).toString).toLong
@@ -4130,7 +4209,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
         case None => rows.repartition(nParts)
       }
     }
-    val moved = writeDataFiles(toWrite)
+    val moved = writeDataFiles(toWrite).files
     val keep = entries.filter(e => e.content == 0 && !candidateSet(abs(e)))
     // all deletes were applied while reading the candidates
     val dropDeletes = rewriteAll || hasDeletes
@@ -4140,10 +4219,13 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // makes a MOR-deleted table refold-eligible again
     val newEntries = statEntries(moved, content = 0, snapId)
       .map(ndvStampTweak(b.meta, moved))
-    Some(commitSnapshot(b, snapId, "replace",
-      keep ++ keptDeletes ++ newEntries,
+    val rewritten = keep ++ keptDeletes ++ newEntries
+    Some(commitSnapshot(b, snapId, "replace", rewritten,
       Map("rewritten-data-files" -> candidates.size.toString,
-        "target-file-size-bytes" -> target.toString)))
+        "target-file-size-bytes" -> target.toString),
+      metaTweak =
+        if (erased.isEmpty) identity
+        else ndvEraseTweak(b.meta, erased, rewritten, snapId)))
   }
 
   /** Rewrite layout strategies (the Iceberg `rewrite_data_files`
@@ -4662,9 +4744,17 @@ class GraftTable(val spark: SparkSession, val root: Path,
   // not pre-created: DataFrameWriter insists on creating the dir itself
   private def stageDir(): Path = root.resolve(s"stage-${UUID.randomUUID()}")
 
+  /** Files one [[writeDataFiles]] call produced (absolute paths).
+    * `inHand` holds the written rows themselves (under PHYSICAL column
+    * names) when the driver-side writer took the frame, so the NDV
+    * fold can hash them without a Spark job; None when a Spark job
+    * wrote the files. */
+  private final case class Written(files: Seq[String],
+      inHand: Option[logical.LocalRelation] = None)
+
   /** Write `df` as parquet via a staging dir, move the part files into
-    * data/ under fresh UUID names, return their absolute paths. */
-  private def writeDataFiles(df: DataFrame): Seq[String] = {
+    * data/ under fresh UUID names. */
+  private def writeDataFiles(df: DataFrame): Written = {
     val staged = stageDir()
     // files always spell columns by PHYSICAL name, so data written
     // before and after a RENAME COLUMN reads under one schema; nested
@@ -4715,9 +4805,11 @@ class GraftTable(val spark: SparkSession, val root: Path,
           org.apache.spark.sql.catalyst.types.DataTypeUtils
             .fromAttributes(lr.output),
           staged.resolve("part-00000-local.parquet"))
-      case _ => writer.parquet(staged.toString)
+        Written(moveStaged(staged, "data"), Some(lr))
+      case _ =>
+        writer.parquet(staged.toString)
+        Written(moveStaged(staged, "data"))
     }
-    moveStaged(staged, "data")
   }
 
   /** Driver-side parquet write for a metadata-sized row set — the same

@@ -170,7 +170,10 @@ final case class TableMeta(
     // per-column NDV sketches keyed by PHYSICAL column name (stable
     // across renames, never resurrected by re-added names — the same
     // reasons file stats key physically). Present only after
-    // computeTableStats ran; appends fold new files in incrementally.
+    // computeTableStats ran; plain main appends fold their new rows in
+    // (the rows in hand when the driver-side writer took them, else a
+    // bottom-k pass over the new files), and a permanent erase refolds
+    // them from the rewritten files' own sketches in its rewrite commit.
     columnNdv: Map[String, NdvSketch] = Map.empty)
 
 object Json {

@@ -1,7 +1,8 @@
 package graft.rel
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Shared KMV/theta sketch building blocks. Four surfaces build the
@@ -10,8 +11,10 @@ import org.apache.spark.sql.functions._
   * q_stream_kmv_distinct batch twin (StreamBatchQueries), the lake
   * sketch rollup (LakeQueries), and the streaming processor's JVM-side
   * fold ([[graft.streaming.Streams.kmvHash60]], whose bit-parity with
-  * [[hash60]] is pinned in StreamingSpec). Change the hash prefix, the
-  * domain, or the ladder here and every consumer moves together.
+  * [[hash60]] is pinned in StreamingSpec). The lake's column NDV
+  * statistics keep the same bottom-k set through [[bottomK]] (ScaleSpec
+  * pins it against the ladder). Change the hash prefix, the domain, or
+  * the ladder here and every consumer moves together.
   */
 object Kmv {
 
@@ -43,6 +46,61 @@ object Kmv {
       .withColumn("rk", row_number().over(
         Window.partitionBy(slice.map(col): _*).orderBy("h")))
       .filter(col("rk") <= k).drop("rk")
+  }
+
+  /** The k smallest DISTINCT non-null values of bigint `h` per group,
+    * ascending, as array<bigint> — the bottom-k set [[kSmallest]]
+    * computes over a distinct input, as one aggregate: the buffer
+    * ([[BottomK]]) never holds more than k values, combines map-side,
+    * and merges by distinct-union-then-take-k (the KMV merge law), so
+    * a grouped bottomK costs one shuffle of at most k values per group
+    * per map task. For hash-only sketches; rows that carry payload
+    * columns keep [[kSmallest]]. */
+  def bottomK(h: Column, k: Int): Column =
+    udaf(new BottomK(k), Encoders.LONG)(h)
+
+  /** [[bottomK]]'s aggregator. The buffer is a sorted distinct array of
+    * at most k values; `reduce` and `merge` may update it in place. */
+  final class BottomK(k: Int)
+      extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
+    require(k >= 1, s"bottom-k needs k >= 1, got $k")
+
+    def zero: Array[Long] = Array.emptyLongArray
+
+    def reduce(b: Array[Long], h: java.lang.Long): Array[Long] = {
+      if (h == null) return b
+      val v = h.longValue
+      val n = b.length
+      if (n == k && v >= b(n - 1)) return b
+      val i = java.util.Arrays.binarySearch(b, v)
+      if (i >= 0) return b
+      val at = -i - 1
+      val out = if (n == k) b else java.util.Arrays.copyOf(b, n + 1)
+      System.arraycopy(b, at, out, at + 1, out.length - at - 1)
+      out(at) = v
+      out
+    }
+
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      val out = new Array[Long](math.min(k, a.length + b.length))
+      var i = 0
+      var j = 0
+      var n = 0
+      while (n < out.length && (i < a.length || j < b.length)) {
+        val v =
+          if (j >= b.length || (i < a.length && a(i) <= b(j))) a(i)
+          else b(j)
+        if (i < a.length && a(i) == v) i += 1
+        if (j < b.length && b(j) == v) j += 1
+        out(n) = v
+        n += 1
+      }
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    }
+
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** Per-slice (cnt, theta) from a retained-hash table: theta is the

@@ -1920,19 +1920,9 @@ class GraftTableSpec extends SparkSuite {
     assert(t.columnNdv("k").get === preDelete,
       "the stale sketch is the un-subtracted upper bound")
     // refold: file-count-bounded metadata work — assert ZERO jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val refolded = try {
-      val r = t.refoldColumnStats()
-      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() === 0,
+    val (refolded, jobs) =
+      graft.SparkJobs.count(spark.sparkContext)(t.refoldColumnStats())
+    assert(jobs === 0,
       "refold must run from manifest metadata alone — no Spark jobs")
     assert(refolded.isDefined, "all entries stamped -> refold eligible")
     assert(!statRow().getBoolean(5), ".stats must read fresh again")

@@ -562,27 +562,21 @@ class GraftSqlSpec extends SparkSuite {
     assert(st.map(_.getString(0)).toSeq === Seq("dk", "tag"))
     assert(!st.head.getBoolean(2), "fresh right after ANALYZE")
     val allFiles = spark.sql(s"SELECT * FROM $fact").inputFiles.length
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     spark.conf.set("spark.graft.runtimeJoinPrune", "true")
     spark.conf.set("spark.graft.runtimeJoinPrune.maxKeys", "100")
-    spark.sparkContext.addSparkListener(listener)
     try {
       // over-maxKeys UNFILTERED dim: stored NDV (≈500 > 100) refuses
       // the route before the dim subplan ever runs — ANALYSIS of the
       // join launches zero Spark jobs (without stats it would pay a
       // bounded dim collect just to discover the overflow)
-      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
-      jobs.set(0)
-      val refused = spark.sql(
-        s"SELECT k, v, tag FROM $fact JOIN $big ON k = dk")
-      refused.queryExecution.assertAnalyzed()
-      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
-      assert(jobs.get() === 0,
+      val (refused, refusedJobs) =
+        graft.SparkJobs.count(spark.sparkContext) {
+          val df = spark.sql(
+            s"SELECT k, v, tag FROM $fact JOIN $big ON k = dk")
+          df.queryExecution.assertAnalyzed()
+          df
+        }
+      assert(refusedJobs === 0,
         "stored-NDV refuse must not run any pre-plan job")
       assert(refused.inputFiles.count(_.contains("/fact/")) === allFiles,
         "refused route keeps the scan-all fact read")
@@ -593,12 +587,10 @@ class GraftSqlSpec extends SparkSuite {
         "USING graft")
       spark.sql(s"INSERT INTO $noStats SELECT id, concat('t', id) " +
         "FROM range(500)")
-      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
-      jobs.set(0)
-      spark.sql(s"SELECT k, v, tag FROM $fact JOIN $noStats ON k = dk")
-        .queryExecution.assertAnalyzed()
-      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
-      assert(jobs.get() > 0,
+      val (_, probeJobs) = graft.SparkJobs.count(spark.sparkContext)(
+        spark.sql(s"SELECT k, v, tag FROM $fact JOIN $noStats ON k = dk")
+          .queryExecution.assertAnalyzed())
+      assert(probeJobs > 0,
         "without stored NDV the route must probe the dim (collect)")
       // a small analyzed NDV still routes: fact scans fewer files
       val routed = spark.sql(
@@ -614,7 +606,6 @@ class GraftSqlSpec extends SparkSuite {
         "a filtered dim side must ignore the whole-table NDV")
       assert(filtered.count() === 20L)
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.graft.runtimeJoinPrune")
       spark.conf.unset("spark.graft.runtimeJoinPrune.maxKeys")
     }
@@ -878,22 +869,13 @@ class GraftSqlSpec extends SparkSuite {
       .loadTable(ns, "hlegacy")
     val allFiles = t.read().inputFiles.length
     import org.apache.spark.sql.functions.col
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val pruned = try {
+    val (pruned, jobs) = graft.SparkJobs.count(spark.sparkContext) {
       val df = t.readWhere(
         col("day") === java.sql.Date.valueOf("2024-01-02") &&
           col("bucket") === 2)
-      val files = df.inputFiles.length
-      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
-      (df, files)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() === 0,
+      (df, df.inputFiles.length)
+    }
+    assert(jobs === 0,
       "manifest-tuple pruning must plan without running jobs")
     assert(pruned._2 < allFiles / 3,
       s"day+bucket predicate must prune (${pruned._2} of $allFiles)")

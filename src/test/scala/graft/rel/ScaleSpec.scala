@@ -135,4 +135,71 @@ class ScaleSpec extends SparkSuite {
     assert(two === one,
       "two-level K-smallest must equal the global K-smallest per slice")
   }
+
+  /** 1M hashes over slices s0-s3 with duplicates (600k distinct keys)
+    * and nulls, a 100-key slice, and an all-null slice. */
+  private def bottomKInput(parts: Int) = {
+    val h = conv(substring(md5(pmod(col("id"), lit(600000L))
+      .cast("string")), 1, 15), 16, 10).cast("long")
+    spark.range(0, 1000000L, 1, parts)
+      .select(
+        when(col("id") < 100, lit("tiny"))
+          .when(col("id") < 200, lit("nulls"))
+          .otherwise(concat(lit("s"), pmod(col("id"), lit(4)))).as("slice"),
+        when(col("id").between(100, 199) || pmod(col("id"), lit(97)) === 0,
+          lit(null).cast("long")).otherwise(h).as("h"))
+  }
+
+  private def bottomKBySlice(df: org.apache.spark.sql.DataFrame, k: Int)
+      : Map[String, Seq[Long]] =
+    df.groupBy("slice").agg(Kmv.bottomK(col("h"), k)).collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1).toList).toMap
+
+  test("Kmv.bottomK equals the kSmallest ladder over the distinct " +
+    "non-null input at 1M keys, with duplicates, nulls and groups " +
+    "smaller than k") {
+    val in = bottomKInput(16)
+    for (k <- Seq(2, 256)) {
+      val ladder = Kmv.kSmallest(in.where(col("h").isNotNull).distinct(),
+        k, Seq("slice")).collect()
+        .groupBy(_.getString(0))
+        .map { case (s, rs) => s -> rs.map(_.getLong(1)).sorted.toList }
+      val got = bottomKBySlice(in, k)
+      assert(got("nulls") === Nil, "an all-null group keeps nothing")
+      assert(got.removed("nulls") === ladder, s"k=$k")
+      assert(got("tiny").size === (if (k == 2) 2 else 98),
+        "a group smaller than k keeps all of its distinct values")
+    }
+  }
+
+  test("Kmv.BottomK's buffer never holds more than k values, through " +
+    "reduce and merge") {
+    val k = 8
+    val agg = new Kmv.BottomK(k)
+    val rnd = new scala.util.Random(7)
+    val values = Seq.fill(5000)(rnd.nextInt(3000).toLong - 1000L)
+    val parts = values.grouped(700).map { vs =>
+      vs.foldLeft(agg.zero) { (b, v) =>
+        val out = agg.reduce(b, v)
+        assert(out.length <= k)
+        assert(out.toSeq === out.toSeq.distinct.sorted)
+        out
+      }
+    }.toSeq
+    val merged = parts.reduce { (a, b) =>
+      val out = agg.merge(a, b)
+      assert(out.length <= k)
+      out
+    }
+    assert(agg.reduce(merged, null) eq merged, "a null changes nothing")
+    assert(agg.finish(merged).toSeq === values.distinct.sorted.take(k))
+  }
+
+  test("Kmv.bottomK does not depend on partitioning (the merge law)") {
+    val want = bottomKBySlice(bottomKInput(16), 256)
+    for (parts <- Seq(1, 7)) {
+      val in = bottomKInput(16).repartition(parts, rand(parts))
+      assert(bottomKBySlice(in, 256) === want, s"$parts partitions")
+    }
+  }
 }
