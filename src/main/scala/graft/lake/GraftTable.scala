@@ -25,17 +25,17 @@ import org.apache.spark.sql.catalyst.plans.logical
   *   - rewritePositionDeleteFiles → D14 (demo.py:437-447)
   *   - metadata tables    → S3/D15 (demo.py:120,205; file_summary_utils.py)
   *
-  * MOR reads apply position deletes with an anti-join on the Parquet
-  * source's (_metadata.file_path, _metadata.row_index) — positions are
-  * captured from the same metadata columns at delete time, so they
-  * stay consistent (SURVEY.md §7 "hard parts").
+  * MOR reads mask deleted rows with one per-task predicate
+  * ([[DeleteFilter]]) over the Parquet source's (_metadata.file_path,
+  * _metadata.row_index) — positions are captured from the same
+  * metadata columns at delete time, so they stay consistent (SURVEY.md
+  * §7 "hard parts"). The plan carries delete-file paths, not rows.
   *
   * Scale design: file pruning happens BEFORE plan construction — the
   * manifest's per-file min/max stats select the Parquet file list, then
-  * Catalyst handles pushdown inside the scan. Delete sides of anti-joins
-  * are broadcast when small. All data movement is DataFrame jobs; the
-  * only driver-side state is the manifest (O(files), the same scaling
-  * assumption Iceberg's planner makes).
+  * Catalyst handles pushdown inside the scan. All data movement is
+  * DataFrame jobs; the only driver-side state is the manifest
+  * (O(files), the same scaling assumption Iceberg's planner makes).
   */
 class GraftTable(val spark: SparkSession, val root: Path,
     val commit: CommitProvider = LocalCommitProvider)
@@ -69,66 +69,6 @@ class GraftTable(val spark: SparkSession, val root: Path,
     Either[Seq[ManifestEntry], Seq[ManifestSegmentRef]]](64)
   private val segmentCache =
     GraftTable.lruCache[String, Seq[ManifestEntry]](128)
-  private val posDeleteCache =
-    GraftTable.lruCache[String, Seq[(String, Long)]](64)
-  private val eqKeyCache =
-    GraftTable.lruCache[String, Seq[Any]](64)
-
-  /** Driver-side parse of one single-column equality-delete file's key
-    * values (gated like readPosDeletesLocal on manifest record counts;
-    * cached — delete files are immutable). NULL keys are dropped: an
-    * equality delete can never match NULL (same as the join path). */
-  private def readEqKeysLocal(absPath: String, column: String,
-      dt: DataType): Seq[Any] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(absPath))
-      .withConf(spark.sessionState.newHadoopConf())
-      .build()
-    try {
-      val buf = Seq.newBuilder[Any]
-      var g = reader.read()
-      while (g != null) {
-        if (g.getFieldRepetitionCount(column) > 0) buf += (dt match {
-          case LongType => g.getLong(column, 0)
-          case IntegerType => g.getInteger(column, 0)
-          case StringType => g.getBinary(column, 0).toStringUsingUTF8
-          case other => throw new IllegalStateException(
-            s"unsupported inline eq-delete key type $other")
-        })
-        g = reader.read()
-      }
-      buf.result()
-    } finally reader.close()
-  }
-
-  /** Driver-side parse of one position-delete file's (file_path, pos)
-    * rows — used only when the manifest record counts prove the delete
-    * set is metadata-sized (MaxInlineDeleteRows), so the rows can fold
-    * into the read plan as a literal filter. Same parquet-java reader
-    * family as `statEntriesViaFooters`; results cache (delete files
-    * are immutable). */
-  private def readPosDeletesLocal(absPath: String): Seq[(String, Long)] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(absPath))
-      .withConf(spark.sessionState.newHadoopConf())
-      .build()
-    try {
-      val buf = Seq.newBuilder[(String, Long)]
-      var g = reader.read()
-      while (g != null) {
-        buf += ((g.getBinary("file_path", 0).toStringUsingUTF8,
-          g.getLong("pos", 0)))
-        g = reader.read()
-      }
-      buf.result()
-    } finally reader.close()
-  }
 
   private def metaAt(v: Int): TableMeta =
     metaCache.computeIfAbsent(v, _ => Json.readTableMeta(
@@ -2077,25 +2017,14 @@ class GraftTable(val spark: SparkSession, val root: Path,
             removedData ++ parentEntries.filter(_.content != 0)),
             "delete"))
         // position deletes name their victims as (file, pos): scan only
-        // the referenced data files and inner-join the tombstones
+        // the data files the delete files' file_path bounds admit (all
+        // of them when a delete file carries no bounds) and keep the
+        // rows the delete filter over just the ADDED files marks.
+        // Stat truncation only widens a window, so the bound is
+        // conservative; no Spark job runs before the read itself.
         val posDeletes =
           if (addedPosDel.isEmpty) Nil
           else {
-            // manifest-backed scan with the fixed delete layout:
-            // delete files are our own writes — inference would run a
-            // footer Spark job per window (changes() is called per CDC
-            // micro-batch), and the manifest already knows the sizes
-            val delDf = org.apache.spark.sql.graft.ManifestRead.parquet(
-              spark, addedPosDel.map(absSized),
-              StructType.fromDDL("file_path STRING, pos BIGINT"))
-            // manifest min/max stats on the delete files' file_path
-            // column bound the referenced paths: a data file whose
-            // every uri form falls outside every window can't be hit.
-            // Superset selection — the (file, pos) inner join below
-            // keeps the rows exact. (Parquet stat truncation only
-            // widens the window, so the bound stays conservative.)
-            // Saves a distinct+collect Spark job per snapshot window —
-            // changes() is called per micro-batch by the CDC stream.
             val ranges = addedPosDel.flatMap(_.stats.get("file_path"))
             // stats were ordered by UTF8String bytes — compare the same
             // way (String's UTF-16 order diverges on non-ASCII paths)
@@ -2103,21 +2032,13 @@ class GraftTable(val spark: SparkSession, val root: Path,
               org.apache.spark.unsafe.types.UTF8String.fromString(a)
                 .compareTo(
                   org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0
-            val targets =
-              if (ranges.size == addedPosDel.size)
-                parentEntries.filter(e => e.content == 0 &&
-                  Io.uriForms(abs(e)).exists(u =>
-                    ranges.exists(r => leq(r.min, u) && leq(u, r.max))))
-              else { // stats absent (imported files): exact discovery
-                val referenced = delDf.select("file_path").distinct()
-                  .collect().map(_.getString(0)).toSet
-                parentEntries.filter(e => e.content == 0 &&
-                  Io.uriForms(abs(e)).exists(referenced))
-              }
-            val rows = readWithLineage(targets.filter(_.content == 0))
-            Seq(tag(rows.join(delDf,
-              rows(FileCol) === delDf("file_path") &&
-                rows(PosCol) === delDf("pos")), "delete"))
+            val rows = readWithLineage(parentEntries.filter(e =>
+              e.content == 0 && (ranges.size < addedPosDel.size ||
+                Io.uriForms(abs(e)).exists(u =>
+                  ranges.exists(r => leq(r.min, u) && leq(u, r.max))))))
+            Seq(tag(rows.filter(DeleteFilter(rows(FileCol), rows(PosCol),
+              Nil, DeleteSet(addedPosDel.map(abs), Nil, Nil, Map.empty,
+                DeleteFilter.sessionConf(spark)))), "delete"))
           }
         // equality deletes kill every visible parent row matching a key
         val eqDeletes = addedEqDel.groupBy(_.equalityColumns).toSeq
@@ -2269,174 +2190,79 @@ class GraftTable(val spark: SparkSession, val root: Path,
   }
 
   /** Live rows plus (file, position) lineage columns — the MOR read
-    * path; also what delete capture uses so positions always round-trip
-    * through the same _metadata columns. */
+    * path; also what delete capture and DML hit discovery use, so
+    * positions always round-trip through the same _metadata columns.
+    * Deletes apply as ONE [[DeleteFilter]] predicate over the scan,
+    * except equality sets whose key SHAPE it cannot carry. */
   private[lake] def readWithLineage(entries: Seq[ManifestEntry],
       sch: StructType = null,
       mapping: Map[String, String] = null): DataFrame = {
     val readSchema = Option(sch).getOrElse(schema)
     val m = Option(mapping).getOrElse(meta.physicalNames)
     val data = entries.filter(_.content == 0)
-    val posDel = entries.filter(_.content == 1)
-    val eqDel = entries.filter(_.content == 2)
     if (data.isEmpty)
       return emptyDfOf(readSchema)
         .withColumn(FileCol, lit(null).cast("string"))
         .withColumn(PosCol, lit(null).cast("long"))
     var df = scanParquet(data.map(absSized), readSchema, m, lineage = true)
-    if (posDel.nonEmpty) {
-      // metadata-sized delete sets (manifest record counts are exact)
-      // fold into the scan as a literal NOT-filter instead of an
-      // anti-join: no schema-inference pass over the delete files, no
-      // broadcast-build job, no join in the plan — each extra plan
-      // node costs ~60-70 ms of driver work per action, the dominant
-      // cost of small-table DML walks like q_lake_wap. Delete files
-      // are immutable (UUID names), so the driver-side parse caches.
-      // The filter costs one string-equality per DISTINCT deleted file
-      // per row, so it is additionally gated on the victim-file fanout
-      // — a delete set spraying hundreds of files pays less through
-      // the hashed anti-join than through a wide OR chain.
-      val inlinePairs =
-        if (posDel.map(_.recordCount).sum
-            <= GraftTable.MaxInlineDeleteRows)
-          Some(posDel.flatMap(e =>
-            posDeleteCache.computeIfAbsent(abs(e), readPosDeletesLocal)))
-            .filter(_.map(_._1).distinct.size <= 32)
-        else None
-      if (inlinePairs.isDefined) {
-        val pairs = inlinePairs.get
-        if (pairs.nonEmpty) {
-          val masked = pairs.groupBy(_._1).map { case (f, ps) =>
-            df(FileCol) === lit(f) &&
-              df(PosCol).isInCollection(ps.map(_._2))
-          }.reduce(_ || _)
-          df = df.filter(!masked)
-        }
-      } else {
-        val delDf = org.apache.spark.sql.graft.ManifestRead.parquet(
-          spark, posDel.map(absSized),
-          StructType.fromDDL("file_path STRING, pos BIGINT"))
-        val small = posDel.map(_.fileSizeBytes).sum < 64L * 1024 * 1024
-        val d = if (small) broadcast(delDf) else delDf
-        df = df.join(d,
-          df(FileCol) === d("file_path") && df(PosCol) === d("pos"),
-          "left_anti")
-      }
-    }
-    // equality deletes: anti-join on the identity columns — but only
-    // against rows from data files added BEFORE the delete (snapshot
-    // ids are time-ordered), matching Iceberg's sequence-number rule:
-    // a key re-inserted after the delete must be visible again.
-    // ONE anti-join per equality-column-set, regardless of how many
-    // delete snapshots accumulated: each row carries its data sequence
-    // (its file's addedSnapshotId, attached via a broadcast file→seq
-    // map — an equi-join, no UDF, plan size O(1) in file count), each
-    // delete key carries the NEWEST delete sequence for that key, and
-    // the join masks rows with rowSeq < max delete seq.
-    if (eqDel.nonEmpty) {
-      // equalityColumns (and the key files) use PHYSICAL names; the
-      // data frame surfaces logical names — bridge via the reverse map
-      val rev = m.map(_.swap)
-      val physS = physSchema(schema, m)
-      // metadata-sized SINGLE-COLUMN eq-delete sets fold into the scan
-      // as two map-literal lookups (key → newest delete seq, file →
-      // data seq) instead of the seq-attach join + per-set anti-join —
-      // the same plan-size cut as the position-delete fast path. Only
-      // atomic long/int/string keys qualify (map-literal keys must be
-      // exact); multi-column sets, big key sets, or many-file tables
-      // keep the distributed joins.
-      // the two map-literal lookups cost O(entries) string/key
-      // compares PER ROW (ArrayBasedMapData is a linear scan), so the
-      // inline form is additionally bounded by file count AND total
-      // data rows — a wide or deep table pays less through the hashed
-      // joins than through per-row literal-map scans
-      def inlineable(cols: Seq[String], files: Seq[ManifestEntry])
-          : Boolean =
-        cols.size == 1 &&
-          files.map(_.recordCount).sum <= GraftTable.MaxInlineDeleteRows &&
-          data.size <= 64 &&
-          data.map(_.recordCount).sum <= 262144 &&
-          physS.fields.find(_.name == cols.head).exists(_.dataType match {
-            case LongType | IntegerType | StringType => true
+    // equalityColumns (and the key files) use PHYSICAL names; the
+    // data frame surfaces logical names — bridge via the reverse map
+    val rev = m.map(_.swap)
+    def logical(c: String) = rev.getOrElse(c, c)
+    val (keyed, joined) = entries.filter(_.content == 2)
+      .groupBy(_.equalityColumns).toSeq.partition {
+        case (Seq(c), _) => readSchema.find(_.name == logical(c))
+          .exists(_.dataType match {
+            case ByteType | ShortType | IntegerType | LongType |
+                 StringType => true
             case _ => false
           })
-      val groups = eqDel.groupBy(_.equalityColumns).toSeq
-      val (inline, joined) = groups.partition { case (c, fs) =>
-        inlineable(c, fs)
+        case _ => false
       }
-      if (inline.nonEmpty) {
-        // file → data-seq map, shared by every inline set
-        val fileSeq: Map[String, Long] = data.flatMap(e =>
-          Io.uriForms(abs(e)).map(_ -> e.addedSnapshotId)).toMap
-        val fileSeqCol =
-          element_at(typedlit(fileSeq), df(FileCol))
-        for ((cols, files) <- inline) {
-          val c = cols.head
-          val dt = physS.fields.find(_.name == c).get.dataType
-          // newest delete seq per key, folded driver-side (key files
-          // are immutable → cached parses)
-          val keySeq: Map[Any, Long] = files
-            .flatMap(f => eqKeyCache
-              .computeIfAbsent(abs(f), p => readEqKeysLocal(p, c, dt))
-              .map(v => v -> f.addedSnapshotId))
-            .groupMapReduce(_._1)(_._2)(math.max)
-          val rowCol = df(rev.getOrElse(c, c))
-          val lookup = dt match {
-            case LongType => element_at(
-              typedlit(keySeq.map { case (k, v) =>
-                k.asInstanceOf[Long] -> v }), rowCol)
-            case IntegerType => element_at(
-              typedlit(keySeq.map { case (k, v) =>
-                k.asInstanceOf[Int] -> v }), rowCol)
-            case StringType => element_at(
-              typedlit(keySeq.map { case (k, v) =>
-                k.asInstanceOf[String] -> v }), rowCol)
-            case other => throw new IllegalStateException(
-              s"unreachable: $other gated by inlineable")
-          }
-          // coalesce: a row whose file misses the file→seq map yields
-          // NULL for fileSeqCol < lookup; the join path KEEPS such
-          // rows (a NULL SeqCol never matches the anti-join), so the
-          // inline path must too — not silently drop them.
-          df = df.filter(
-            !(lookup.isNotNull &&
-              coalesce(fileSeqCol < lookup, lit(false))))
-        }
-      }
-      if (joined.nonEmpty) {
-        val seqRows = data.flatMap(e =>
-          Io.uriForms(abs(e)).map(u => Row(u, e.addedSnapshotId)))
-        val seqDf = spark.createDataFrame(seqRows.asJava, StructType(Seq(
+    // each row's data sequence is its file's addedSnapshotId, under
+    // every spelling _metadata.file_path may use (the %20 law)
+    lazy val dataSeq = data.flatMap(e =>
+      Io.uriForms(abs(e)).map(_ -> e.addedSnapshotId)).toMap
+    val posDel = entries.filter(_.content == 1).map(abs)
+    if (posDel.nonEmpty || keyed.nonEmpty)
+      df = df.filter(!DeleteFilter(df(FileCol), df(PosCol),
+        keyed.map { case (cols, _) => df(logical(cols.head)) },
+        DeleteSet(posDel,
+          keyed.map(_._2.map(f => abs(f) -> f.addedSnapshotId)),
+          keyed.map(_._1.head),
+          if (keyed.isEmpty) Map.empty else dataSeq,
+          DeleteFilter.sessionConf(spark))))
+    // other key shapes: ONE anti-join per column set against the
+    // newest delete seq per key tuple (Spark picks the join strategy
+    // from the key set's size); rows carry their data sequence via a
+    // broadcast file → seq equi-join (a NULL seq never matches)
+    if (joined.nonEmpty) {
+      val seqDf = spark.createDataFrame(dataSeq.toSeq.map { case (u, s) =>
+        Row(u, s) }.asJava, StructType(Seq(
           StructField("__graft_seq_file", StringType),
           StructField(SeqCol, LongType))))
-        df = df.join(broadcast(seqDf),
-          df(FileCol) === col("__graft_seq_file"),
-          "left").drop("__graft_seq_file")
-        for ((cols, files) <- joined) {
-          val perFile = files.map { f =>
-            // per-file footer schema read driver-side — skips the
-            // footer-inference Spark job per key file (and preserves
-            // each file's exact written types across schema drift);
-            // manifest-backed scan skips the path stats too
-            org.apache.spark.sql.graft.ManifestRead.parquet(
-              spark, Seq(absSized(f)),
-              GraftTable.inferParquetSchema(spark,
-                Seq(java.nio.file.Paths.get(abs(f)))))
-              .select(cols.map(c => col(c).as(s"__k_$c")): _*)
-              .withColumn("__k_seq", lit(f.addedSnapshotId))
-          }
-          val keys = perFile.reduce(_ unionByName _)
-            .groupBy(cols.map(c => col(s"__k_$c")): _*)
-            .agg(max(col("__k_seq")).as("__k_seq"))
-          val small = files.map(_.fileSizeBytes).sum < 64L * 1024 * 1024
-          val cond = cols.map(c =>
-            df(rev.getOrElse(c, c)) === keys(s"__k_$c")).reduce(_ && _) &&
-            col(SeqCol) < keys("__k_seq")
-          df = df.join(if (small) broadcast(keys) else keys, cond,
-            "left_anti")
+      df = df.join(broadcast(seqDf),
+        df(FileCol) === col("__graft_seq_file"),
+        "left").drop("__graft_seq_file")
+      for ((cols, files) <- joined) {
+        val perFile = files.map { f =>
+          // driver-side footer schema (no inference job, each file's
+          // own written types); manifest-backed scan (no path stats)
+          org.apache.spark.sql.graft.ManifestRead.parquet(
+            spark, Seq(absSized(f)),
+            GraftTable.inferParquetSchema(spark,
+              Seq(java.nio.file.Paths.get(abs(f)))))
+            .select(cols.map(c => col(c).as(s"__k_$c")): _*)
+            .withColumn("__k_seq", lit(f.addedSnapshotId))
         }
-        df = df.drop(SeqCol)
+        val keys = perFile.reduce(_ unionByName _)
+          .groupBy(cols.map(c => col(s"__k_$c")): _*)
+          .agg(max(col("__k_seq")).as("__k_seq"))
+        val cond = cols.map(c => df(logical(c)) === keys(s"__k_$c"))
+          .reduce(_ && _) && col(SeqCol) < keys("__k_seq")
+        df = df.join(keys, cond, "left_anti")
       }
+      df = df.drop(SeqCol)
     }
     df
   }
@@ -5174,12 +5000,6 @@ final class UnknownRefException(val refName: String)
   extends IllegalArgumentException(s"unknown ref $refName")
 
 object GraftTable {
-  /** Position-delete sets at or below this many rows (by exact
-    * manifest record counts) apply as a literal scan filter instead of
-    * an anti-join — see readWithLineage. Bounds driver memory AND plan
-    * size; bigger MOR backlogs keep the distributed anti-join. */
-  private[lake] val MaxInlineDeleteRows = 4096L
-
   /** The KMV estimator over a stored sketch: exact passthrough below
     * k, else (k-1)·2^60 div theta — the same integer form
     * [[graft.rel.Kmv.estimate]] pins against the DuckDB oracle.

@@ -251,7 +251,7 @@ object LakeQueries extends QueryCatalog {
 
   /** D8 equality-delete flavor (content=2): rows masked by key tuples,
     * no position capture needed — the write is O(|keys|), all masking
-    * cost moves to the read-side anti-join. */
+    * cost moves to the read-side delete filter. */
   /** Equality delete ORACLED (r16 — converted from the 3-row demo
     * walk, whose shape GraftTableSpec keeps pinning): the production
     * form — delete KEYS arrive as a DATASET (every custkey an orders
@@ -2176,7 +2176,7 @@ object LakeQueries extends QueryCatalog {
     * NOT filter. All-integer math (cents columns as BIGINT), so the
     * lake write→MOR-mask→read→aggregate path is hash-checked with
     * zero float tolerance. Scale shape: one slice write, one MOR
-    * delete (anti-join masking is the 100 TB path), one partial-agg'd
+    * delete (masked at read by the delete filter), one partial-agg'd
     * groupBy over 6 groups. */
   private val lakePricing = Q(
     "q_lake_pricing_summary",
@@ -2566,7 +2566,7 @@ object LakeQueries extends QueryCatalog {
     * UPDATE onto the COW path, and the SELECT plans through the V2
     * relation substitution. All-integer cents math, so the hash check
     * has zero float tolerance. Scale shape: identical to
-    * q_lake_pricing_summary (one slice write, one MOR anti-join mask,
+    * q_lake_pricing_summary (one slice write, one MOR delete mask,
     * one COW rewrite bounded to files whose stats admit disc_c=0,
     * partial-agg'd 6-group aggregate). */
   private val sqlPricing = Q(

@@ -291,8 +291,8 @@ object Io {
     * Includes the URL-encoded URI forms (`Path.toUri`): Spark spells
     * `_metadata.file_path` with URI escaping, so a warehouse path
     * containing a space arrives as `%20` — without these forms the MOR
-    * anti-join condition would evaluate to null and deleted rows would
-    * silently resurface. */
+    * delete filter would find no data sequence for the file and
+    * equality-deleted rows would silently resurface. */
   def uriForms(path: String): Seq[String] = {
     val encoded = Path.of(path).toUri.toString // file:///a/b%20c/d.parquet
     val encodedShort = encoded.replaceFirst("^file:///", "file:/")

@@ -22,7 +22,7 @@ import graft.lake.GraftTable
   *
   * Reads: every `DataSourceV2Relation(GraftSqlTable)` is replaced with
   * the COMPOSED Spark plan from GraftTable.read() — manifest-selected
-  * parquet scans plus MOR delete anti-joins — re-aliased to the
+  * parquet scans plus the MOR delete filter — re-aliased to the
   * relation's attribute ids. Catalyst then optimizes ordinary parquet
   * relations: pushdown, pruning, and whole-stage codegen all apply, and
   * nothing re-implements a reader.

@@ -31,7 +31,7 @@ import graft.lake.GraftTable
   *
   * Reads are NOT served by a custom PartitionReader: GraftSqlResolution
   * replaces this relation with the composed Spark plan from
-  * GraftTable.read() (manifest-pruned parquet scans + MOR anti-joins),
+  * GraftTable.read() (manifest-pruned parquet scans + the MOR delete filter),
   * so Catalyst sees ordinary parquet relations and keeps pushdown,
   * pruning, and whole-stage codegen. The ScanBuilder below exists only
   * to satisfy the interface and fails loudly if the rule is missing.

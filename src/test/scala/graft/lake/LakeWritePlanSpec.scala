@@ -189,30 +189,46 @@ class LakeWritePlanSpec extends SparkSuite {
     assert(got.map(_._1).toSeq === Seq("k-00002", "k-00003"))
     assert(got.toMap.apply("k-00002") === "v3",
       "latest re-insert must win over older equality deletes")
-    // 4 delete snapshots, same column set, metadata-sized keys →
-    // the whole set folds into ONE map-literal scan filter (round 9's
-    // inline fast path): no anti-join, no seq-attach join, just two
-    // element_at lookups (key → newest delete seq, file → data seq)
-    val plan = t.read().queryExecution.optimizedPlan.toString
-    assert(!plan.contains("LeftAnti"),
-      s"inline eq-delete path must not plan an anti-join\n$plan")
-    assert(!plan.contains("Join"),
-      s"inline eq-delete path must not plan any join\n$plan")
-    val lookups = "element_at".r.findAllIn(plan).size
-    assert(lookups >= 2,
-      s"expected the two map-literal lookups in the filter\n$plan")
-    // a key set past the inline bound still collapses to ONE anti-join
+    // 4 delete snapshots, same column set → ONE delete-filter
+    // predicate over the scan (key → newest delete seq, file → data
+    // seq, evaluated per task): no anti-join, no seq-attach join
+    def assertJoinFree(): Unit = {
+      val plan = t.read().queryExecution.optimizedPlan.toString
+      assert(!plan.contains("Join"),
+        s"eq-delete read must not plan any join\n$plan")
+      assert("graft_deleted".r.findAllIn(plan).size === 1,
+        s"expected the one delete-filter predicate\n$plan")
+    }
+    assertJoinFree()
+    // a 5,000-key set plans the same: the shape never depends on size
     val big = spark.createDataFrame(
       (0 until 5000).map(i => Row(f"x-$i%05d")).asJava,
       StructType.fromDDL("case_id STRING"))
     t.equalityDelete(big)
     t.equalityDelete(key("k-00003"))
-    val plan2 = t.read().queryExecution.optimizedPlan.toString
-    assert("LeftAnti".r.findAllIn(plan2).size === 1,
-      s"expected 1 anti-join once keys exceed the inline bound\n$plan2")
+    assertJoinFree()
     assert(t.read().collect().map(_.getString(0)).toSeq ===
       Seq("k-00002"),
-      "join path must drop k-00003 and keep the re-inserted k-00002")
+      "must drop k-00003 and keep the re-inserted k-00002")
+  }
+
+  test("a 5,000-row position delete reads through the delete filter: " +
+    "no join, no broadcast") {
+    val t = newTable(Map("write.delete.mode" -> "merge-on-read"))
+    t.append(spark.range(20000).selectExpr(
+      "format_string('p-%05d', id) AS case_id", "'x' AS payload")
+      .repartition(2))
+    t.delete(col("case_id") < "p-05000")
+    assert(t.currentSnapshot.map(t.manifestOf).get
+      .filter(_.content == 1).map(_.recordCount).sum === 5000)
+    val read = t.read()
+    val plan = read.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("Join") && plan.contains("graft_deleted"),
+      s"position deletes must apply as the delete filter\n$plan")
+    assert(!read.queryExecution.executedPlan.toString
+      .contains("BroadcastExchange"))
+    assert(read.count() === 15000)
+    assert(read.filter(col("case_id") < "p-05000").count() === 0)
   }
 
   test("write.bloom-columns writes parquet bloom filters under the " +
