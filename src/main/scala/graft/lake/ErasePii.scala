@@ -1,13 +1,19 @@
 package graft.lake
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** D17 — the reference's lost `pii_utils.delete_pii` module
   * (notebooks/utils/__init__.py:8 imports it; the file is gone) restored
-  * as a first-class API, composing the lifecycle exactly as the demo
-  * walks it (README.md:49-59): erase → compact → expire → sweep orphans,
-  * after which the PII is unreachable from any snapshot AND physically
-  * gone from storage.
+  * as a first-class API. The demo (README.md:49-59) walks a permanent
+  * erase as four separate steps: erase, compact, expire, sweep
+  * orphans. Here the erase is applied inside the compaction, which
+  * has to rewrite every data file anyway: one read and one write of
+  * the data files and one `delete`/`overwrite` commit, which also
+  * refolds the NDV sketches. One expiry commit then drops every older
+  * snapshot and metadata version, and the orphan sweep follows. No
+  * delete file is written. Afterwards the PII is unreachable from any
+  * snapshot and physically gone from storage, sketch hashes included.
   */
 object ErasePii {
 
@@ -18,39 +24,49 @@ object ErasePii {
   case object DeleteRow extends Mode
 
   /** Erase one record's PII and, if `permanent`, scrub history so no
-    * snapshot / data file / delete file still carries it. `keyValue`
-    * takes any literal-able value (String case ids, Long custkeys) so
-    * the predicate is TYPED — a string against a numeric key would
-    * ride implicit coercion and defeat stats pruning on the erase's
-    * discovery scan. A permanent erase on a `gc.enabled=false` table
-    * (a snapshot fork) refuses before its first commit: expiry could
-    * not finish it, and a half-done erase would leave the PII in
-    * history while the table already shows it gone. */
+    * snapshot / data file / delete file / metadata version still
+    * carries it. `keyValue` takes any literal-able value (String case
+    * ids, Long custkeys) so the predicate is TYPED — a string against a
+    * numeric key would ride implicit coercion and defeat stats pruning
+    * on a non-permanent erase's discovery scan. A permanent erase
+    * refuses before its first commit when it could not finish: on a
+    * `gc.enabled=false` table (a snapshot fork) expiry could not run,
+    * and a NullifyColumns of an unknown column fails as `update` does.
+    * A non-permanent erase is plain DML (`delete` / `update`, honoring
+    * the table's write modes) and leaves history alone. */
   def run(table: GraftTable, keyColumn: String, keyValue: Any,
       mode: Mode, permanent: Boolean = true): Unit = {
-    if (permanent) table.requireGcEnabled("permanently erase PII")
     val pred = col(keyColumn) === lit(keyValue)
-    mode match {
-      case NullifyColumns(cols) =>
-        table.update(pred, cols.map(_ -> lit(null)).toMap)
-      case DeleteRow =>
-        table.delete(pred)
-    }
-    if (permanent) {
-      // demo.py:419-447: apply MOR deletes + drop rewritten files; the
-      // same commit refolds the NDV sketches of the erased columns so
-      // the current metadata keeps no hash of the erased values
-      val erased = mode match {
-        case NullifyColumns(cols) => cols
-        case DeleteRow => table.schema.fieldNames.toSeq
+    if (!permanent) {
+      mode match {
+        case NullifyColumns(cols) =>
+          table.update(pred, cols.map(_ -> lit(null)).toMap)
+        case DeleteRow =>
+          table.delete(pred)
       }
-      table.rewriteDataFilesErasing(Map("rewrite-all" -> "true",
-        "target-file-size-bytes" -> (128L * 1024 * 1024).toString), erased)
-      table.rewritePositionDeleteFiles()
-      // demo.py:289-296: history must stop resolving pre-erase snapshots
-      table.expireSnapshots(olderThanMs = System.currentTimeMillis() + 1)
-      // cleanup_utils.py:49-67: force-sweep whatever became unreferenced
-      table.removeOrphanFiles(System.currentTimeMillis() + 1, force = true)
+      return
     }
+    table.requireGcEnabled("permanently erase PII")
+    val bind = (_: DataFrame) => pred
+    // the same row transforms the COW DML paths write with
+    val erase = mode match {
+      case NullifyColumns(cols) =>
+        GraftTable.Erase(table.updateTransform(bind,
+          cols.map(c => c -> ((_: DataFrame) => lit(null))).toMap),
+          "overwrite", cols)
+      case DeleteRow =>
+        GraftTable.Erase(table.deleteTransform(bind), "delete",
+          table.schema.fieldNames.toSeq)
+    }
+    // demo.py:419-447: one rewrite of every data file applies the
+    // erase and every accumulated delete
+    table.rewriteDataFilesErasing(Map("rewrite-all" -> "true",
+      "target-file-size-bytes" -> (128L * 1024 * 1024).toString),
+      Some(erase))
+    // demo.py:289-296: history must stop resolving pre-erase snapshots
+    // and pre-erase metadata versions
+    table.expireSnapshotsErasing()
+    // cleanup_utils.py:49-67: force-sweep whatever became unreferenced
+    table.removeOrphanFiles(System.currentTimeMillis() + 1, force = true)
   }
 }

@@ -74,7 +74,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     metaCache.computeIfAbsent(v, _ => Json.readTableMeta(
       Files.readString(metadataDir.resolve(s"v$v.metadata.json"))))
 
-  def meta: TableMeta = metaAt(version)
+  def meta: TableMeta = captureBase().meta
 
   /** The metadata version an operation started from. Every write
     * captures one Base up front and publishes `base.version + 1`
@@ -93,7 +93,14 @@ class GraftTable(val spark: SparkSession, val root: Path,
 
   private def captureBase(): Base = {
     val v = version
-    Base(v, metaAt(v))
+    try Base(v, metaAt(v))
+    catch {
+      // a permanent erase deletes every version below its own right
+      // after publishing it, so a hint read just before names a
+      // deleted file; the re-read hint names the erase's version
+      case _: java.nio.file.NoSuchFileException if version != v =>
+        captureBase()
+    }
   }
 
   def schema: StructType = StructType.fromDDL(meta.schemaDdl)
@@ -766,8 +773,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * committed after `base` was captured — including one that landed
     * while this operation's Spark write jobs were running. The loser
     * must re-read the table and retry; only the winner advances the
-    * pointer. */
-  private def commitMeta(base: Base, m: TableMeta): Unit = {
+    * pointer. `trimHistory` (the last commit of a permanent erase,
+    * [[expireSnapshotsErasing]]) cuts the metadata log down to this
+    * version and deletes every older version file: they still carry
+    * the erased values' NDV-sketch hashes. */
+  private def commitMeta(base: Base, m: TableMeta,
+      trimHistory: Boolean = false): Unit = {
     val v = base.version + 1
     val file = s"v$v.metadata.json"
     // Iceberg metadata-version retention: with delete-after-commit
@@ -782,9 +793,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
       "write.metadata.delete-after-commit.enabled", "false").toBoolean
     val keep = m.properties.getOrElse(
       "write.metadata.previous-versions-max", "100").toInt.max(1)
-    val fullLog = m.metadataLog :+ MetadataLogEntry(now(), s"metadata/$file")
+    val entry = MetadataLogEntry(now(), s"metadata/$file")
+    val fullLog = m.metadataLog :+ entry
     val logged = m.copy(metadataLog =
-      if (deleteOld) fullLog.takeRight(keep + 1) else fullLog)
+      if (trimHistory) Seq(entry)
+      else if (deleteOld) fullLog.takeRight(keep + 1)
+      else fullLog)
     if (!commit.publishNew(metadataDir.resolve(file), Json.write(logged)))
       throw new java.util.ConcurrentModificationException(
         s"commit conflict on $name: metadata v$v was published by " +
@@ -805,7 +819,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
           "table and retry the operation")
     }
     commit.overwrite(hintFile, v.toString)
-    if (deleteOld) {
+    // the hint now names v, so no version below it is current; a slow
+    // writer that then wins a deleted token hits the guard above
+    if (trimHistory)
+      Io.listRecursive(metadataDir).filter(p =>
+        metadataVersionOf(p).exists(_ < v)).foreach(Files.deleteIfExists(_))
+    else if (deleteOld) {
       // walk down from the newest version that just fell out of the
       // window and stop at the first gap — incremental O(1) per commit
       // once steady, and the walk clears any pre-enable backlog once
@@ -813,6 +832,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
       while (k >= 0 && Files.deleteIfExists(
           metadataDir.resolve(s"v$k.metadata.json"))) k -= 1
     }
+  }
+
+  /** N of a `vN.metadata.json` version file; None for any other file
+    * (the version hint, manifest lists, segments). */
+  private def metadataVersionOf(p: Path): Option[Long] = {
+    val nm = p.getFileName.toString
+    if (nm.matches("v\\d+\\.metadata\\.json"))
+      Some(nm.stripPrefix("v").stripSuffix(".metadata.json").toLong)
+    else None
   }
 
   /** Commit a new snapshot: write its manifest list, then the metadata.
@@ -1392,8 +1420,11 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * Spark jobs; else one bottom-k pass over just-written bytes); any
     * other row-changing commit (deletes, overwrites, branch appends
     * landing via fast_forward, cherry-picks) flips the `stale` flag
-    * `.stats` surfaces, except a permanent [[ErasePii]] erase, whose
-    * rewrite commit refolds the sketches fresh. While fresh the
+    * `.stats` surfaces, except a permanent [[ErasePii]] erase: the
+    * rewrite that applies it (a `delete` or `overwrite` commit)
+    * refolds the sketches fresh from the rewritten files, and its
+    * expiry deletes every older metadata version, so no stored sketch
+    * keeps an erased value's hash. While fresh the
     * estimate is the exact-merge value (an upper bound once rows were
     * masked); while stale it may be off in either direction until
     * re-analyzed. Consumers:
@@ -2725,13 +2756,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
       claimKey: Option[String]): Option[SnapshotMeta] =
     if (properties.getOrElse("write.delete.mode", "copy-on-write")
         == "merge-on-read") morDelete(bind, claimKey = claimKey)
-    // keep rows where pred is NOT TRUE — a bare !pred drops
-    // pred-evaluates-to-NULL rows, silently deleting rows the
-    // predicate never matched (the MOR path has always kept them:
-    // filter(pred) doesn't hit on NULL)
-    else cowRewrite(bind,
-      rows => rows.filter(!(bind(rows) <=> lit(true))), "delete",
-      claimKey)
+    else cowRewrite(bind, deleteTransform(bind), "delete", claimKey)
+
+  /** The rows a DELETE keeps: those where the predicate is NOT TRUE —
+    * a bare !pred drops pred-evaluates-to-NULL rows, silently deleting
+    * rows the predicate never matched (the MOR path has always kept
+    * them: filter(pred) doesn't hit on NULL). */
+  private[lake] def deleteTransform(
+      bind: DataFrame => Column): DataFrame => DataFrame =
+    rows => rows.filter(!(bind(rows) <=> lit(true)))
 
   /** D7 UPDATE ... SET — honors `write.update.mode` (demo.py:228-235
     * runs copy-on-write). `set` maps column name → new value expression
@@ -2752,7 +2785,10 @@ class GraftTable(val spark: SparkSession, val root: Path,
     else cowRewrite(bind, transform, "overwrite", claimKey)
   }
 
-  private def updateTransform(bind: DataFrame => Column,
+  /** The rows an UPDATE writes: `set` applied where `bind` holds,
+    * cast to the column types. Unknown columns refuse here, before
+    * any read or commit. */
+  private[lake] def updateTransform(bind: DataFrame => Column,
       set: Map[String, DataFrame => Column]): DataFrame => DataFrame = {
     require(set.keySet.subsetOf(schema.fieldNames.toSet),
       s"unknown columns: ${set.keySet -- schema.fieldNames}")
@@ -2780,8 +2816,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val bind = (_: DataFrame) => pred
     if (properties.getOrElse("write.delete.mode", "copy-on-write")
         == "merge-on-read") morDelete(bind, Some(branch))
-    else cowRewriteOn(Some(branch), bind,
-      rows => rows.filter(!(pred <=> lit(true))), "delete")
+    else cowRewriteOn(Some(branch), bind, deleteTransform(bind), "delete")
   }
 
   def updateOnBranch(branch: String, pred: Column,
@@ -3514,7 +3549,19 @@ class GraftTable(val spark: SparkSession, val root: Path,
         "lose history)")
 
   def expireSnapshots(olderThanMs: Long = now(), retainLast: Int = 1)
-      : Seq[Long] = {
+      : Seq[Long] = expire(olderThanMs, retainLast, trimHistory = false)
+
+  /** [[expireSnapshots]] as the last commit of a permanent erase
+    * ([[ErasePii]]): every snapshot but the head (and ref-pinned ones)
+    * expires, and the same commit deletes every older metadata
+    * version (see [[commitMeta]]), so no `vN.metadata.json` written
+    * before the erase keeps the erased values' sketch hashes. It
+    * commits even when no snapshot expires: the trim is the point. */
+  private[lake] def expireSnapshotsErasing(): Seq[Long] =
+    expire(now() + 1, retainLast = 1, trimHistory = true)
+
+  private def expire(olderThanMs: Long, retainLast: Int,
+      trimHistory: Boolean): Seq[Long] = {
     requireGcEnabled("expire snapshots")
     val b = captureBase()
     val m = b.meta
@@ -3541,19 +3588,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
       ++ m.snapshots.sortBy(_.timestampMs).takeRight(retainLast)
         .map(_.snapshotId)).toSet
     val (retained, removed) = m.snapshots.partition(s => keepIds(s.snapshotId))
-    if (removed.isEmpty && lapsedRefs.isEmpty) return Nil
-    if (removed.isEmpty) { // only refs lapsed: commit the ref drop
-      commitMeta(b, m.copy(refs = liveRefs))
-      return Nil
-    }
+    if (removed.isEmpty && lapsedRefs.isEmpty && !trimHistory) return Nil
     // Iceberg's ordering: swap the metadata FIRST, physically delete
     // only after the trimmed snapshot list is durably published. A
     // crash (or losing the commit race) in between leaves unreferenced
     // files for remove_orphan_files — never published metadata that
     // points at deleted manifests, which would wedge every whole-log
     // operation (allEntries, orphan scans, file summaries).
-    commitMeta(b, m.copy(snapshots = retained, refs = liveRefs))
-    sweepExpired(retained, removed)
+    commitMeta(b, m.copy(snapshots = retained, refs = liveRefs), trimHistory)
+    if (removed.nonEmpty) sweepExpired(retained, removed)
     removed.map(_.snapshotId)
   }
 
@@ -3965,9 +4008,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .map(e => root.resolve(e.file).toAbsolutePath.toString).toSet
     val versionOrphans = if (!retentionOn) Nil else
       Io.listRecursive(metadataDir).filter { p =>
-        val nm = p.getFileName.toString
-        nm.matches("v\\d+\\.metadata\\.json") &&
-          nm.stripPrefix("v").stripSuffix(".metadata.json").toLong < curV &&
+        metadataVersionOf(p).exists(_ < curV) &&
           !loggedVersions(p.toAbsolutePath.toString) &&
           Files.getLastModifiedTime(p).toMillis < olderThanMs
       }
@@ -3981,32 +4022,33 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * (the demo's setting) rewrites everything and drops all delete
     * files; otherwise only undersized or delete-carrying files move. */
   def rewriteDataFiles(options: Map[String, String] = Map.empty)
-      : Option[SnapshotMeta] = rewriteDataFilesErasing(options, Nil)
+      : Option[SnapshotMeta] = rewriteDataFilesErasing(options, None)
 
-  /** [[rewriteDataFiles]] as the rewrite step of a permanent erase:
-    * when `erased` (the logical columns whose values the erase
-    * removed) is non-empty, the same commit also clears the erased
-    * values out of the table NDV sketches ([[ndvEraseTweak]]). */
+  /** [[rewriteDataFiles]] with a permanent erase ([[ErasePii]]) applied
+    * inside it: `erase.rows` (a DML row transform,
+    * [[deleteTransform]] or [[updateTransform]]) runs over the rows the
+    * rewrite reads, so the erase costs no read, write or commit of its
+    * own. Every data file is a candidate, so no file keeps an
+    * un-erased row. The commit changes data, so it carries
+    * `erase.operation` (`delete` / `overwrite`), not `replace`, and it
+    * also clears the erased values out of the table NDV sketches
+    * ([[ndvEraseTweak]]). */
   private[lake] def rewriteDataFilesErasing(options: Map[String, String],
-      erased: Seq[String]): Option[SnapshotMeta] = {
+      erase: Option[Erase]): Option[SnapshotMeta] = {
     val b = captureBase()
     val entries = b.entries
     val data = entries.filter(_.content == 0)
-    if (data.isEmpty) {
-      // nothing to rewrite (a COW erase dropped the last file): the
-      // sketches still need their own commit
-      if (erased.nonEmpty && ndvTracked(b.meta).isDefined)
-        commitMeta(b, ndvEraseTweak(b.meta, erased, entries,
-          b.meta.currentSnapshotId.getOrElse(-1L))(b.meta))
-      return None
-    }
+    // no data file: no row ever landed (every data write leaves a
+    // file, Spark writes one even for zero rows), nothing to rewrite
+    if (data.isEmpty) return None
     val rewriteAll = options.getOrElse("rewrite-all", "false").toBoolean
     val target = options.getOrElse("target-file-size-bytes",
       (128L * 1024 * 1024).toString).toLong
     val hasDeletes = entries.exists(_.content != 0)
     val candidates =
       // deletes may touch any file; a sort is a whole-layout change
-      if (rewriteAll || hasDeletes || options.contains("sort-order")) data
+      if (rewriteAll || hasDeletes || erase.isDefined ||
+          options.contains("sort-order")) data
       else data.filter(_.fileSizeBytes < target / 2)
     if (candidates.isEmpty) return None
     val candidateSet = candidates.map(abs).toSet
@@ -4016,7 +4058,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // 100 TB table scans 10 files
     val victims = entries.filter(e =>
       e.content != 0 || candidateSet(abs(e)))
-    val rows = readWithLineage(victims).drop(FileCol, PosCol)
+    val read = readWithLineage(victims).drop(FileCol, PosCol)
+    val rows = erase.fold(read)(_.rows(read))
     val nParts = math.max(1,
       math.ceil(candidates.map(_.fileSizeBytes).sum.toDouble / target).toInt)
     val snapId = nextSnapshotHint
@@ -4046,12 +4089,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val newEntries = statEntries(moved, content = 0, snapId)
       .map(ndvStampTweak(b.meta, moved))
     val rewritten = keep ++ keptDeletes ++ newEntries
-    Some(commitSnapshot(b, snapId, "replace", rewritten,
+    Some(commitSnapshot(b, snapId, erase.fold("replace")(_.operation),
+      rewritten,
       Map("rewritten-data-files" -> candidates.size.toString,
         "target-file-size-bytes" -> target.toString),
-      metaTweak =
-        if (erased.isEmpty) identity
-        else ndvEraseTweak(b.meta, erased, rewritten, snapId)))
+      metaTweak = erase.fold[TableMeta => TableMeta](identity)(e =>
+        ndvEraseTweak(b.meta, e.columns, rewritten, snapId))))
   }
 
   /** Rewrite layout strategies (the Iceberg `rewrite_data_files`
@@ -5000,6 +5043,13 @@ final class UnknownRefException(val refName: String)
   extends IllegalArgumentException(s"unknown ref $refName")
 
 object GraftTable {
+  /** A permanent erase as [[GraftTable.rewriteDataFilesErasing]]
+    * applies it: `rows` maps the rewrite's rows to the erased rows,
+    * `operation` labels the commit, `columns` are the logical columns
+    * whose values the erase removes (their NDV sketches lose them). */
+  private[lake] final case class Erase(rows: DataFrame => DataFrame,
+      operation: String, columns: Seq[String])
+
   /** The KMV estimator over a stored sketch: exact passthrough below
     * k, else (k-1)·2^60 div theta — the same integer form
     * [[graft.rel.Kmv.estimate]] pins against the DuckDB oracle.

@@ -229,8 +229,8 @@ class NdvFoldSpec extends SparkSuite {
     val (off, _) = erase("off", Map("stats.file-ndv" -> "false"),
       analyze = true, ErasePii.NullifyColumns(Seq("email_address")))
     assert(off.meta.columnNdv.keySet === Set("first_name"))
-    // a COW erase of the last row leaves nothing to rewrite: the
-    // sketches still lose the erased values, in a commit of their own
+    // a COW erase of the last row leaves no row to write back: the
+    // erase's rewrite commit still refolds the sketches, to empty
     val last = table("last", piiDdl,
       Map("write.delete.mode" -> "copy-on-write"))
     last.append(spark.createDataFrame(piiRows(7, 1).asJava, last.schema))
