@@ -7,13 +7,15 @@ import org.apache.spark.sql.functions._
   * (notebooks/utils/__init__.py:8 imports it; the file is gone) restored
   * as a first-class API. The demo (README.md:49-59) walks a permanent
   * erase as four separate steps: erase, compact, expire, sweep
-  * orphans. Here the erase is applied inside the compaction, which
-  * has to rewrite every data file anyway: one read and one write of
-  * the data files and one `delete`/`overwrite` commit, which also
-  * refolds the NDV sketches. One expiry commit then drops every older
-  * snapshot and metadata version, and the orphan sweep follows. No
-  * delete file is written. Afterwards the PII is unreachable from any
-  * snapshot and physically gone from storage, sketch hashes included.
+  * orphans, and its compaction rewrites every data file. Here the
+  * erase is one copy-on-write rewrite of just the files whose bytes
+  * hold the subject (plus any file a live delete file masks, since
+  * every delete file goes): one `delete`/`overwrite` commit, which
+  * also refolds the NDV sketches, so its cost scales with the subject,
+  * not the table. One expiry commit then drops every older snapshot
+  * and metadata version, and the orphan sweep follows. No delete file
+  * is written. Afterwards the PII is unreachable from any snapshot or
+  * ref and physically gone from storage, sketch hashes included.
   */
 object ErasePii {
 
@@ -27,13 +29,16 @@ object ErasePii {
     * snapshot / data file / delete file / metadata version still
     * carries it. `keyValue` takes any literal-able value (String case
     * ids, Long custkeys) so the predicate is TYPED — a string against a
-    * numeric key would ride implicit coercion and defeat stats pruning
-    * on a non-permanent erase's discovery scan. A permanent erase
-    * refuses before its first commit when it could not finish: on a
-    * `gc.enabled=false` table (a snapshot fork) expiry could not run,
-    * and a NullifyColumns of an unknown column fails as `update` does.
-    * A non-permanent erase is plain DML (`delete` / `update`, honoring
-    * the table's write modes) and leaves history alone. */
+    * numeric key would ride implicit coercion and defeat stats pruning.
+    * A permanent erase refuses before its first commit when it could
+    * not finish: on a `gc.enabled=false` table (a snapshot fork) expiry
+    * could not run; a NullifyColumns of an unknown column fails as
+    * `update` does; and a branch or tag that expiry would keep (not
+    * lapsed under `history.expire.max-ref-age-ms`) and whose snapshot
+    * still holds the subject would keep reading it, so the erase names
+    * those refs and refuses. A non-permanent erase is plain DML
+    * (`delete` / `update`, honoring the table's write modes) and
+    * leaves history alone. */
   def run(table: GraftTable, keyColumn: String, keyValue: Any,
       mode: Mode, permanent: Boolean = true): Unit = {
     val pred = col(keyColumn) === lit(keyValue)
@@ -51,18 +56,19 @@ object ErasePii {
     // the same row transforms the COW DML paths write with
     val erase = mode match {
       case NullifyColumns(cols) =>
-        GraftTable.Erase(table.updateTransform(bind,
+        GraftTable.Erase(keyColumn, bind, table.updateTransform(bind,
           cols.map(c => c -> ((_: DataFrame) => lit(null))).toMap),
-          "overwrite", cols)
+          "overwrite", cols, dropsRows = false)
       case DeleteRow =>
-        GraftTable.Erase(table.deleteTransform(bind), "delete",
-          table.schema.fieldNames.toSeq)
+        GraftTable.Erase(keyColumn, bind, table.deleteTransform(bind),
+          "delete", table.schema.fieldNames.toSeq, dropsRows = true)
     }
-    // demo.py:419-447: one rewrite of every data file applies the
-    // erase and every accumulated delete
-    table.rewriteDataFilesErasing(Map("rewrite-all" -> "true",
-      "target-file-size-bytes" -> (128L * 1024 * 1024).toString),
-      Some(erase))
+    val pinning = table.refsHolding(erase)
+    require(pinning.isEmpty, "Cannot permanently erase the subject: " +
+      s"refs ${pinning.mkString(", ")} pin snapshots that hold it, and " +
+      "expiry keeps them (drop them, or let them lapse under " +
+      "history.expire.max-ref-age-ms)")
+    table.eraseSubject(erase)
     // demo.py:289-296: history must stop resolving pre-erase snapshots
     // and pre-erase metadata versions
     table.expireSnapshotsErasing()

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.graft.{BottomKTracker, SketchedWrite}
 
 /** A GraftLake table: snapshot-versioned Parquet + JSON metadata log.
   *
@@ -22,6 +23,8 @@ import org.apache.spark.sql.catalyst.plans.logical
   *   - expireSnapshots    → D10 (demo.py:289-296)
   *   - removeOrphanFiles  → D11/D12 w/ safety window (demo.py:341-369)
   *   - rewriteDataFiles   → D13 compaction (demo.py:419-433)
+  *   - eraseSubject       → the permanent PII erase's rewrite
+  *                          ([[ErasePii]], README.md:49-59)
   *   - rewritePositionDeleteFiles → D14 (demo.py:437-447)
   *   - metadata tables    → S3/D15 (demo.py:120,205; file_summary_utils.py)
   *
@@ -1033,8 +1036,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * bug degrades to the slow path, never to a wrong manifest. Entry
     * order is preserved (survivors keep segment order, additions land
     * last), matching the checked path's `filter(parent) ++ additions`
-    * shape. Delete entries (content != 0) always survive, mirroring
-    * [[cowTransaction]]'s keep filter. */
+    * shape. `removedAbs` may name delete files too (a permanent
+    * erase drops them all). */
   private def commitDeltaFast(base: Base, id: Long,
       branch: Option[String], op: String, removedAbs: Set[String],
       added: Seq[ManifestEntry],
@@ -1075,8 +1078,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         if (!mayContainRemoved(r)) Some(r)
         else {
           val es = segmentEntries(r.path)
-          val (removed, survivors) = es.partition(e =>
-            e.content == 0 && removedAbs.contains(abs(e)))
+          val (removed, survivors) =
+            es.partition(e => removedAbs.contains(abs(e)))
           found ++= removed.map(abs)
           if (removed.isEmpty) Some(r)
           else if (survivors.isEmpty) None
@@ -1415,16 +1418,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * distinct hashes — the same hash and bottom-k set the oracled KMV
     * queries pin, so the estimator ((k-1)·2^60 div theta) is
     * integer-exact and mergeable. After the ANALYZE, every plain MAIN
-    * append folds its new files' hashes in (O(change): hashing the
-    * rows still in hand when the driver-side writer took them, zero
-    * Spark jobs; else one bottom-k pass over just-written bytes); any
-    * other row-changing commit (deletes, overwrites, branch appends
-    * landing via fast_forward, cherry-picks) flips the `stale` flag
-    * `.stats` surfaces, except a permanent [[ErasePii]] erase: the
-    * rewrite that applies it (a `delete` or `overwrite` commit)
-    * refolds the sketches fresh from the rewritten files, and its
-    * expiry deletes every older metadata version, so no stored sketch
-    * keeps an erased value's hash. While fresh the
+    * append folds its new files' hashes in (O(change): the writer
+    * hashes each row as it writes it, no extra Spark job); any other
+    * row-changing commit (deletes, overwrites, branch appends landing
+    * via fast_forward, cherry-picks) flips the `stale` flag `.stats`
+    * surfaces, except a permanent [[ErasePii]] erase: its rewrite (a
+    * `delete` or `overwrite` commit) refolds the sketches fresh from
+    * the committed files' own sketches, and its expiry deletes every
+    * older metadata version, so no stored sketch keeps an erased
+    * value's hash. While fresh the
     * estimate is the exact-merge value (an upper bound once rows were
     * masked); while stale it may be off in either direction until
     * re-analyzed. Consumers:
@@ -1658,13 +1660,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * [[graft.rel.Kmv.bottomK]] aggregate. Keys are normalized absolute
     * file paths; inner keys are LOGICAL column names. One shuffle
     * regardless of file or column count — the per-file grouping rides
-    * the aggregate's grouping key. */
+    * the aggregate's grouping key. For files that already exist
+    * (ANALYZE, adopted files); files the table writes carry their
+    * sketches from the writer ([[writeDataFiles]]). */
   private[lake] def ndvFileHashJob(m: TableMeta, files: Seq[String],
       logicalCols: Seq[String], k: Int)
       : Map[String, Map[String, Seq[Long]]] = {
     val cur = StructType.fromDDL(m.schemaDdl)
-    // callers hand freshly written local paths (no manifest entry
-    // yet): one nio stat per file feeds the manifest-backed scan
+    // callers hand local paths, some with no manifest entry yet: one
+    // nio stat per file feeds the manifest-backed scan
     val df = scanParquet(
       files.map(p => (p, Files.size(java.nio.file.Paths.get(p)))),
       cur, m.physicalNames, lineage = true)
@@ -1674,25 +1678,6 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .groupBy(r => Io.normalize(r.getString(0)))
       .map { case (f, rs) => f ->
         rs.map(r => r.getString(1) -> r.getSeq[Long](2)).toMap }
-  }
-
-  /** [[ndvFileHashJob]]'s answer for the one file the driver-side
-    * writer produced from `inHand` (its rows, PHYSICAL column names):
-    * the hash projection folds into the LocalRelation
-    * (ConvertToLocalRelation), so the collect runs no Spark job, and
-    * the hashes are of exactly the rows the file holds. */
-  private def ndvInHandHashes(m: TableMeta, file: String,
-      inHand: logical.LocalRelation, logicalCols: Seq[String], k: Int)
-      : Map[String, Map[String, Seq[Long]]] = {
-    val pn = m.physicalNames
-    val rows = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, inHand)
-      .select(logicalCols.map(c =>
-        graft.rel.Kmv.hash60(col(quoted(physName(pn)(c))))): _*)
-      .collect()
-    Map(Io.normalize(file) -> logicalCols.indices.map { i =>
-      logicalCols(i) -> rows.iterator.filterNot(_.isNullAt(i))
-        .map(_.getLong(i)).toSeq.distinct.sorted.take(k)
-    }.toMap)
   }
 
   /** Per-file sketch stamping is on unless the table opts out ('a
@@ -1709,11 +1694,11 @@ class GraftTable(val spark: SparkSession, val root: Path,
       stamp: ManifestEntry => ManifestEntry)
   private val ndvFoldIdentity = NdvFold(identity, identity)
 
-  /** Entry stamp attaching per-file sketches for `perFile` (from
-    * [[ndvFileHashJob]] over `files`) to data entries, keyed
-    * physically. Every data entry among `files` gets a sketch for
-    * EVERY tracked column — an EMPTY one when the job yielded no
-    * hashes for it (zero-row rewrite output, or an all-null column in
+  /** Entry stamp attaching per-file sketches for `perFile` (the
+    * writer's own, or [[ndvFileHashJob]]'s over `files`) to data
+    * entries, keyed physically. Every data entry among `files` gets a
+    * sketch for EVERY tracked column — an EMPTY one when no hash came
+    * for it (zero-row rewrite output, or an all-null column in
     * that file): empty is that file's correct bottom-k, and skipping
     * the stamp would make one empty file veto a later refold. */
   private def ndvStampOf(m: TableMeta, files: Seq[String],
@@ -1760,9 +1745,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * meta: folding hashes is always sound (adds only), but advancing
     * past an un-subtracted delete would silently clear the stale
     * flag the delete earned. Identity when never analyzed. The hashes
-    * come from the rows in hand when the driver-side writer took them
-    * (zero Spark jobs), else from one [[ndvFileHashJob]] over the
-    * files; both yield the same per-file bottom-k sets. */
+    * are `written.sketches`: the writer's own per-file bottom-k sets
+    * ([[writeDataFiles]] with `sketch`), or one [[ndvFileHashJob]] over
+    * files the table did not write. */
   private def ndvFoldTweak(m: TableMeta, written: Written,
       snapId: Long): NdvFold = {
     val newFiles = written.files
@@ -1773,10 +1758,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     }
     val pn = m.physicalNames
     val cols = tracked.map(_.name)
-    val perFile = written.inHand match {
-      case Some(rows) => ndvInHandHashes(m, newFiles.head, rows, cols, kMax)
-      case None => ndvFileHashJob(m, newFiles, cols, kMax)
-    }
+    val perFile = written.sketches
     val parents = parentIndex(m)
     val folded = tracked.map { f =>
       val phys = physName(pn)(f.name)
@@ -1797,19 +1779,19 @@ class GraftTable(val spark: SparkSession, val root: Path,
   }
 
   /** Stamp-ONLY variant for row-removing writers (COW rewrites,
-    * compaction, overwrites): the table sketch cannot subtract, so no
-    * meta fold — but the NEW files' own sketches land on their
-    * entries (one bottom-k pass over just-written bytes), keeping the
-    * table refold-eligible after the commit. Identity when the table
-    * has no sketches or opted out. */
-  private def ndvStampTweak(m: TableMeta, newFiles: Seq[String])
+    * compaction): the table sketch cannot subtract, so no meta fold —
+    * but the NEW files' own sketches, as the writer took them
+    * ([[writeDataFiles]] with `sketch = fileNdvEnabled`), land on
+    * their entries, keeping the table refold-eligible after the
+    * commit. Identity when the table has no sketches or opted out. */
+  private def ndvStampTweak(m: TableMeta, written: Written)
       : ManifestEntry => ManifestEntry = {
-    if (newFiles.isEmpty || !fileNdvEnabled(m)) return identity
+    if (written.files.isEmpty || !fileNdvEnabled(m)) return identity
     ndvTracked(m) match {
       case None => identity
       case Some((tracked, kMax)) =>
-        ndvStampOf(m, newFiles, tracked.map(_.name),
-          ndvFileHashJob(m, newFiles, tracked.map(_.name), kMax), kMax)
+        ndvStampOf(m, written.files, tracked.map(_.name),
+          written.sketches, kMax)
     }
   }
 
@@ -1853,33 +1835,38 @@ class GraftTable(val spark: SparkSession, val root: Path,
       tracked: Seq[StructField], at: Long)
       : Option[Map[String, NdvSketch]] = {
     if (entries.exists(_.content != 0)) return None
-    val pn = m.physicalNames
     // zero-row files are trivially covered: they contribute no hashes
     val data = entries.filter(e => e.content == 0 && e.recordCount > 0)
+    if (!data.forall(ndvCovers(m, tracked))) return None
     Some(tracked.map { f =>
-      val phys = physName(pn)(f.name)
+      val phys = physName(m.physicalNames)(f.name)
       val old = m.columnNdv(phys)
-      val perFile = data.map { e =>
-        e.ndv.get(phys) match {
-          case Some(fn) if fn.k >= old.k || fn.hashes.size < fn.k =>
-            fn.hashes
-          case _ => return None // uncovered or under-k entry
-        }
-      }
-      phys -> NdvSketch(old.k, perFile.flatten.distinct.sorted.take(old.k),
-        at)
+      phys -> NdvSketch(old.k,
+        data.flatMap(_.ndv(phys).hashes).distinct.sorted.take(old.k), at)
     }.toMap)
   }
 
+  /** Whether data entry `e` carries a usable sketch for every `tracked`
+    * column: stamped at k ≥ the table sketch's k, or COMPLETE (the file
+    * held fewer than its stamp-k distinct values). A zero-row file is
+    * covered by its emptiness. */
+  private def ndvCovers(m: TableMeta, tracked: Seq[StructField])(
+      e: ManifestEntry): Boolean =
+    e.recordCount == 0 || tracked.forall { f =>
+      val phys = physName(m.physicalNames)(f.name)
+      e.ndv.get(phys).exists(fn =>
+        fn.k >= m.columnNdv(phys).k || fn.hashes.size < fn.k)
+    }
+
   /** NDV upkeep for a permanent erase ([[ErasePii]]), applied inside
-    * the erase's rewrite commit: the table sketches may still hold the
-    * erased values' hashes, so they refold from `entries` (the
-    * rewritten, freshly stamped snapshot) at `at`; when a refold is
-    * not possible (per-file stamping off, an unstamped entry), the
-    * `erased` columns' sketches are dropped instead. Identity on a
-    * table without sketches. */
+    * the erase's commit: the table sketches may still hold the erased
+    * values' hashes, so they refold from `entries` (the committed
+    * snapshot: kept files with their stamps, rewritten files freshly
+    * stamped, no delete file) at `at`; when a refold is not possible
+    * (per-file stamping off), the `erased` columns' sketches are
+    * dropped instead. Identity on a table without sketches. */
   private def ndvEraseTweak(m: TableMeta, erased: Seq[String],
-      entries: Seq[ManifestEntry], at: Long): TableMeta => TableMeta =
+      entries: => Seq[ManifestEntry], at: Long): TableMeta => TableMeta =
     ndvTracked(m) match {
       case None => identity
       case Some((tracked, _)) =>
@@ -2372,18 +2359,16 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val b = captureBase()
     branch.foreach(branchHead(b, _)) // validate before writing files
     val snapId = nextSnapshotHint
-    val written = writeDataFiles(aligned)
+    val written = writeDataFiles(aligned, b.meta, sketch = branch.isEmpty)
     val newEntries = statEntries(written.files, content = 0, snapId)
     val summary = extraSummary ++
       Map("added-data-files" -> newEntries.size.toString,
         "added-records" -> newEntries.map(_.recordCount).sum.toString)
-    // incremental NDV maintenance: fold the new files' hashes into
-    // any stored column sketches (O(change), only for analyzed
-    // columns: rows the driver-side writer still holds are hashed with
-    // no Spark job, anything else takes one bottom-k pass over the
-    // just-written bytes). MAIN appends only: branch rows stay out of
-    // the sketch until fast_forward, whose branch-summary snapshots
-    // ndvStaleIn flags.
+    // incremental NDV maintenance: fold the new files' hashes, which
+    // the writer took as it wrote them, into any stored column
+    // sketches (O(change), only for analyzed columns). MAIN appends
+    // only: branch rows stay out of the sketch until fast_forward,
+    // whose branch-summary snapshots ndvStaleIn flags.
     val ndv: NdvFold =
       if (branch.isEmpty) ndvFoldTweak(b.meta, written, snapId)
       else ndvFoldIdentity
@@ -2580,7 +2565,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val summary = Map("operation-origin" -> origin,
       "added-data-files" -> newEntries.size.toString,
       "added-records" -> newEntries.map(_.recordCount).sum.toString)
-    val ndv = ndvFoldTweak(b.meta, Written(moved), snapId)
+    // adopted files were written elsewhere: hash them where they sit
+    val ndv = ndvFoldTweak(b.meta, Written(moved,
+      ndvTracked(b.meta).fold(Map.empty[String, Map[String, Seq[Long]]]) {
+        case (tracked, k) => ndvFileHashJob(b.meta, moved,
+          tracked.map(_.name), k)
+      }), snapId)
     val stamped = newEntries.map(ndv.stamp)
     commitAddOnlyFast(b, snapId, None, "append", stamped, summary,
       ndv.metaTweak).getOrElse(
@@ -2722,7 +2712,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case Some(br) => manifestOf(branchHead(b, br))
     }
     val snapId = nextSnapshotHint
-    val moved = writeDataFiles(toWrite).files
+    val moved = writeDataFiles(toWrite, b.meta).files
     val newEntries = statEntries(moved, content = 0, snapId)
     val summary = extraSummary ++ Map(
       "replaced-data-files" ->
@@ -2871,7 +2861,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       Io.listRecursive(staged).foreach(Files.deleteIfExists(_))
       Files.deleteIfExists(staged)
       (Nil, 0L)
-    } else (moveStaged(staged, "delete"), n)
+    } else (moveStaged(staged, "delete").map(_._2), n)
   }
 
   /** MOR position-delete write (D8): capture (file, pos) of matching
@@ -2949,7 +2939,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
         bound)
       if (n == 0) return None
       val newMoved =
-        writeDataFiles(transform(hits.drop(FileCol, PosCol))).files
+        writeDataFiles(transform(hits.drop(FileCol, PosCol)), b.meta).files
       val snapId = nextSnapshotHint
       val delEntries = statEntries(delMoved, content = 1, snapId)
       val dataEntries = statEntries(newMoved, content = 0, snapId)
@@ -2996,7 +2986,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .select(logicalCols.zip(cols).map { case (l, p) =>
         col(quoted(l)).as(p) }: _*)
       .coalesce(1).write.parquet(staged.toString)
-    val moved = moveStaged(staged, "eqdelete")
+    val moved = moveStaged(staged, "eqdelete").map(_._2)
     val snapId = nextSnapshotHint
     val entries = statEntries(moved, content = 2, snapId)
       .map(_.copy(equalityColumns = cols))
@@ -3052,7 +3042,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .select(logicalCols.zip(cols).map { case (l, p) =>
         col(quoted(l)).as(p) }: _*)
       .coalesce(1).write.parquet(staged.toString)
-    val movedKeys = moveStaged(staged, "eqdelete")
+    val movedKeys = moveStaged(staged, "eqdelete").map(_._2)
     val snapId = nextSnapshotHint
     val delEntries = {
       val es = statEntries(movedKeys, content = 2, snapId)
@@ -3061,7 +3051,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         movedKeys.foreach(p => Files.deleteIfExists(Path.of(p))); Nil
       } else es
     }
-    val movedData = writeDataFiles(aligned)
+    val movedData = writeDataFiles(aligned, b.meta,
+      sketch = delEntries.isEmpty && branch.isEmpty)
     val dataEntries = statEntries(movedData.files, content = 0, snapId)
     val summary = extraSummary ++
       Map("added-data-files" -> dataEntries.size.toString,
@@ -3094,62 +3085,218 @@ class GraftTable(val spark: SparkSession, val root: Path,
   }
 
   /** Generic COW transaction: `f` receives the base snapshot's entries
-    * plus a lineage-read planner, and decides (affected file set,
+    * plus a lineage-read planner, and decides (affected entries,
     * replacement rows, summary); the transaction then commits a
-    * snapshot where exactly the affected data files are replaced by
-    * the written replacement rows. Shared by DELETE/UPDATE (cowRewrite)
-    * and MERGE — all of them get the same two-phase scale shape and
-    * the same optimistic-concurrency base pinning. */
+    * snapshot where exactly the affected entries are replaced by the
+    * written replacement rows, written as the read partitions them (no
+    * repartition). Shared by DELETE/UPDATE (cowRewrite), MERGE and the
+    * permanent erase ([[eraseSubject]]) — all of them get the same
+    * two-phase scale shape and the same optimistic-concurrency base
+    * pinning. Affected entries are data files, and for an erase also
+    * delete files; rows None writes nothing (every affected row goes).
+    * `erased`: the logical columns a permanent erase removes values
+    * of — the commit then refolds the NDV sketches from the entries it
+    * commits ([[ndvEraseTweak]]). */
   private[lake] def cowTransaction(operation: String,
-      explicitBranch: Option[String] = None)(
+      explicitBranch: Option[String] = None,
+      erased: Option[Seq[String]] = None)(
       f: CowSnapshot =>
-        Option[(Set[String], DataFrame, Map[String, String])])
+        Option[(Set[String], Option[DataFrame], Map[String, String])])
       : Option[SnapshotMeta] = {
     val branch = resolveBranch(explicitBranch)
     val b = captureBase()
-    val head = headSnapshot(b, branch)
-    f(new CowSnapshot(head)) match {
+    val snap = new CowSnapshot(b.meta, headSnapshot(b, branch))
+    f(snap) match {
       case None => None
       case Some((affected, outRows, summary)) =>
         val snapId = nextSnapshotHint
-        val moved = writeDataFiles(outRows).files
+        val written = outRows.fold(Written(Nil))(
+          writeDataFiles(_, b.meta, sketch = fileNdvEnabled(b.meta)))
         // row-removing rewrite: the table sketch cannot subtract (the
         // op flips stale), but stamping the NEW files' own sketches
         // keeps the table refold-eligible — refoldColumnStats then
         // restores freshness from metadata alone
-        val newEntries = statEntries(moved, content = 0, snapId)
-          .map(ndvStampTweak(b.meta, moved))
+        val newEntries = statEntries(written.files, content = 0, snapId)
+          .map(ndvStampTweak(b.meta, written))
+        lazy val committed =
+          snap.entries.filterNot(e => affected(abs(e))) ++ newEntries
+        val metaTweak = erased.fold[TableMeta => TableMeta](identity)(
+          ndvEraseTweak(b.meta, _, committed, snapId))
         // segment-narrowed commit: only parent segments whose path
         // bounds can hold an affected file are read; commit driver
         // work is O(touched segments + new files), not O(table)
         Some(commitDeltaFast(b, snapId, branch, operation, affected,
-          newEntries, summary).getOrElse {
-          val entries = head.map(manifestOf).getOrElse(Nil)
-          val keep = entries.filter(e =>
-            e.content != 0 || !affected.contains(abs(e)))
+          newEntries, summary, metaTweak).getOrElse {
           branch match {
             case None => commitSnapshot(b, snapId, operation,
-              keep ++ newEntries, summary)
+              committed, summary, metaTweak = metaTweak)
             case Some(br) => commitSnapshotOnBranch(b, snapId,
-              operation, br, keep ++ newEntries, summary)
+              operation, br, committed, summary, metaTweak)
           }
         })
     }
   }
 
-  /** The snapshot view a COW transaction plans against: `entries`
-    * materializes the FULL head manifest (MERGE's discovery join
-    * reads the whole target anyway); `pruned` plans through
-    * [[prunedEntriesOf]] — stats-narrowed, executor-side past the
-    * distributed threshold — so predicate DML never materializes the
-    * table's entry list on the driver. */
-  private[lake] final class CowSnapshot(head: Option[SnapshotMeta]) {
+  /** The snapshot view a COW transaction plans against: `meta` is the
+    * base it commits on; `entries` materializes the FULL head manifest
+    * (MERGE's discovery join and an erase's victim choice need it);
+    * `pruned` plans through [[prunedEntriesOf]] — stats-narrowed,
+    * executor-side past the distributed threshold — so predicate DML
+    * never materializes the table's entry list on the driver. */
+  private[lake] final class CowSnapshot(val meta: TableMeta,
+      head: Option[SnapshotMeta]) {
     lazy val entries: Seq[ManifestEntry] =
       head.map(manifestOf).getOrElse(Nil)
     def pruned(bind: DataFrame => Column): Seq[ManifestEntry] =
       head.map(prunedEntriesOf(_, bind)).getOrElse(Nil)
     def readLineage(es: Seq[ManifestEntry]): DataFrame =
       readWithLineage(es)
+  }
+
+  /** A permanent erase's rewrite ([[ErasePii]]): one copy-on-write
+    * transaction on main over just the victim files, so its cost
+    * scales with the subject, not the table. The victims are:
+    *   - the data files whose PHYSICAL rows hold the subject
+    *     ([[subjectFiles]]; a tiny file that may hold it is rewritten
+    *     unprobed);
+    *   - every data file a live delete file applies to
+    *     ([[deleteTouched]]): every delete file goes, so its masks
+    *     must be applied into the rewrite;
+    *   - on a table stamping per-file sketches, every data file
+    *     without a usable stamp, so the commit's refold covers the
+    *     table.
+    * A victim all of whose rows are the subject's leaves no row under
+    * a row-removing erase, and is dropped unread. The table's tiny
+    * files (fewer rows than the parquet writer's first page-size
+    * check, so mostly footer) ride along into the same output when it
+    * merges at least two files: each costs a file open on every scan
+    * and a manifest entry, and rewriting one costs a handful of rows.
+    * The output is coalesced, not shuffled, to one file per target
+    * size. The commit carries `erase.operation` and refolds the NDV
+    * sketches. With nothing to rewrite, the sketches still refold — a
+    * COW delete that removed the subject's rows earlier left their
+    * hashes in them — in a metadata-only commit. */
+  private[lake] def eraseSubject(erase: Erase): Unit = {
+    val rewritten = cowTransaction(erase.operation, Some("main"),
+        Some(erase.columns)) { snap =>
+      val m = snap.meta
+      val (data, deletes) = snap.entries.partition(_.content == 0)
+      val tiny = (e: ManifestEntry) => e.recordCount < GraftTable.TinyFileRows
+      val (holding, whole) =
+        subjectFiles(m, data, erase.keyColumn, erase.bind, unread = tiny)
+      val touched = deleteTouched(data, deletes)
+      val unstamped: ManifestEntry => Boolean = ndvTracked(m) match {
+        case Some((tracked, _)) if fileNdvEnabled(m) =>
+          e => !ndvCovers(m, tracked)(e)
+        case _ => _ => false
+      }
+      val victims = data.filter(e =>
+        holding(abs(e)) || touched(abs(e)) || unstamped(e))
+      if (victims.isEmpty && deletes.isEmpty) None
+      else {
+        val rewrite =
+          victims.filterNot(e => erase.dropsRows && whole(abs(e)))
+        val victimSet = victims.map(abs).toSet
+        val riders = data.filter(e => tiny(e) && !victimSet(abs(e)))
+        val read =
+          if (rewrite.size + riders.size >= 2) rewrite ++ riders else rewrite
+        val nParts = math.max(1, math.ceil(read.map(_.fileSizeBytes).sum
+          .toDouble / GraftTable.TargetFileBytes).toInt)
+        Some((victimSet ++ read.map(abs) ++ deletes.map(abs),
+          if (read.isEmpty) None
+          else Some(erase.rows(readWithLineage(read ++ deletes)
+            .drop(FileCol, PosCol)).coalesce(nParts)),
+          Map("rewritten-data-files" -> read.size.toString,
+            "removed-data-files" -> (victims.size - rewrite.size).toString,
+            "removed-delete-files" -> deletes.size.toString,
+            "mode" -> "copy-on-write")))
+      }
+    }
+    if (rewritten.isEmpty) {
+      val b = captureBase()
+      if (ndvTracked(b.meta).isDefined)
+        commitMeta(b, ndvEraseTweak(b.meta, erase.columns, b.entries,
+          b.meta.currentSnapshotId.getOrElse(-1L))(b.meta))
+    }
+  }
+
+  /** Physical subject discovery for a permanent erase: the files among
+    * `data` whose ROWS hold a match for `bind` (`keyColumn` against a
+    * literal), and the subset all of whose rows match. It judges the
+    * bytes, not the live rows: a row a MOR delete hid still sits in
+    * its file. Manifest min/max prunes first. A file whose exact stats
+    * prove the match (min = max = the key) is not read; with no nulls
+    * every row of it matches. A surviving `unread` file is counted as
+    * holding the subject without a read: the caller rewrites it, which
+    * costs what probing it would. The rest are probed in one job with
+    * no shuffle that reads only the key column and collects the
+    * matching rows' file paths (a subject has few rows). */
+  private def subjectFiles(m: TableMeta, data: Seq[ManifestEntry],
+      keyColumn: String, bind: DataFrame => Column,
+      unread: ManifestEntry => Boolean = _ => false)
+      : (Set[String], Set[String]) = {
+    val sch = StructType.fromDDL(m.schemaDdl)
+    val pn = m.physicalNames
+    val key = sch.fields.find(_.name.equalsIgnoreCase(keyColumn))
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown column: $keyColumn"))
+    val survivors = pruneByPredicate(data, bind)
+    val proven: ManifestEntry => Boolean = analyzeConjuncts(bind) match {
+      case Seq(EqualTo(a: AttributeReference, l: Literal))
+          if GraftTable.exactStats(a.dataType) && l.value != null =>
+        e => !mayMatch(e, LessThan(a, l), sch, pn) &&
+          !mayMatch(e, GreaterThan(a, l), sch, pn)
+      case _ => _ => false
+    }
+    val (pinned, rest) = survivors.partition(proven)
+    val (assumed, probe) = rest.partition(unread)
+    val probed =
+      if (probe.isEmpty) Set.empty[String]
+      else {
+        val keys = scanParquet(probe.map(absSized), StructType(Seq(key)),
+          pn, lineage = true)
+        keys.filter(bind(keys)).select(FileCol).collect()
+          .map(r => Io.normalize(r.getString(0))).toSet
+      }
+    ((pinned ++ assumed).map(abs).toSet ++ probed,
+      pinned.filter(_.stats.get(physName(pn)(key.name))
+        .exists(_.nullCount == 0)).map(abs).toSet)
+  }
+
+  /** The files among `data` that a live delete file among `deletes`
+    * applies to: the files a position-delete file names (read on the
+    * driver through the delete-file cache the scans share), and every
+    * file older than the newest equality delete (the sequence law
+    * [[DeleteFilter]] applies; a superset of the files it masks). */
+  private def deleteTouched(data: Seq[ManifestEntry],
+      deletes: Seq[ManifestEntry]): Set[String] = {
+    if (deletes.isEmpty) return Set.empty
+    val conf = DeleteFilter.sessionConf(spark)
+    val named = deletes.filter(_.content == 1)
+      .flatMap(d => DeleteFilter.positions(abs(d), conf).keys).toSet
+    val eqSeq = deletes.filter(_.content == 2).map(_.addedSnapshotId)
+      .maxOption
+    data.filter(e => eqSeq.exists(e.addedSnapshotId < _) ||
+      Io.uriForms(abs(e)).exists(named)).map(abs).toSet
+  }
+
+  /** The refs besides main that an expiry would keep (not lapsed under
+    * their own cap or `history.expire.max-ref-age-ms`) whose snapshot
+    * still holds a permanent erase's subject, by [[subjectFiles]]. An
+    * erase would leave them reading it. No Spark job when no such ref
+    * exists. */
+  private[lake] def refsHolding(erase: Erase): Seq[String] = {
+    val m = meta
+    val byId = m.snapshots.map(s => s.snapshotId -> s).toMap
+    val kept = (liveAndLapsedRefs(m)._1 - "main").toSeq.flatMap {
+      case (name, r) => byId.get(r.snapshotId).map(s =>
+        name -> manifestOf(s).filter(_.content == 0))
+    }
+    if (kept.isEmpty) return Nil
+    val holding = subjectFiles(m, kept.flatMap(_._2).distinctBy(abs),
+      erase.keyColumn, erase.bind)._1
+    kept.collect { case (name, es) if es.exists(e => holding(abs(e))) =>
+      name }.sorted
   }
 
   /** Resolve a branch's head snapshot from a captured base, rejecting
@@ -3212,7 +3359,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
           val bound = entries.filter(_.content == 0)
             .map(_.recordCount).sum
           val (delMoved, _) = writeDeleteFiles(cached, bound)
-          val newMoved = writeDataFiles(appendRows).files
+          val newMoved = writeDataFiles(appendRows, b.meta).files
           val snapId = nextSnapshotHint
           val delEntries = statEntries(delMoved, content = 1, snapId)
           val dataEntries = statEntries(newMoved, content = 0, snapId)
@@ -3261,8 +3408,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         // victims ⊆ pruned candidates (affected files came from the
         // pruned read), plus every delete file so MOR masks apply —
         // both already in `pruned` (it keeps all content != 0)
-        transform(claimedOr(victimEntries(pruned, affected), claimKey,
-          snap.readLineage).drop(FileCol, PosCol)),
+        Some(transform(claimedOr(victimEntries(pruned, affected), claimKey,
+          snap.readLineage).drop(FileCol, PosCol))),
         Map("rewritten-files" -> affected.size.toString,
           "mode" -> "copy-on-write")))
     }
@@ -3352,7 +3499,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     def intProp(k: String, d: Int): Int =
       nums.get(k).map(checkedInt(k, _)).getOrElse(d)
     val target = nums.getOrElse(
-      "maintenance.compact.target-file-size-bytes", 128L * 1024 * 1024)
+      "maintenance.compact.target-file-size-bytes", GraftTable.TargetFileBytes)
     val entries = currentEntries
     val delFiles = entries.count(_.content != 0)
     val small = entries.filter(e =>
@@ -3573,14 +3720,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // keep pinning; unset (the default) keeps refs immortal, exactly
     // like Iceberg. Age is measured from the referenced snapshot's
     // commit time, matching Iceberg's RemoveSnapshots.
-    val tableRefAge = m.properties.get("history.expire.max-ref-age-ms")
-      .map(_.toLong)
-    val byId = m.snapshots.map(s => s.snapshotId -> s).toMap
-    val (lapsedRefs, liveRefs) = m.refs.partition { case (_, r) =>
-      // per-ref RETAIN overrides the table default; no cap = immortal
-      r.maxRefAgeMs.orElse(tableRefAge).exists(age =>
-        byId.get(r.snapshotId).exists(_.timestampMs < now() - age))
-    }
+    val (liveRefs, lapsedRefs) = liveAndLapsedRefs(m)
     val keepIds = (m.snapshots.filter(_.timestampMs >= olderThanMs)
       .map(_.snapshotId)
       ++ m.currentSnapshotId.toSeq
@@ -3598,6 +3738,21 @@ class GraftTable(val spark: SparkSession, val root: Path,
     commitMeta(b, m.copy(snapshots = retained, refs = liveRefs), trimHistory)
     if (removed.nonEmpty) sweepExpired(retained, removed)
     removed.map(_.snapshotId)
+  }
+
+  /** `m`'s refs split into (live, lapsed) by ref age retention — see
+    * [[expire]]; [[refsHolding]] asks which refs an expiry keeps. */
+  private def liveAndLapsedRefs(m: TableMeta)
+      : (Map[String, RefMeta], Map[String, RefMeta]) = {
+    val tableRefAge = m.properties.get("history.expire.max-ref-age-ms")
+      .map(_.toLong)
+    val byId = m.snapshots.map(s => s.snapshotId -> s).toMap
+    val (lapsed, live) = m.refs.partition { case (_, r) =>
+      // per-ref RETAIN overrides the table default; no cap = immortal
+      r.maxRefAgeMs.orElse(tableRefAge).exists(age =>
+        byId.get(r.snapshotId).exists(_.timestampMs < now() - age))
+    }
+    (live, lapsed)
   }
 
   /** Physically delete everything `removed` reaches that `retained`
@@ -3888,7 +4043,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case Some(fields) => clustered(aligned, fields, clusterFileCount)
       case None => aligned
     }
-    val moved = writeDataFiles(toWrite).files
+    val moved = writeDataFiles(toWrite, b.meta).files
     val newEntries = statEntries(moved, content = 0, snapId)
     val summary = extraSummary ++ Map(
       "added-data-files" -> newEntries.size.toString,
@@ -4022,33 +4177,18 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * (the demo's setting) rewrites everything and drops all delete
     * files; otherwise only undersized or delete-carrying files move. */
   def rewriteDataFiles(options: Map[String, String] = Map.empty)
-      : Option[SnapshotMeta] = rewriteDataFilesErasing(options, None)
-
-  /** [[rewriteDataFiles]] with a permanent erase ([[ErasePii]]) applied
-    * inside it: `erase.rows` (a DML row transform,
-    * [[deleteTransform]] or [[updateTransform]]) runs over the rows the
-    * rewrite reads, so the erase costs no read, write or commit of its
-    * own. Every data file is a candidate, so no file keeps an
-    * un-erased row. The commit changes data, so it carries
-    * `erase.operation` (`delete` / `overwrite`), not `replace`, and it
-    * also clears the erased values out of the table NDV sketches
-    * ([[ndvEraseTweak]]). */
-  private[lake] def rewriteDataFilesErasing(options: Map[String, String],
-      erase: Option[Erase]): Option[SnapshotMeta] = {
+      : Option[SnapshotMeta] = {
     val b = captureBase()
     val entries = b.entries
     val data = entries.filter(_.content == 0)
-    // no data file: no row ever landed (every data write leaves a
-    // file, Spark writes one even for zero rows), nothing to rewrite
     if (data.isEmpty) return None
     val rewriteAll = options.getOrElse("rewrite-all", "false").toBoolean
     val target = options.getOrElse("target-file-size-bytes",
-      (128L * 1024 * 1024).toString).toLong
+      GraftTable.TargetFileBytes.toString).toLong
     val hasDeletes = entries.exists(_.content != 0)
     val candidates =
       // deletes may touch any file; a sort is a whole-layout change
-      if (rewriteAll || hasDeletes || erase.isDefined ||
-          options.contains("sort-order")) data
+      if (rewriteAll || hasDeletes || options.contains("sort-order")) data
       else data.filter(_.fileSizeBytes < target / 2)
     if (candidates.isEmpty) return None
     val candidateSet = candidates.map(abs).toSet
@@ -4058,8 +4198,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // 100 TB table scans 10 files
     val victims = entries.filter(e =>
       e.content != 0 || candidateSet(abs(e)))
-    val read = readWithLineage(victims).drop(FileCol, PosCol)
-    val rows = erase.fold(read)(_.rows(read))
+    val rows = readWithLineage(victims).drop(FileCol, PosCol)
     val nParts = math.max(1,
       math.ceil(candidates.map(_.fileSizeBytes).sum.toDouble / target).toInt)
     val snapId = nextSnapshotHint
@@ -4078,7 +4217,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         case None => rows.repartition(nParts)
       }
     }
-    val moved = writeDataFiles(toWrite).files
+    val written = writeDataFiles(toWrite, b.meta,
+      sketch = fileNdvEnabled(b.meta))
     val keep = entries.filter(e => e.content == 0 && !candidateSet(abs(e)))
     // all deletes were applied while reading the candidates
     val dropDeletes = rewriteAll || hasDeletes
@@ -4086,15 +4226,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // compaction is the path that UNMASKS rows (deletes applied into
     // the rewrite): stamping the compacted files' sketches is what
     // makes a MOR-deleted table refold-eligible again
-    val newEntries = statEntries(moved, content = 0, snapId)
-      .map(ndvStampTweak(b.meta, moved))
-    val rewritten = keep ++ keptDeletes ++ newEntries
-    Some(commitSnapshot(b, snapId, erase.fold("replace")(_.operation),
-      rewritten,
+    val newEntries = statEntries(written.files, content = 0, snapId)
+      .map(ndvStampTweak(b.meta, written))
+    Some(commitSnapshot(b, snapId, "replace",
+      keep ++ keptDeletes ++ newEntries,
       Map("rewritten-data-files" -> candidates.size.toString,
-        "target-file-size-bytes" -> target.toString),
-      metaTweak = erase.fold[TableMeta => TableMeta](identity)(e =>
-        ndvEraseTweak(b.meta, e.columns, rewritten, snapId))))
+        "target-file-size-bytes" -> target.toString)))
   }
 
   /** Rewrite layout strategies (the Iceberg `rewrite_data_files`
@@ -4613,49 +4750,57 @@ class GraftTable(val spark: SparkSession, val root: Path,
   // not pre-created: DataFrameWriter insists on creating the dir itself
   private def stageDir(): Path = root.resolve(s"stage-${UUID.randomUUID()}")
 
-  /** Files one [[writeDataFiles]] call produced (absolute paths).
-    * `inHand` holds the written rows themselves (under PHYSICAL column
-    * names) when the driver-side writer took the frame, so the NDV
-    * fold can hash them without a Spark job; None when a Spark job
-    * wrote the files. */
+  /** Files one [[writeDataFiles]] call produced (absolute paths), and
+    * — when the call asked for them — each file's per-column bottom-k
+    * hash60 sets as the writer took them, in [[ndvFileHashJob]]'s
+    * shape (normalized path → logical column → hashes). */
   private final case class Written(files: Seq[String],
-      inHand: Option[logical.LocalRelation] = None)
+      sketches: Map[String, Map[String, Seq[Long]]] = Map.empty)
 
   /** Write `df` as parquet via a staging dir, move the part files into
-    * data/ under fresh UUID names. */
-  private def writeDataFiles(df: DataFrame): Written = {
+    * data/ under fresh UUID names. `m` is the base the caller commits
+    * against. With `sketch` set and NDV-tracked columns in `m`, every
+    * written file's bottom-k sets ride along ([[BottomKTracker]]): the
+    * writer hashes each row as it writes it, so no job re-reads the
+    * new files. */
+  private def writeDataFiles(df: DataFrame, m: TableMeta,
+      sketch: Boolean = false): Written = {
     val staged = stageDir()
     // files always spell columns by PHYSICAL name, so data written
     // before and after a RENAME COLUMN reads under one schema; nested
     // renames cast the struct to its physical subfield names
     // (positional — same layout)
-    val m = meta.physicalNames
-    val sch = schema
+    val pn = m.physicalNames
+    val sch = StructType.fromDDL(m.schemaDdl)
     val physical =
-      if (m.isEmpty) df
+      if (pn.isEmpty) df
       else df.select(df.columns.toSeq.map { c =>
         val cast = sch.fields.find(_.name.equalsIgnoreCase(c)) match {
-          case Some(f) if hasNestedMapping(m, f) =>
-            col(quoted(c)).cast(physType(m, f.name, f.dataType))
+          case Some(f) if hasNestedMapping(pn, f) =>
+            col(quoted(c)).cast(physType(pn, f.name, f.dataType))
           case _ => col(quoted(c))
         }
-        cast.as(physName(m)(c))
+        cast.as(physName(pn)(c))
       }: _*)
+    val tracked = if (!sketch) None else ndvTracked(m).map {
+      case (fields, k) =>
+        val cols = fields.map(_.name)
+        (cols, BottomKTracker(physical, cols.map(c =>
+          graft.rel.Kmv.hash60(col(quoted(physName(pn)(c))))), k))
+    }
     // `write.bloom-columns`: parquet bloom filters on the named
     // columns (logical names; stored under physical). Point lookups on
     // high-cardinality keys then skip row groups that min/max ranges
     // cannot exclude — the 100 TB lever for needle-in-haystack reads:
     // the skipping happens inside every executor's parquet reader
     // under normal predicate pushdown, no planner or driver work.
-    val bloomCols = properties.get("write.bloom-columns").toSeq
+    val bloomCols = m.properties.get("write.bloom-columns").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .map(physName(m)).filter(physical.columns.contains)
-    val ndv = properties.get("write.bloom-columns.ndv")
-    val writer = bloomCols.foldLeft(physical.write) { (w, c) =>
-      val base = w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      ndv.fold(base)(n =>
-        base.option(s"parquet.bloom.filter.expected.ndv#$c", n))
-    }
+      .map(physName(pn)).filter(physical.columns.contains)
+    val ndv = m.properties.get("write.bloom-columns.ndv")
+    val options = bloomCols.flatMap(c =>
+      (s"parquet.bloom.filter.enabled#$c" -> "true") +:
+        ndv.map(s"parquet.bloom.filter.expected.ndv#$c" -> _).toSeq).toMap
     // Metadata-sized local frames (INSERT VALUES, catalog seeds, CALL
     // outputs) skip the distributed writer: a Spark write job + Hadoop
     // committer costs ~150 ms of pure overhead for a 3-row file. The
@@ -4663,22 +4808,34 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // LocalRelation, so the rows are already on the driver in internal
     // format; write them through Spark's own ParquetWriteSupport (bit-
     // identical encoding to the distributed path — footer stats, NTZ,
-    // rebase modes all match). Anything distributed, clustered, empty,
-    // or bloom-filtered takes the normal job path.
+    // rebase modes all match) and feed them through the same tracker.
+    // Anything distributed, clustered, empty, or bloom-filtered takes
+    // the normal job path.
     physical.queryExecution.optimizedPlan match {
       case lr: logical.LocalRelation
           if bloomCols.isEmpty && lr.data.nonEmpty &&
             lr.data.length <= 10000 =>
         Files.createDirectories(staged)
+        val target = staged.resolve("part-00000-local.parquet")
         writeLocalParquet(lr.data,
           org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .fromAttributes(lr.output),
-          staged.resolve("part-00000-local.parquet"))
-        Written(moveStaged(staged, "data"), Some(lr))
+            .fromAttributes(lr.output), target)
+        tracked.foreach { case (_, t) =>
+          BottomKTracker.observe(t, target.toString, lr.data.iterator) }
       case _ =>
-        writer.parquet(staged.toString)
-        Written(moveStaged(staged, "data"))
+        SketchedWrite.parquet(physical, staged.toString, options,
+          tracked.map(_._2).toSeq)
     }
+    val moved = moveStaged(staged, "data")
+    Written(moved.map(_._2), tracked.fold(Map.empty[String,
+        Map[String, Seq[Long]]]) { case (cols, t) =>
+      val byName = t.sketches
+      moved.map { case (name, path) =>
+        val hashes = byName.getOrElse(name, throw new IllegalStateException(
+          s"the writer tracked no sketch for $name"))
+        Io.normalize(path) -> cols.zip(hashes.map(_.toSeq)).toMap
+      }.toMap
+    })
   }
 
   /** Driver-side parquet write for a metadata-sized row set — the same
@@ -4715,7 +4872,10 @@ class GraftTable(val spark: SparkSession, val root: Path,
     try rows.foreach(w.write) finally w.close()
   }
 
-  private def moveStaged(staged: Path, prefix: String): Seq[String] = {
+  /** Move the staged part files into data/ under fresh names: (staged
+    * file name, moved absolute path) per file. */
+  private def moveStaged(staged: Path, prefix: String)
+      : Seq[(String, String)] = {
     Files.createDirectories(dataDir)
     val parts = Io.listRecursive(staged)
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -4723,7 +4883,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val moved = parts.map { p =>
       val target = dataDir.resolve(s"$prefix-${UUID.randomUUID()}.parquet")
       Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      target.toAbsolutePath.toString
+      p.getFileName.toString -> target.toAbsolutePath.toString
     }
     // best-effort staging cleanup (left-over dirs become orphan fodder)
     Io.listRecursive(staged).foreach(Files.deleteIfExists(_))
@@ -5043,12 +5203,37 @@ final class UnknownRefException(val refName: String)
   extends IllegalArgumentException(s"unknown ref $refName")
 
 object GraftTable {
-  /** A permanent erase as [[GraftTable.rewriteDataFilesErasing]]
-    * applies it: `rows` maps the rewrite's rows to the erased rows,
-    * `operation` labels the commit, `columns` are the logical columns
-    * whose values the erase removes (their NDV sketches lose them). */
-  private[lake] final case class Erase(rows: DataFrame => DataFrame,
-      operation: String, columns: Seq[String])
+  /** A permanent erase as [[GraftTable.eraseSubject]] applies it:
+    * `bind` selects the subject's rows (`keyColumn` against a literal),
+    * `rows` maps a victim file's rows to the erased rows, `operation`
+    * labels the commit, `columns` are the logical columns whose values
+    * the erase removes (their NDV sketches lose them), and `dropsRows`
+    * says whole rows go (a file holding only the subject is then
+    * dropped unread). */
+  private[lake] final case class Erase(keyColumn: String,
+      bind: DataFrame => Column, rows: DataFrame => DataFrame,
+      operation: String, columns: Seq[String], dropsRows: Boolean)
+
+  /** The rewrite target size ([[GraftTable.rewriteDataFiles]]'s
+    * default `target-file-size-bytes`). */
+  private[lake] val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** Rows below which a data file is tiny: the parquet writer has not
+    * yet checked its page size once, so the file is one page per column
+    * plus a footer. */
+  private[lake] val TinyFileRows: Int = org.apache.parquet.column
+    .ParquetProperties.DEFAULT_MINIMUM_RECORD_COUNT_FOR_CHECK
+
+  /** Types whose manifest min = max pins every non-null value: the
+    * stats are exact, and a string pair truncated by the writer could
+    * only be equal if untruncated. Floats are out: -0.0 = 0.0 and NaN
+    * are not told apart by the bounds. */
+  private[lake] def exactStats(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         StringType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case _ => false
+  }
 
   /** The KMV estimator over a stored sketch: exact passthrough below
     * k, else (k-1)·2^60 div theta — the same integer form

@@ -171,9 +171,9 @@ final case class TableMeta(
     // across renames, never resurrected by re-added names — the same
     // reasons file stats key physically). Present only after
     // computeTableStats ran; plain main appends fold their new rows in
-    // (the rows in hand when the driver-side writer took them, else a
-    // bottom-k pass over the new files), and a permanent erase refolds
-    // them from the rewritten files' own sketches in its rewrite commit.
+    // (hashed by the writer as it writes them), and a permanent erase
+    // refolds them from the committed files' own sketches in its
+    // rewrite commit.
     columnNdv: Map[String, NdvSketch] = Map.empty)
 
 object Json {

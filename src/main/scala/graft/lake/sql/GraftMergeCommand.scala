@@ -299,7 +299,7 @@ case class GraftMergeCommand(
           case (rw, null) => rw
           case (rw, ins) => rw.unionByName(ins)
         })
-        Some((affected, out, Map(
+        Some((affected, Some(out), Map(
           "mode" -> "copy-on-write",
           "merge-affected-files" -> affected.size.toString)))
       }

@@ -12,14 +12,16 @@ import org.apache.spark.sql.types._
 import graft.{SparkJobs, SparkSuite}
 import graft.rel.Kmv
 
-/** A permanent [[ErasePii]] erase applied inside the rewrite it runs
-  * anyway, checked against a reference model: the four-step
-  * composition the erase used before ([[ErasePiiReference]]: DML, a
-  * rewrite-all, a position-delete rewrite, expiry, orphan sweep). Both
-  * must leave the same rows and the same NDV sketches; the one-pass
-  * erase must also write no delete file, commit two metadata versions,
-  * run fewer Spark jobs, and leave no byte of the erased values or
-  * their sketch hashes anywhere under the table root. */
+/** A permanent [[ErasePii]] erase, one rewrite of just the files that
+  * hold the subject, checked against a reference model: the composition
+  * the erase used before ([[ErasePiiReference]]: DML, a rewrite-all, a
+  * position-delete rewrite, a sketch refold, expiry, orphan sweep).
+  * Both must leave the same rows and the same NDV sketches; the erase
+  * must also write no delete file, commit two metadata versions, run
+  * fewer Spark jobs, leave the files without the subject in place,
+  * refuse while a kept ref still reads the subject, and leave no byte
+  * of the erased values or their sketch hashes anywhere under the
+  * table root. */
 class ErasePiiSpec extends SparkSuite {
   import ErasePiiSpec._
 
@@ -90,6 +92,16 @@ class ErasePiiSpec extends SparkSuite {
         Row(null, "anon-b", "b@example.com", "key-b"))))
       t.computeTableStats()
     }, "case-3"))
+  }
+
+  test("a file whose only non-NULL key is the subject's keeps its NULL-key " +
+    "rows, as in the reference") {
+    matchesReference(Scenario(t => {
+      t.append(frame(t, (0 until 10).map(person)))
+      t.append(frame(t, Seq(person(7), person(7),
+        Row(null, "anon-c", "c@example.com", "key-c"))))
+      t.computeTableStats()
+    }, "case-7"))
   }
 
   test("other subjects' live position and equality deletes: same rows " +
@@ -259,6 +271,200 @@ class ErasePiiSpec extends SparkSuite {
     }
   }
 
+  private def dataPaths(t: GraftTable): Set[String] =
+    t.manifestOf(t.currentSnapshot.get).filter(_.content == 0)
+      .map(_.path).toSet
+
+  /** Every file under the root, decoded when parquet, is free of
+    * `values` and of their sketch hashes. */
+  private def assertScrubbed(t: GraftTable, values: Seq[String],
+      clue: String): Unit = {
+    val hashes = values.map(hash60)
+    for (p <- Io.listRecursive(t.root)) {
+      val bytes = Files.readAllBytes(p)
+      val text = new String(bytes, UTF_8)
+      assert(!values.exists(text.contains), s"$clue: plaintext in $p")
+      assert(!hashes.exists(holdsToken(bytes, _)), s"$clue: a hash in $p")
+      if (p.toString.endsWith(".parquet"))
+        assert(!spark.read.parquet(p.toString).collect().toSeq
+          .flatMap(_.toSeq).filter(_ != null).map(_.toString)
+          .exists(values.toSet), s"$clue: a value decodes from $p")
+    }
+  }
+
+  /** Four data files of 100 rows (not tiny), sketches on. */
+  private def fourHundreds(layout: String): GraftTable = {
+    val t = newTable(layout)
+    (0 until 4).foreach(f =>
+      t.append(frame(t, (f * 100 until f * 100 + 100).map(person))))
+    t.computeTableStats()
+    t
+  }
+
+  test("a subject in one of four files: only that file is rewritten, " +
+    "the other three entries keep their paths") {
+    for (layout <- layouts; mode <- modes()) {
+      val t = fourHundreds(layout)
+      val before = dataPaths(t)
+      ErasePii.run(t, "case_id", "case-150", mode)
+      val after = dataPaths(t)
+      assert((before intersect after).size === 3, s"$layout $mode")
+      assert(after.size === 4, s"$layout $mode")
+      assert(!rows(t).exists(r => r.startsWith("case-150|name-150")),
+        s"$layout $mode")
+    }
+  }
+
+  test("tiny files ride along into the erase's output; a lone tiny file " +
+    "is not rewritten on its own") {
+    for (layout <- layouts; mode <- modes()) {
+      val t = fourHundreds(layout)
+      (400 until 405).foreach(i => t.append(frame(t, Seq(person(i)))))
+      val big = dataPaths(t).filter(p =>
+        t.manifestOf(t.currentSnapshot.get).exists(e =>
+          e.path == p && e.recordCount == 100))
+      ErasePii.run(t, "case_id", "case-402", mode)
+      val after = dataPaths(t)
+      assert(after.size === 5, s"$layout $mode: the one-row files merged")
+      assert(big.subsetOf(after), s"$layout $mode: 100-row files kept")
+      assert(rows(t).size === (if (mode == ErasePii.DeleteRow) 404 else 405))
+    }
+    for (layout <- layouts) {
+      val t = fourHundreds(layout)
+      t.append(frame(t, Seq(person(400))))
+      t.append(frame(t, Seq(person(401))))
+      val before = dataPaths(t)
+      ErasePii.run(t, "case_id", "case-400", ErasePii.DeleteRow)
+      assert(dataPaths(t).size === 5, layout)
+      assert(dataPaths(t).subsetOf(before), s"$layout: nothing rewritten")
+    }
+  }
+
+  test("on a table without deletes the erase runs at most two Spark " +
+    "jobs: the probe and the write") {
+    for (layout <- layouts; mode <- modes()) {
+      val t = newTable(layout)
+      (0 until 4).foreach(f =>
+        t.append(frame(t, (f * 10 until f * 10 + 10).map(person))))
+      t.computeTableStats()
+      val (_, jobs) = SparkJobs.count(spark.sparkContext)(
+        ErasePii.run(t, "case_id", "case-7", mode))
+      assert(jobs <= 2, s"$layout $mode: $jobs jobs")
+    }
+  }
+
+  test("a DeleteRow whose files hold only the subject, proven by their " +
+    "stats, runs no Spark job and reads no file") {
+    val subject = Row("zz-subject", "Zed", "zed@erase.test", "key-zz")
+    for (layout <- layouts) {
+      val t = newTable(layout)
+      t.append(frame(t, (0 until 10).map(person)))
+      t.append(frame(t, Seq(subject)))
+      t.append(frame(t, Seq(subject)))
+      t.computeTableStats()
+      val (_, jobs) = SparkJobs.count(spark.sparkContext)(
+        ErasePii.run(t, "case_id", "zz-subject", ErasePii.DeleteRow))
+      assert(jobs === 0, layout)
+      assert(rows(t) === (0 until 10).map(person)
+        .map(_.toSeq.mkString("|")).sorted, layout)
+      assert(t.manifestOf(t.currentSnapshot.get).size === 1, layout)
+      assertScrubbed(t, subject.toSeq.map(_.toString), layout)
+    }
+  }
+
+  test("a live position delete on another file: that file is rewritten " +
+    "too, and no delete file remains") {
+    for (layout <- layouts; mode <- modes()) {
+      val t = fourHundreds(layout)
+      val before = dataPaths(t)
+      t.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+      t.delete(col("case_id") === "case-221")
+      t.setProperties(Map("write.delete.mode" -> layout))
+      ErasePii.run(t, "case_id", "case-7", mode)
+      val entries = t.manifestOf(t.currentSnapshot.get)
+      assert(entries.forall(_.content == 0), s"$layout $mode")
+      // files 0 (the subject) and 2 (the delete) rewritten, 1 and 3 kept
+      assert((before intersect dataPaths(t)).size === 2, s"$layout $mode")
+      assert(!rows(t).exists(_.startsWith("case-221|")), s"$layout $mode")
+      assert(rows(t).size === (if (mode == ErasePii.DeleteRow) 398 else 399))
+      assert(!t.statsTable.collect().exists(_.getBoolean(5)),
+        s"$layout $mode: the refolded sketch is fresh")
+    }
+  }
+
+  test("a subject a MOR delete already hid is still erased from its " +
+    "file's bytes") {
+    val subject = Row("case-Hd9k", "Hidda-Krel", "hk9@erase.test", "key-Hd9k")
+    for (mode <- modes()) {
+      val t = newTable("merge-on-read")
+      t.append(frame(t, (0 until 100).map(person) :+ subject))
+      t.append(frame(t, (100 until 200).map(person)))
+      t.computeTableStats()
+      t.delete(col("case_id") === "case-Hd9k")
+      val before = dataPaths(t)
+      ErasePii.run(t, "case_id", "case-Hd9k", mode)
+      assert((before intersect dataPaths(t)).size === 1, s"$mode")
+      assert(rows(t).size === 200, s"$mode")
+      assertScrubbed(t, subject.toSeq.map(_.toString), s"$mode")
+    }
+  }
+
+  test("an erase that leaves no data file: reads are empty and the " +
+    "sketches refold to empty") {
+    for (layout <- layouts) {
+      val t = newTable(layout)
+      t.append(frame(t, Seq(person(7))))
+      t.append(frame(t, Seq(person(7), person(7))))
+      t.computeTableStats()
+      ErasePii.run(t, "case_id", "case-7", ErasePii.DeleteRow)
+      assert(t.read().count() === 0L, layout)
+      assert(t.manifestOf(t.currentSnapshot.get).isEmpty, layout)
+      assert(t.meta.columnNdv.nonEmpty, layout)
+      assert(t.meta.columnNdv.values.forall(_.hashes.isEmpty), layout)
+      assert(!t.statsTable.collect().exists(_.getBoolean(5)), layout)
+      assertScrubbed(t, person(7).toSeq.map(_.toString), layout)
+    }
+  }
+
+  private def refState(t: GraftTable) =
+    (t.version, rows(t), t.refs, t.readRef("audit").collect().length)
+
+  test("a tag or branch whose snapshot holds the subject makes the erase " +
+    "refuse before any commit, naming the ref") {
+    for (kind <- Seq("tag", "branch")) {
+      val t = newTable("merge-on-read")
+      t.append(frame(t, (0 until 10).map(person)))
+      if (kind == "tag") t.createTag("audit") else t.createBranch("audit")
+      t.append(frame(t, (10 until 20).map(person)))
+      val before = refState(t)
+      val e = intercept[IllegalArgumentException](
+        ErasePii.run(t, "case_id", "case-7", ErasePii.DeleteRow))
+      assert(e.getMessage.contains("audit"), kind)
+      assert(!e.getMessage.contains("case-7"), kind)
+      assert(refState(t) === before, kind)
+    }
+  }
+
+  test("a ref lapsed under max-ref-age, or one that never held the " +
+    "subject, lets the erase proceed") {
+    val lapsed = newTable("merge-on-read")
+    lapsed.setProperties(Map("history.expire.max-ref-age-ms" -> "0"))
+    lapsed.append(frame(lapsed, (0 until 10).map(person)))
+    lapsed.createTag("audit")
+    Thread.sleep(5)
+    ErasePii.run(lapsed, "case_id", "case-7", ErasePii.DeleteRow)
+    assert(lapsed.refs.isEmpty)
+    assert(rows(lapsed).size === 9)
+    val clean = newTable("merge-on-read")
+    clean.append(frame(clean, (0 until 10).map(person)))
+    clean.createTag("audit")
+    clean.append(frame(clean, Seq(person(77))))
+    ErasePii.run(clean, "case_id", "case-77", ErasePii.DeleteRow)
+    assert(clean.refs.keySet === Set("audit"))
+    assert(rows(clean).size === 10)
+    assert(clean.readRef("audit").count() === 10L)
+  }
+
   test("a reader whose hint read came just before the erase deleted " +
     "that version re-reads the hint instead of failing") {
     val t = newTable("merge-on-read")
@@ -323,28 +529,26 @@ object ErasePiiSpec {
       subject: String, nullify: Seq[String] = pii)
 }
 
-/** The permanent erase as graft composed it before the erase moved
-  * into the rewrite: the DML (a MOR delete file or a COW rewrite, and
-  * its commit), then a rewrite-all that applies it, a position-delete
-  * rewrite, expiry and the orphan sweep. Kept as the reference model
-  * [[ErasePiiSpec]] checks the one-pass erase against. */
+/** The permanent erase as graft composed it before the erase became
+  * one rewrite of the files holding the subject: the DML (a MOR delete
+  * file or a COW rewrite, and its commit), then a rewrite-all that
+  * applies it, a position-delete rewrite, a refold of the NDV sketches
+  * from the rewritten files' stamps, expiry and the orphan sweep. Kept
+  * as the reference model [[ErasePiiSpec]] checks the erase against. */
 object ErasePiiReference {
   def run(table: GraftTable, keyColumn: String, keyValue: Any,
       mode: ErasePii.Mode): Unit = {
     table.requireGcEnabled("permanently erase PII")
     val pred = col(keyColumn) === lit(keyValue)
-    val erased = mode match {
+    mode match {
       case ErasePii.NullifyColumns(cols) =>
         table.update(pred, cols.map(_ -> lit(null)).toMap)
-        cols
       case ErasePii.DeleteRow =>
         table.delete(pred)
-        table.schema.fieldNames.toSeq
     }
-    table.rewriteDataFilesErasing(Map("rewrite-all" -> "true",
-      "target-file-size-bytes" -> (128L * 1024 * 1024).toString),
-      Some(GraftTable.Erase(identity, "replace", erased)))
+    table.rewriteDataFiles(Map("rewrite-all" -> "true"))
     table.rewritePositionDeleteFiles()
+    table.refoldColumnStats()
     table.expireSnapshots(olderThanMs = System.currentTimeMillis() + 1)
     table.removeOrphanFiles(System.currentTimeMillis() + 1, force = true)
   }

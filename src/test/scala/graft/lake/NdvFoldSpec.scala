@@ -9,10 +9,10 @@ import org.apache.spark.sql.types._
 import graft.{SparkJobs, SparkSuite}
 import graft.rel.Kmv
 
-/** NDV-sketch upkeep off the Spark scheduler: an append the driver-side
-  * writer takes folds the rows it holds (zero Spark jobs) into the same
-  * sketches the written-file pass stamps; every other append takes the
-  * job path to the same sketches; a permanent erase clears the erased
+/** NDV-sketch upkeep off the Spark scheduler: every writer, the
+  * driver-side one (zero Spark jobs) and the distributed one (its write
+  * job only), hashes the rows as it writes them into the same sketches
+  * the written-file pass computes; a permanent erase clears the erased
   * values out of the table sketches inside its rewrite commit. */
 class NdvFoldSpec extends SparkSuite {
 
@@ -176,6 +176,56 @@ class NdvFoldSpec extends SparkSuite {
     check("clustered", Map("write.clustered-by" -> "k",
       "write.clustered-by.files" -> "3"), 50)
     check("large", Map.empty, 10001)
+  }
+
+  test("the stamps a distributed write takes equal the written-file " +
+    "pass per file and per table for every NDV-eligible type, on " +
+    "plain, renamed, bloom and clustered tables") {
+    val K = 16
+    def check(label: String, props: Map[String, String]): Unit = {
+      val t = table(label, allTypes, props)
+      t.append(frame(t, typedRows(0, 200)))
+      t.computeTableStats(Nil, K)
+      t.renameColumn("s", "s_renamed")
+      val cols = t.schema.fieldNames.toSeq
+      val before = t.meta.columnNdv
+      // repartitioned: the rows leave the driver and tasks write them
+      val batch = frame(t, typedRows(200, 300)).repartition(3)
+      val snap = t.append(batch)
+      val added = addedEntries(t, snap)
+      assert(added.nonEmpty, label)
+      val byJob = t.ndvFileHashJob(t.meta, added.map(absPath(t, _)), cols, K)
+      added.foreach { e =>
+        val fileJob = byJob.getOrElse(Io.normalize(absPath(t, e)), Map.empty)
+        cols.foreach(c => assert(e.ndv(phys(t, c)) ===
+          FileNdv(K, fileJob.getOrElse(c, Nil)), s"$label/$c: ${e.path}"))
+      }
+      val oracle = bottomK(batch, cols, K)
+      cols.foreach { c =>
+        val old = before(phys(t, c))
+        assert(t.meta.columnNdv(phys(t, c)).hashes ===
+          (old.hashes ++ oracle(c)).distinct.sorted.take(K),
+          s"$label/$c: table fold")
+      }
+      assert(added.forall(_.ndv(phys(t, "z")) === FileNdv(K, Nil)), label)
+    }
+    check("plain_types", Map.empty)
+    check("bloom_types", Map("write.bloom-columns" -> "b"))
+    check("clustered_types", Map("write.clustered-by" -> "i",
+      "write.clustered-by.files" -> "3"))
+  }
+
+  test("a 10,001-row append to an analyzed table runs one Spark job, " +
+    "the write") {
+    val t = table("one_job", "k BIGINT, tag STRING")
+    t.append(spark.range(500).selectExpr("id AS k", "concat('t', id) AS tag"))
+    t.computeTableStats(Nil, 64)
+    val batch = spark.createDataFrame((0 until 10001).map(i =>
+      Row(1000L + i, s"u${i % 700}")).asJava, t.schema)
+    val (snap, jobs) = SparkJobs.count(spark.sparkContext)(t.append(batch))
+    assert(jobs === 1)
+    assert(addedEntries(t, snap).forall(_.ndv.keySet === Set("k", "tag")))
+    assert(t.columnNdv("k").exists(_ > 10000L))
   }
 
   private val piiDdl = "case_id STRING, first_name STRING, " +
