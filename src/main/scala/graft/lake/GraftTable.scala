@@ -30,9 +30,11 @@ import org.apache.spark.sql.graft.{BottomKTracker, SketchedWrite}
   *
   * MOR reads mask deleted rows with one per-task predicate
   * ([[DeleteFilter]]) over the Parquet source's (_metadata.file_path,
-  * _metadata.row_index) — positions are captured from the same
-  * metadata columns at delete time, so they stay consistent (SURVEY.md
-  * §7 "hard parts"). The plan carries delete-file paths, not rows.
+  * _metadata.row_index) and equality-key columns, for position deletes
+  * and every equality-key shape alike — positions are captured from
+  * the same metadata columns at delete time, so they stay consistent
+  * (SURVEY.md §7 "hard parts"). The plan carries delete-file paths, not
+  * rows, and no join.
   *
   * Scale design: file pruning happens BEFORE plan construction — the
   * manifest's per-file min/max stats select the Parquet file list, then
@@ -1024,6 +1026,24 @@ class GraftTable(val spark: SparkSession, val root: Path,
     commitDeltaFast(base, id, branch, op, Set.empty, added, summary,
       metaTweak)
 
+  /** [[commitAddOnlyFast]], or on a legacy inline-manifest parent the
+    * checked commit of the head's entries plus `added`, onto `branch`
+    * (main when None). */
+  private def commitAdded(b: Base, id: Long, branch: Option[String],
+      op: String, added: Seq[ManifestEntry], summary: Map[String, String],
+      metaTweak: TableMeta => TableMeta = identity): SnapshotMeta =
+    commitAddOnlyFast(b, id, branch, op, added, summary, metaTweak)
+      .getOrElse {
+        val all =
+          headSnapshot(b, branch).map(manifestOf).getOrElse(Nil) ++ added
+        branch match {
+          case None => commitSnapshot(b, id, op, all, summary,
+            metaTweak = metaTweak)
+          case Some(br) =>
+            commitSnapshotOnBranch(b, id, op, br, all, summary, metaTweak)
+        }
+      }
+
   /** O(touched) fast commit for REMOVE+ADD operations (COW rewrites,
     * MERGE): drops every data entry whose absolute path is in
     * `removedAbs` and appends `added`, reading ONLY the parent
@@ -2011,10 +2031,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
           e.content == 0 && !parentPaths(e.path))
         val removedData = parentSide.filter(e =>
           e.content == 0 && !childPaths(e.path))
-        val addedPosDel = childSide.filter(e =>
-          e.content == 1 && !parentPaths(e.path))
-        val addedEqDel = childSide.filter(e =>
-          e.content == 2 && !parentPaths(e.path))
+        val added = childSide.filter(e =>
+          e.content != 0 && !parentPaths(e.path))
+        val addedPosDel = added.filter(_.content == 1)
         lazy val parentEntries =
           parentSnap.map(manifestOf).getOrElse(Nil)
         def tag(df: DataFrame, tpe: String): DataFrame = df
@@ -2034,51 +2053,33 @@ class GraftTable(val spark: SparkSession, val root: Path,
           else Seq(tag(readEntries(
             removedData ++ parentEntries.filter(_.content != 0)),
             "delete"))
-        // position deletes name their victims as (file, pos): scan only
-        // the data files the delete files' file_path bounds admit (all
-        // of them when a delete file carries no bounds) and keep the
-        // rows the delete filter over just the ADDED files marks.
-        // Stat truncation only widens a window, so the bound is
-        // conservative; no Spark job runs before the read itself.
-        val posDeletes =
-          if (addedPosDel.isEmpty) Nil
+        // rows VISIBLE at the parent that the ADDED delete files mask,
+        // by the read's own filter over just those files (every parent
+        // row is older than an added equality delete). Position deletes
+        // alone name their victims' files: scan only the data files the
+        // delete files' file_path bounds admit (all of them when a
+        // delete file carries no bounds). Stat truncation only widens a
+        // window, so the bound is conservative; no Spark job runs
+        // before the read itself.
+        val morDeletes =
+          if (added.isEmpty) Nil
           else {
             val ranges = addedPosDel.flatMap(_.stats.get("file_path"))
             // stats were ordered by UTF8String bytes — compare the same
             // way (String's UTF-16 order diverges on non-ASCII paths)
-            def leq(a: String, b: String): Boolean =
-              org.apache.spark.unsafe.types.UTF8String.fromString(a)
-                .compareTo(
-                  org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0
-            val rows = readWithLineage(parentEntries.filter(e =>
-              e.content == 0 && (ranges.size < addedPosDel.size ||
+            import org.apache.spark.unsafe.types.UTF8String.{fromString => u8}
+            def leq(a: String, b: String): Boolean = u8(a).compareTo(u8(b)) <= 0
+            val victims = parentEntries.filter(e => e.content == 0 &&
+              (added.exists(_.content == 2) ||
+                ranges.size < addedPosDel.size ||
                 Io.uriForms(abs(e)).exists(u =>
-                  ranges.exists(r => leq(r.min, u) && leq(u, r.max))))))
-            Seq(tag(rows.filter(DeleteFilter(rows(FileCol), rows(PosCol),
-              Nil, DeleteSet(addedPosDel.map(abs), Nil, Nil, Map.empty,
-                DeleteFilter.sessionConf(spark)))), "delete"))
+                  ranges.exists(r => leq(r.min, u) && leq(u, r.max)))))
+            val rows =
+              readWithLineage(victims ++ parentEntries.filter(_.content != 0))
+            Seq(tag(rows.filter(deletedBy(rows, victims, added,
+              meta.physicalNames)), "delete"))
           }
-        // equality deletes kill every visible parent row matching a key
-        val eqDeletes = addedEqDel.groupBy(_.equalityColumns).toSeq
-          .map { case (cols, files) =>
-            // key files store physical names; surface logical for the
-            // by-name semi join against the logical parent read
-            val rev = meta.physicalNames.map(_.swap)
-            val logicalCols = cols.map(c => rev.getOrElse(c, c))
-            // schema from the first footer driver-side (Spark's own
-            // no-mergeSchema rule, stamped row.metadata) — skips the
-            // footer-inference Spark job per window; manifest-backed
-            // scan (sizes are committed) skips the path stats too
-            val keys = org.apache.spark.sql.graft.ManifestRead.parquet(
-              spark, files.map(absSized),
-              GraftTable.inferParquetSchema(spark,
-                files.map(f => java.nio.file.Paths.get(abs(f)))))
-              .select(cols.zip(logicalCols).map { case (p, l) =>
-                col(p).as(l) }: _*).distinct()
-            tag(readEntries(parentEntries)
-              .join(keys, logicalCols, "left_semi"), "delete")
-          }
-        inserts ++ cowDeletes ++ posDeletes ++ eqDeletes
+        inserts ++ cowDeletes ++ morDeletes
       }
     if (slices.isEmpty) emptyOut
     else slices.reduce(_ unionByName _)
@@ -2116,14 +2117,14 @@ class GraftTable(val spark: SparkSession, val root: Path,
   }
 
   /** Stats-prune data entries that provably contain no row matching
-    * `pred`; delete entries (content != 0) always survive so MOR masks
-    * still apply to whatever remains. Shared by readWhere and every
-    * predicate-driven write (DELETE/UPDATE hit discovery) — at 100 TB
-    * this is what turns `UPDATE ... WHERE case_id='x'` into a scan of
-    * the files whose min/max admit 'x', not a full-table scan. */
+    * the analyzed `conjuncts` of a predicate; delete entries (content !=
+    * 0) always survive so MOR masks still apply to whatever remains.
+    * Shared by readWhere and every predicate-driven write (DELETE/UPDATE
+    * hit discovery) — at 100 TB this is what turns `UPDATE ... WHERE
+    * case_id='x'` into a scan of the files whose min/max admit 'x', not
+    * a full-table scan. */
   private def pruneByPredicate(entries: Seq[ManifestEntry],
-      bind: DataFrame => Column): Seq[ManifestEntry] = {
-    val conjuncts = analyzeConjuncts(bind)
+      conjuncts: Seq[Expression]): Seq[ManifestEntry] = {
     // hoisted: each `meta` access re-reads and re-parses the metadata
     // file — per-entry-per-conjunct lookups would dominate pruning on
     // a many-thousand-file table
@@ -2154,7 +2155,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
           if refs.map(_.entryCount.toLong).sum
             >= metadataDistributedThreshold =>
         prunedDistributed(refs, bind)
-      case _ => pruneByPredicate(manifestOf(s), bind)
+      case _ => pruneByPredicate(manifestOf(s), analyzeConjuncts(bind))
     }
 
   /** Executor-side stats pruning: ships the analyzed conjuncts plus the
@@ -2210,8 +2211,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
   /** Live rows plus (file, position) lineage columns — the MOR read
     * path; also what delete capture and DML hit discovery use, so
     * positions always round-trip through the same _metadata columns.
-    * Deletes apply as ONE [[DeleteFilter]] predicate over the scan,
-    * except equality sets whose key SHAPE it cannot carry. */
+    * Deletes of every kind and equality-key shape apply as ONE
+    * [[DeleteFilter]] predicate over the scan. */
   private[lake] def readWithLineage(entries: Seq[ManifestEntry],
       sch: StructType = null,
       mapping: Map[String, String] = null): DataFrame = {
@@ -2222,67 +2223,29 @@ class GraftTable(val spark: SparkSession, val root: Path,
       return emptyDfOf(readSchema)
         .withColumn(FileCol, lit(null).cast("string"))
         .withColumn(PosCol, lit(null).cast("long"))
-    var df = scanParquet(data.map(absSized), readSchema, m, lineage = true)
+    val df = scanParquet(data.map(absSized), readSchema, m, lineage = true)
+    val deletes = entries.filter(_.content != 0)
+    if (deletes.isEmpty) df else df.filter(!deletedBy(df, data, deletes, m))
+  }
+
+  /** `graft_deleted` over `df`'s lineage and key columns: true for a
+    * row of `data` that a file among `deletes` masks. */
+  private def deletedBy(df: DataFrame, data: Seq[ManifestEntry],
+      deletes: Seq[ManifestEntry], mapping: Map[String, String]): Column = {
     // equalityColumns (and the key files) use PHYSICAL names; the
     // data frame surfaces logical names — bridge via the reverse map
-    val rev = m.map(_.swap)
-    def logical(c: String) = rev.getOrElse(c, c)
-    val (keyed, joined) = entries.filter(_.content == 2)
-      .groupBy(_.equalityColumns).toSeq.partition {
-        case (Seq(c), _) => readSchema.find(_.name == logical(c))
-          .exists(_.dataType match {
-            case ByteType | ShortType | IntegerType | LongType |
-                 StringType => true
-            case _ => false
-          })
-        case _ => false
-      }
-    // each row's data sequence is its file's addedSnapshotId, under
-    // every spelling _metadata.file_path may use (the %20 law)
-    lazy val dataSeq = data.flatMap(e =>
-      Io.uriForms(abs(e)).map(_ -> e.addedSnapshotId)).toMap
-    val posDel = entries.filter(_.content == 1).map(abs)
-    if (posDel.nonEmpty || keyed.nonEmpty)
-      df = df.filter(!DeleteFilter(df(FileCol), df(PosCol),
-        keyed.map { case (cols, _) => df(logical(cols.head)) },
-        DeleteSet(posDel,
-          keyed.map(_._2.map(f => abs(f) -> f.addedSnapshotId)),
-          keyed.map(_._1.head),
-          if (keyed.isEmpty) Map.empty else dataSeq,
-          DeleteFilter.sessionConf(spark))))
-    // other key shapes: ONE anti-join per column set against the
-    // newest delete seq per key tuple (Spark picks the join strategy
-    // from the key set's size); rows carry their data sequence via a
-    // broadcast file → seq equi-join (a NULL seq never matches)
-    if (joined.nonEmpty) {
-      val seqDf = spark.createDataFrame(dataSeq.toSeq.map { case (u, s) =>
-        Row(u, s) }.asJava, StructType(Seq(
-          StructField("__graft_seq_file", StringType),
-          StructField(SeqCol, LongType))))
-      df = df.join(broadcast(seqDf),
-        df(FileCol) === col("__graft_seq_file"),
-        "left").drop("__graft_seq_file")
-      for ((cols, files) <- joined) {
-        val perFile = files.map { f =>
-          // driver-side footer schema (no inference job, each file's
-          // own written types); manifest-backed scan (no path stats)
-          org.apache.spark.sql.graft.ManifestRead.parquet(
-            spark, Seq(absSized(f)),
-            GraftTable.inferParquetSchema(spark,
-              Seq(java.nio.file.Paths.get(abs(f)))))
-            .select(cols.map(c => col(c).as(s"__k_$c")): _*)
-            .withColumn("__k_seq", lit(f.addedSnapshotId))
-        }
-        val keys = perFile.reduce(_ unionByName _)
-          .groupBy(cols.map(c => col(s"__k_$c")): _*)
-          .agg(max(col("__k_seq")).as("__k_seq"))
-        val cond = cols.map(c => df(logical(c)) === keys(s"__k_$c"))
-          .reduce(_ && _) && col(SeqCol) < keys("__k_seq")
-        df = df.join(keys, cond, "left_anti")
-      }
-      df = df.drop(SeqCol)
-    }
-    df
+    val rev = mapping.map(_.swap)
+    val sets = deletes.filter(_.content == 2).groupBy(_.equalityColumns)
+      .toSeq
+    DeleteFilter(df(FileCol), df(PosCol),
+      sets.flatMap(_._1.map(c => df(rev.getOrElse(c, c)))),
+      DeleteSet(deletes.filter(_.content == 1).map(abs),
+        sets.map(_._2.map(f => abs(f) -> f.addedSnapshotId)), sets.map(_._1),
+        // each row's data sequence is its file's addedSnapshotId, under
+        // every spelling _metadata.file_path may use (the %20 law)
+        if (sets.isEmpty) Map.empty else data.flatMap(e =>
+          Io.uriForms(abs(e)).map(_ -> e.addedSnapshotId)).toMap,
+        DeleteFilter.sessionConf(spark)))
   }
 
   // ---- writes ----
@@ -2896,15 +2859,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       val delEntries = statEntries(moved, content = 1, snapId)
       val summary =
         Map("deleted-records" -> n.toString, "mode" -> "merge-on-read")
-      Some(commitAddOnlyFast(b, snapId, branch, "delete", delEntries,
-        summary).getOrElse {
-        val all = headSnap.map(manifestOf).getOrElse(Nil) ++ delEntries
-        branch match {
-          case None => commitSnapshot(b, snapId, "delete", all, summary)
-          case Some(br) =>
-            commitSnapshotOnBranch(b, snapId, "delete", br, all, summary)
-        }
-      })
+      Some(commitAdded(b, snapId, branch, "delete", delEntries, summary))
     } finally hits.unpersist()
   }
 
@@ -2945,16 +2900,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       val dataEntries = statEntries(newMoved, content = 0, snapId)
       val added = delEntries ++ dataEntries
       val summary = Map("mode" -> "merge-on-read")
-      Some(commitAddOnlyFast(b, snapId, branch, "overwrite", added,
-        summary).getOrElse {
-        val all = headSnap.map(manifestOf).getOrElse(Nil) ++ added
-        branch match {
-          case None =>
-            commitSnapshot(b, snapId, "overwrite", all, summary)
-          case Some(br) => commitSnapshotOnBranch(b, snapId,
-            "overwrite", br, all, summary)
-        }
-      })
+      Some(commitAdded(b, snapId, branch, "overwrite", added, summary))
     } finally hits.unpersist()
   }
 
@@ -2973,14 +2919,25 @@ class GraftTable(val spark: SparkSession, val root: Path,
   private def equalityDeleteOn(keys: DataFrame,
       explicitBranch: Option[String]): Option[SnapshotMeta] = {
     val branch = resolveBranch(explicitBranch)
+    val b = captureBase()
+    val (snapId, cols, entries) = writeKeyFile(keys)
+    if (entries.isEmpty) return None
+    val summary =
+      Map("mode" -> "equality", "equality-columns" -> cols.mkString(","))
+    // add-only (one equality-delete file): O(delta) fast commit
+    Some(commitAdded(b, snapId, branch, "delete", entries, summary))
+  }
+
+  /** Stage `keys` (logical names) as one equality-delete file under
+    * PHYSICAL names, like every other file in the table: the commit's
+    * snapshot id, the physical key columns and the file's entry (none,
+    * and no file, when `keys` is empty). */
+  private def writeKeyFile(keys: DataFrame)
+      : (Long, Seq[String], Seq[ManifestEntry]) = {
     val logicalCols = keys.schema.fieldNames.toSeq
     require(logicalCols.toSet.subsetOf(schema.fieldNames.toSet),
       s"equality-delete columns $logicalCols not in table schema")
-    // key files and the manifest's equalityColumns use PHYSICAL names,
-    // like every other file in the table
-    val m = meta.physicalNames
-    val cols = logicalCols.map(physName(m))
-    val b = captureBase()
+    val cols = logicalCols.map(physName(meta.physicalNames))
     val staged = stageDir()
     keys.distinct()
       .select(logicalCols.zip(cols).map { case (l, p) =>
@@ -2988,24 +2945,11 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .coalesce(1).write.parquet(staged.toString)
     val moved = moveStaged(staged, "eqdelete").map(_._2)
     val snapId = nextSnapshotHint
-    val entries = statEntries(moved, content = 2, snapId)
+    val es = statEntries(moved, content = 2, snapId)
       .map(_.copy(equalityColumns = cols))
-    val n = entries.map(_.recordCount).sum
-    if (n == 0) { moved.foreach(p => Files.deleteIfExists(Path.of(p))); return None }
-    val summary =
-      Map("mode" -> "equality", "equality-columns" -> cols.mkString(","))
-    // add-only (one equality-delete file): O(delta) fast commit
-    Some(commitAddOnlyFast(b, snapId, branch, "delete", entries, summary)
-      .getOrElse {
-        val baseEntries = headSnapshot(b, branch).map(manifestOf)
-          .getOrElse(Nil)
-        branch match {
-          case None => commitSnapshot(b, snapId, "delete",
-            baseEntries ++ entries, summary)
-          case Some(br) => commitSnapshotOnBranch(b, snapId, "delete",
-            br, baseEntries ++ entries, summary)
-        }
-      })
+    if (es.map(_.recordCount).sum > 0) return (snapId, cols, es)
+    moved.foreach(p => Files.deleteIfExists(Path.of(p)))
+    (snapId, cols, Nil)
   }
 
   /** Single-commit upsert — Iceberg's RowDelta / the Flink
@@ -3024,11 +2968,6 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * is empty (the empty delete file is dropped). */
   def rowDelta(keys: DataFrame, rows: DataFrame,
       extraSummary: Map[String, String] = Map.empty): SnapshotMeta = {
-    val logicalCols = keys.schema.fieldNames.toSeq
-    require(logicalCols.toSet.subsetOf(schema.fieldNames.toSet),
-      s"row-delta key columns $logicalCols not in table schema")
-    val m = meta.physicalNames
-    val cols = logicalCols.map(physName(m))
     val aligned = clusterFields match {
       case Some(fields) =>
         clustered(alignToSchema(rows), fields, clusterFileCount)
@@ -3037,20 +2976,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val branch = resolveBranch(None)
     val b = captureBase()
     branch.foreach(branchHead(b, _)) // validate before writing files
-    val staged = stageDir()
-    keys.distinct()
-      .select(logicalCols.zip(cols).map { case (l, p) =>
-        col(quoted(l)).as(p) }: _*)
-      .coalesce(1).write.parquet(staged.toString)
-    val movedKeys = moveStaged(staged, "eqdelete").map(_._2)
-    val snapId = nextSnapshotHint
-    val delEntries = {
-      val es = statEntries(movedKeys, content = 2, snapId)
-        .map(_.copy(equalityColumns = cols))
-      if (es.map(_.recordCount).sum == 0) {
-        movedKeys.foreach(p => Files.deleteIfExists(Path.of(p))); Nil
-      } else es
-    }
+    val (snapId, cols, delEntries) = writeKeyFile(keys)
     val movedData = writeDataFiles(aligned, b.meta,
       sketch = delEntries.isEmpty && branch.isEmpty)
     val dataEntries = statEntries(movedData.files, content = 0, snapId)
@@ -3072,16 +2998,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       else ndvFoldIdentity
     val addedStamped = added.map(ndv.stamp)
     // add-only (delete file + new data files): O(delta) fast commit
-    commitAddOnlyFast(b, snapId, branch, op, addedStamped, summary,
-      ndv.metaTweak).getOrElse {
-      val base = headSnapshot(b, branch).map(manifestOf).getOrElse(Nil)
-      branch match {
-        case None => commitSnapshot(b, snapId, op, base ++ addedStamped,
-          summary, metaTweak = ndv.metaTweak)
-        case Some(br) => commitSnapshotOnBranch(b, snapId, op, br,
-          base ++ addedStamped, summary, ndv.metaTweak)
-      }
-    }
+    commitAdded(b, snapId, branch, op, addedStamped, summary, ndv.metaTweak)
   }
 
   /** Generic COW transaction: `f` receives the base snapshot's entries
@@ -3240,8 +3157,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val key = sch.fields.find(_.name.equalsIgnoreCase(keyColumn))
       .getOrElse(throw new IllegalArgumentException(
         s"unknown column: $keyColumn"))
-    val survivors = pruneByPredicate(data, bind)
-    val proven: ManifestEntry => Boolean = analyzeConjuncts(bind) match {
+    val conjuncts = analyzeConjuncts(bind)
+    val survivors = pruneByPredicate(data, conjuncts)
+    val proven: ManifestEntry => Boolean = conjuncts match {
       case Seq(EqualTo(a: AttributeReference, l: Literal))
           if GraftTable.exactStats(a.dataType) && l.value != null =>
         e => !mayMatch(e, LessThan(a, l), sch, pn) &&
@@ -5247,7 +5165,6 @@ object GraftTable {
 
   val FileCol = "__graft_file"
   val PosCol = "__graft_pos"
-  val SeqCol = "__graft_seq"
   val ClusterProp = "write.clustered-by"
 
   /** Table property recording the base directory of a rewrite-free
@@ -5428,21 +5345,27 @@ object GraftTable {
     case other => other
   }
 
-  /** Tiny synchronized LRU for immutable-file parse results. */
-  private[lake] final class LruCache[K, V](maxEntries: Int) {
-    private val m = java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[K, V]): Boolean = size() > maxEntries
-      })
-    def computeIfAbsent(k: K, f: K => V): V =
-      m.computeIfAbsent(k, k2 => f(k2))
+  /** Tiny synchronized LRU for immutable-file parse results: evicts
+    * the least recently used entries while their total `weigh`t tops
+    * `budget`. A computation may itself use the cache. */
+  private[lake] final class LruCache[K, V](val budget: Long,
+      weigh: V => Long) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+    private var total = 0L
+    def weight: Long = synchronized(total)
+    def computeIfAbsent(k: K, f: K => V): V = synchronized {
+      Option(m.get(k)).getOrElse { val v = f(k); put(k, v); v }
+    }
     /** Prime a just-written immutable file's parse result. */
-    def put(k: K, v: V): Unit = m.put(k, v)
+    def put(k: K, v: V): Unit = synchronized {
+      total += weigh(v) - Option(m.put(k, v)).map(weigh).getOrElse(0L)
+      val it = m.values.iterator
+      while (total > budget && it.hasNext) { total -= weigh(it.next()); it.remove() }
+    }
   }
 
   private[lake] def lruCache[K, V](maxEntries: Int): LruCache[K, V] =
-    new LruCache[K, V](maxEntries)
+    new LruCache[K, V](maxEntries, _ => 1L)
 
   /** parquet-java builder over Spark's InternalRow write support, for
     * the driver-side small-commit fast path in `writeLocalParquet`. */

@@ -235,4 +235,45 @@ class ChangelogSpec extends SparkSuite {
       .select("_change_type").collect().map(_.getString(0)).sorted
     assert(aTypes.toSeq === Seq("delete", "insert", "insert"))
   }
+
+  test("equality deletes on a composite key and on an INT key widened " +
+    "after its key file was written emit exactly parent EXCEPT ALL " +
+    "child; a row delta's own rows emit only as inserts") {
+    val sch = StructType.fromDDL("k INT, v STRING, n INT")
+    val t = GraftTable.create(spark,
+      graft.ScratchDirs.create("graft-cl-eq-").resolve("t"), "default.t",
+      sch, Map("write.delete.mode" -> "merge-on-read"))
+    def frame(ddl: String, rows: Row*): DataFrame =
+      spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
+    def at(df: DataFrame): DataFrame =
+      df.select(t.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+    def slice(s: SnapshotMeta, tpe: String): DataFrame = at(
+      t.changes(s.parentId, Some(s.snapshotId))
+        .filter(col("_change_type") === tpe))
+    def assertSame(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.count() === want.count())
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+    def assertDeletes(s: SnapshotMeta, n: Long): Unit = {
+      val want = at(t.readAt(s.parentId.get))
+        .exceptAll(at(t.readAt(s.snapshotId)))
+      assert(want.count() === n)
+      assertSame(slice(s, "delete"), want)
+    }
+    t.append(frame("k INT, v STRING, n INT", Row(1, "a", 10),
+      Row(2, "a", 20), Row(2, "a", 20), Row(3, "b", null), Row(4, "b", 40),
+      Row(-5, "c", 50)))
+    val pair = t.equalityDelete(frame("v STRING, n INT", Row("a", 20),
+      Row("b", null), Row("b", 40), Row("a", 99))).get
+    assertDeletes(pair, 3) // both copies of (2, a, 20), and (4, b, 40)
+    val ints = t.equalityDelete(frame("k INT", Row(-5), Row(1))).get
+    t.widenColumn("k", LongType)
+    assertDeletes(ints, 2)
+    val delta = t.rowDelta(frame("k BIGINT", Row(3L)),
+      frame("k BIGINT, v STRING, n INT", Row(3L, "new", 33)))
+    assertDeletes(delta, 1) // the old (3, b, NULL) only
+    assertSame(slice(delta, "insert"),
+      at(frame("k BIGINT, v STRING, n INT", Row(3L, "new", 33))))
+    assert(t.read().count() === 1)
+  }
 }

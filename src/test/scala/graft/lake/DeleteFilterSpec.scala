@@ -1,19 +1,24 @@
 package graft.lake
 
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSuite
 
 /** The MOR read's delete filter ([[DeleteFilter]]) against a reference
   * model: the anti-join formulation graft applied deletes with before
-  * the filter existed ([[AntiJoinDeletes]]). Every scenario straddles
-  * one of the constants that used to choose between the inline and
-  * the join forms, and every read is checked with whole-stage codegen
-  * on (no interpreted fallback) and with codegen off entirely. */
+  * the filter existed ([[AntiJoinDeletes]]). The scenarios straddle the
+  * constants that used to choose between the inline and the join
+  * forms, and cover every equality-key shape the filter carries:
+  * composite, decimal, date, DOUBLE (-0.0, NaN), NULL components,
+  * renamed and widened components. Every read is checked with
+  * whole-stage codegen on (no interpreted fallback) and with codegen
+  * off entirely. */
 class DeleteFilterSpec extends SparkSuite {
 
   private val modes = Seq(
@@ -182,26 +187,174 @@ class DeleteFilterSpec extends SparkSuite {
     assert(check(fresh) === 8)
   }
 
-  test("multi-column equality sets keep the anti-join; single-column " +
-    "sets in the same read use the filter") {
+  private def assertOneFilter(t: GraftTable): Unit = {
+    val plan = planOf(t.read())
+    assert(!plan.contains("Join"), plan)
+    assert("graft_deleted".r.findAllIn(plan).size === 1, plan)
+  }
+
+  test("a composite equality set and single-column sets in one read: " +
+    "one filter, no join") {
     val t = newTable("id BIGINT, k STRING")
     t.append(ids(100, 2))
     t.equalityDelete(keys("id BIGINT, k STRING",
       Seq(Row(1L, "k-0000001"), Row(2L, "nope"))))
     t.equalityDelete(keys("k STRING", Seq(Row("k-0000003"))))
     assert(check(t) === 98)
-    val plan = planOf(t.read())
-    assert("LeftAnti".r.findAllIn(plan).size === 1, plan)
-    assert(plan.contains("graft_deleted"), plan)
+    assertOneFilter(t)
+  }
+
+  test("composite (string, int) key: a row is masked only when every " +
+    "component matches") {
+    val t = newTable("id BIGINT, k STRING, n INT")
+    val rows = keys("id BIGINT, k STRING, n INT", Seq(Row(1L, "a", 1),
+      Row(2L, "a", 2), Row(3L, "b", 1), Row(4L, "b", 2), Row(5L, "b", 2)))
+    t.append(rows)
+    t.equalityDelete(keys("k STRING, n INT",
+      Seq(Row("a", 1), Row("b", 2), Row("c", 1), Row("a", 3))))
+    assert(check(t) === 2)
+    // re-inserted after the delete: visible again
+    t.append(rows.filter(col("id") === 1))
+    assert(check(t) === 3)
+    // a row delta's own rows share its delete's sequence: visible, also
+    // once a newer delete joins their set
+    t.rowDelta(keys("k STRING, n INT", Seq(Row("b", 1))),
+      keys("id BIGINT, k STRING, n INT", Seq(Row(6L, "b", 1))))
+    assert(check(t) === 3)
+    t.equalityDelete(keys("k STRING, n INT", Seq(Row("zz", 0))))
+    assert(check(t) === 3)
+    assertOneFilter(t)
+  }
+
+  test("decimal and date keys") {
+    val t = newTable("id BIGINT, d DECIMAL(10,2), day DATE")
+    def dec(s: String) = new java.math.BigDecimal(s)
+    def day(s: String) = java.sql.Date.valueOf(s)
+    t.append(keys("id BIGINT, d DECIMAL(10,2), day DATE", Seq(
+      Row(1L, dec("1.50"), day("2024-01-01")),
+      Row(2L, dec("-2.25"), day("2024-01-02")),
+      Row(3L, dec("1.50"), day("2024-01-03")),
+      Row(4L, null, day("2024-01-04")))))
+    t.equalityDelete(keys("d DECIMAL(10,2)", Seq(Row(dec("1.50")))))
+    assert(check(t) === 2)
+    t.equalityDelete(keys("day DATE", Seq(Row(day("2024-01-02")))))
+    assert(check(t) === 1)
+    t.equalityDelete(keys("d DECIMAL(10,2), day DATE",
+      Seq(Row(null, day("2024-01-04")))))
+    assert(check(t) === 1) // a NULL component never masks
+  }
+
+  test("DOUBLE keys: -0.0 matches 0.0 and NaN matches NaN, in the data " +
+    "and in the key file") {
+    val t = newTable("id BIGINT, x DOUBLE")
+    t.append(keys("id BIGINT, x DOUBLE", Seq(Row(1L, 0.0), Row(2L, -0.0),
+      Row(3L, Double.NaN), Row(4L, 1.5))))
+    t.equalityDelete(keys("x DOUBLE", Seq(Row(-0.0), Row(Double.NaN))))
+    assert(check(t) === 1)
+    t.append(keys("id BIGINT, x DOUBLE", Seq(Row(5L, -0.0), Row(6L, 0.0),
+      Row(7L, Double.NaN))))
+    assert(check(t) === 4)
+    t.equalityDelete(keys("x DOUBLE", Seq(Row(0.0))))
+    assert(check(t) === 2)
+
+    // a key file spelled by another writer keeps -0.0 and NaN as
+    // written (equalityDelete's distinct normalizes them first)
+    val dir = graft.ScratchDirs.create("graft-dfspec-raw-")
+    keys("x DOUBLE", Seq(Row(-0.0), Row(Double.NaN))).coalesce(1)
+      .write.parquet(dir.resolve("k").toString)
+    val file = Files.list(dir.resolve("k")).iterator.asScala
+      .find(_.toString.endsWith(".parquet")).get.toString
+    assert(spark.read.parquet(file).collect().map(_.getDouble(0))
+      .exists(v => java.lang.Double.doubleToRawLongBits(v) ==
+        java.lang.Double.doubleToRawLongBits(-0.0)))
+    val m = new DeleteMatcher(DeleteSet(Nil, Seq(Seq(file -> 2L)),
+      Seq(Seq("x")), Map("data" -> 1L), Map.empty), Seq(Seq(DoubleType)))
+    m.position(UTF8String.fromString("data"), 0L)
+    def masks(v: Double) = { val r = m.row(0); r.setDouble(0, v); m.key(0, r) }
+    assert(Seq(0.0, -0.0, Double.NaN).forall(masks))
+    assert(!masks(1.5))
+  }
+
+  test("NULL components: a tuple with a NULL in the data or in the key " +
+    "file never matches") {
+    val t = newTable("id BIGINT, k STRING, n INT")
+    t.append(keys("id BIGINT, k STRING, n INT", Seq(Row(1L, "a", null),
+      Row(2L, null, 1), Row(3L, "a", 1), Row(4L, null, null))))
+    t.equalityDelete(keys("k STRING, n INT",
+      Seq(Row("a", null), Row(null, 1), Row(null, null))))
+    assert(check(t) === 4)
+    t.equalityDelete(keys("k STRING, n INT", Seq(Row("a", 1))))
+    assert(check(t) === 3)
+  }
+
+  test("a renamed component: key files before and after the rename") {
+    val t = newTable("id BIGINT, k STRING, n INT")
+    t.append(spark.range(0, 20).selectExpr("id",
+      "CAST(id % 4 AS STRING) AS k", "CAST(id % 5 AS INT) AS n"))
+    t.equalityDelete(keys("k STRING, n INT", Seq(Row("1", 1))))
+    t.renameColumn("n", "m")
+    assert(t.read().columns.toSeq === Seq("id", "k", "m"))
+    assert(check(t) === 19)
+    // a key file written after the rename spells the PHYSICAL name
+    t.equalityDelete(keys("k STRING, m INT", Seq(Row("2", 2))))
+    assert(check(t) === 18)
+    assertOneFilter(t)
+  }
+
+  test("INT components widened to BIGINT and to DOUBLE after their key " +
+    "files were written, on a warm handle and a fresh load") {
+    val t = newTable("id BIGINT, k STRING, a INT, b INT")
+    t.append(spark.range(-10, 10).selectExpr("id",
+      "CAST(id % 3 AS STRING) AS k", "CAST(id AS INT) AS a",
+      "CAST(id * 7 AS INT) AS b"))
+    t.equalityDelete(keys("k STRING, a INT", Seq(Row("-1", -7), Row("0", 3))))
+    t.equalityDelete(keys("b INT", Seq(Row(14), Row(-21))))
+    assert(check(t) === 16) // warms the key-file parses
+    t.widenColumn("a", LongType)
+    t.widenColumn("b", DoubleType)
+    assert(t.schema("a").dataType === LongType)
+    assert(t.schema("b").dataType === DoubleType)
+    assert(check(t) === 16)
+    val fresh = GraftTable.load(spark, t.root)
+    assert(check(fresh) === 16)
+    assert(fresh.read().filter(col("a") === -7L).isEmpty)
+    // key files written after the widen hold the new types
+    fresh.equalityDelete(keys("k STRING, a BIGINT", Seq(Row("1", 4L))))
+    fresh.equalityDelete(keys("b DOUBLE", Seq(Row(-35.0))))
+    assert(check(fresh) === 14)
+  }
+
+  test("the delete-file cache is capped in bytes: past its budget it " +
+    "evicts, and reads still return the reference's rows") {
+    val t = newTable("id BIGINT, k STRING")
+    t.append(ids(10000, 4))
+    t.delete(col("id") < 100)
+    t.equalityDelete(keys("k STRING, id BIGINT",
+      (0 until 3000).map(i => Row(f"k-${i * 3}%07d", i * 3L))))
+    val cache = DeleteFilter.cache
+    val filler = (null, cache.budget)
+    for (round <- 1 to 3) {
+      // a filler as large as the whole budget evicts every parse
+      cache.put(("filler", round), filler)
+      assert(cache.weight <= cache.budget)
+      assert(check(t) === 10000 - 100 - 2966)
+      // each read re-parsed, pushing the filler out in turn (the
+      // weight is under budget again); 3,000 key tuples weigh their rows
+      assert(cache.weight >= 3000L * 64 && cache.weight < cache.budget)
+    }
   }
 }
 
 /** Reference model of the MOR read: the position-delete anti-join and
   * the sequence-attach + anti-join equality form graft's read path
-  * planned before [[DeleteFilter]]. Test-only, like the kernels' HOF
-  * twins: it pins what the filter must return, not how. */
+  * planned before [[DeleteFilter]], for every key shape (Spark's own
+  * join keys: coerced types, normalized floats, NULLs never equal).
+  * Test-only, like the kernels' HOF twins: it pins what the filter
+  * must return, not how. */
 object AntiJoinDeletes {
-  import GraftTable.{FileCol, PosCol, SeqCol}
+  import GraftTable.{FileCol, PosCol}
+  // the row's data sequence, attached by file path
+  private val SeqCol = "__seq"
 
   def read(t: GraftTable, entries: Seq[ManifestEntry], sch: StructType,
       mapping: Map[String, String]): DataFrame = {

@@ -30,6 +30,7 @@ class GraftTablePropSpec extends SparkSuite {
   private case class ClusteredAppend(n: Int) extends Op
   private case class MorDelete(pick: Int) extends Op
   private case class EqDelete(pick: Int) extends Op
+  private case class PairEqDelete(pick: Int) extends Op
   private case class CowNullify(pick: Int) extends Op
   private case object Rewrite extends Op
   private case object RewriteDeletes extends Op
@@ -44,6 +45,7 @@ class GraftTablePropSpec extends SparkSuite {
     1 -> Gen.choose(2, 5).map(ClusteredAppend),
     3 -> Gen.choose(0, 7).map(MorDelete),
     1 -> Gen.choose(0, 7).map(EqDelete),
+    3 -> Gen.choose(0, 7).map(PairEqDelete),
     2 -> Gen.choose(0, 7).map(CowNullify),
     1 -> Gen.const(Rewrite),
     1 -> Gen.const(RewriteDeletes),
@@ -53,6 +55,9 @@ class GraftTablePropSpec extends SparkSuite {
     1 -> Gen.zip(Gen.choose(0, 7), Gen.choose(1, 3),
       Gen.oneOf(true, false)).map { case (p, n, pub) =>
         BranchCycle(p, n, pub) })
+
+  // composite-key deletes that masked a row, over the whole property
+  private var pairMasks = 0
 
   private val genOps: Gen[List[Op]] =
     Gen.choose(4, 8).flatMap(n => Gen.listOfN(n, genOp))
@@ -121,6 +126,22 @@ class GraftTablePropSpec extends SparkSuite {
             ids.map(Row(_)).asJava,
             org.apache.spark.sql.types.StructType.fromDDL("case_id STRING")))
           model = model.filterNot(m => ids.contains(m.caseId))
+          snap()
+        }
+      case PairEqDelete(pick) =>
+        // (case_id, first_name) tuples naming the row's own name, a
+        // wrong name or NULL: only an exact non-NULL pair masks, so a
+        // row CowNullify blanked is never matched
+        val pairs = targets(pick).zipWithIndex.map { case (id, i) =>
+          id -> Seq(s"name-$id", null, "other")(i % 3) }
+        if (pairs.nonEmpty) {
+          t.equalityDelete(spark.createDataFrame(
+            pairs.map { case (id, n) => Row(id, n) }.asJava,
+            StructType.fromDDL(s"case_id STRING, $fnName STRING")))
+          val kept = model.filterNot(m => pairs.exists { case (id, n) =>
+            m.caseId == id && n != null && m.firstName.contains(n) })
+          if (kept.size < model.size) pairMasks += 1
+          model = kept
           snap()
         }
       case MorDelete(pick) =>
@@ -253,6 +274,7 @@ class GraftTablePropSpec extends SparkSuite {
       .withWorkers(1)
     val res = SCTest.check(params, prop)
     assert(res.passed, res.status.toString)
+    assert(pairMasks > 0, "no composite-key delete masked a row")
   }
 
   /** retain-last-only expiry (README.md:88-93's companion form): after
