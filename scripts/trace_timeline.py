@@ -16,7 +16,8 @@ For every matching span this prints, in start order:
   - the driver gap after the last job
   - each QueryExecution record that started inside the span: plan_ms,
     files_read, rows_read
-and closes with per-span means over all matching spans.
+and closes with per-span means for each matching `layer:name`, so one
+call compares, say, `lake.sql:Merge` with `lake.commit:Update`.
 """
 import json
 import sys
@@ -54,7 +55,7 @@ def main():
                     key=lambda s: s["start_ms"])
     if not chosen:
         sys.exit(f"no lake span matches {sorted(names)}")
-    totals = {"dur_ms": 0.0, "jobs": 0, "task_ms": 0.0, "gap_ms": 0.0}
+    totals = {}
     for s in chosen:
         t0, t1 = s["start_ms"], s["start_ms"] + s["dur_ms"]
         inside = sorted((j for j in jobs if t0 <= j["start_ms"] <= t1),
@@ -83,13 +84,18 @@ def main():
             print(f"  qe +{q['qe_start_ms'] - t0:>7.0f}ms "
                   f"plan_ms={q['plan_ms']:g} files_read={q['files_read']:g} "
                   f"rows_read={q['rows_read']:g}")
-        totals["dur_ms"] += s["dur_ms"]
-        totals["jobs"] += len(inside)
-        totals["task_ms"] += sum(j["task_ms"] for j in inside)
-        totals["gap_ms"] += gap
-    n = len(chosen)
-    print(f"{n} spans; per span: " + " ".join(
-        f"{k}={v / n:.1f}" for k, v in totals.items()))
+        t = totals.setdefault(f"{s['layer']}:{s['name']}", {
+            "spans": 0, "dur_ms": 0.0, "jobs": 0, "task_ms": 0.0,
+            "gap_ms": 0.0})
+        t["spans"] += 1
+        t["dur_ms"] += s["dur_ms"]
+        t["jobs"] += len(inside)
+        t["task_ms"] += sum(j["task_ms"] for j in inside)
+        t["gap_ms"] += gap
+    for name, t in sorted(totals.items()):
+        n = t.pop("spans")
+        print(f"{name}: {n} spans; per span: " + " ".join(
+            f"{k}={v / n:.1f}" for k, v in t.items()))
 
 
 if __name__ == "__main__":

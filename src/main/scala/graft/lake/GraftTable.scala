@@ -2893,15 +2893,40 @@ class GraftTable(val spark: SparkSession, val root: Path,
         hits.select(col(FileCol).as("file_path"), col(PosCol).as("pos")),
         bound)
       if (n == 0) return None
-      val newMoved =
-        writeDataFiles(transform(hits.drop(FileCol, PosCol)), b.meta).files
-      val snapId = nextSnapshotHint
-      val delEntries = statEntries(delMoved, content = 1, snapId)
-      val dataEntries = statEntries(newMoved, content = 0, snapId)
-      val added = delEntries ++ dataEntries
-      val summary = Map("mode" -> "merge-on-read")
-      Some(commitAdded(b, snapId, branch, "overwrite", added, summary))
+      Some(commitRowChange(b, branch, "overwrite", delMoved,
+        Some(transform(hits.drop(FileCol, PosCol))),
+        Map("mode" -> "merge-on-read")))
     } finally hits.unpersist()
+  }
+
+  /** A merge-on-read row-level change planned by `f` against the head
+    * of the write branch (MOR MERGE): `f` returns the position-delete
+    * hits as a (file_path, pos) frame with their exact count, the rows
+    * to append, and the summary. Add-only like [[morUpdate]]: the
+    * commit takes the O(delta) path. */
+  private[lake] def morRowChange(operation: String)(
+      f: CowSnapshot =>
+        Option[(DataFrame, Long, Option[DataFrame], Map[String, String])])
+      : Option[SnapshotMeta] = {
+    val branch = resolveBranch(None)
+    val b = captureBase()
+    f(new CowSnapshot(b.meta, headSnapshot(b, branch))).map {
+      case (hits, n, rows, summary) =>
+        val delMoved = if (n == 0) Nil else writeDeleteFiles(hits, n)._1
+        commitRowChange(b, branch, operation, delMoved, rows, summary)
+    }
+  }
+
+  /** Write `rows` and commit them with the position-delete files
+    * `delMoved` as one add-only snapshot on `branch`. */
+  private def commitRowChange(b: Base, branch: Option[String], op: String,
+      delMoved: Seq[String], rows: Option[DataFrame],
+      summary: Map[String, String]): SnapshotMeta = {
+    val newMoved = rows.fold(Seq.empty[String])(writeDataFiles(_, b.meta).files)
+    val snapId = nextSnapshotHint
+    val added = statEntries(delMoved, content = 1, snapId) ++
+      statEntries(newMoved, content = 0, snapId)
+    commitAdded(b, snapId, branch, op, added, summary)
   }
 
   /** Equality delete (content=2): any live row matching a key tuple in
@@ -3054,12 +3079,13 @@ class GraftTable(val spark: SparkSession, val root: Path,
     }
   }
 
-  /** The snapshot view a COW transaction plans against: `meta` is the
-    * base it commits on; `entries` materializes the FULL head manifest
-    * (MERGE's discovery join and an erase's victim choice need it);
-    * `pruned` plans through [[prunedEntriesOf]] — stats-narrowed,
-    * executor-side past the distributed threshold — so predicate DML
-    * never materializes the table's entry list on the driver. */
+  /** The snapshot view a COW transaction (and the MOR MERGE's
+    * [[morRowChange]]) plans against: `meta` is the base it commits on;
+    * `entries` materializes the FULL head manifest (MERGE's discovery
+    * join and an erase's victim choice need it); `pruned` plans through
+    * [[prunedEntriesOf]] — stats-narrowed, executor-side past the
+    * distributed threshold — so predicate DML never materializes the
+    * table's entry list on the driver. */
   private[lake] final class CowSnapshot(val meta: TableMeta,
       head: Option[SnapshotMeta]) {
     lazy val entries: Seq[ManifestEntry] =
@@ -3250,46 +3276,6 @@ class GraftTable(val spark: SparkSession, val root: Path,
       refs = base.meta.refs +
         (branch -> base.meta.refs(branch).copy(snapshotId = id)))))
     snap
-  }
-
-  /** Generic MOR transaction: `f` decides (position-delete hits as a
-    * (file_path, pos) frame, rows to append, summary); one snapshot
-    * commits the delete files (hit-count-scaled fan-out) plus the new
-    * data files. Shared shape with morUpdate; used by MOR MERGE. */
-  private[lake] def morTransaction(operation: String,
-      explicitBranch: Option[String] = None)(
-      f: (Seq[ManifestEntry], Seq[ManifestEntry] => DataFrame) =>
-        Option[(DataFrame, DataFrame, Map[String, String])])
-      : Option[SnapshotMeta] = {
-    val branch = resolveBranch(explicitBranch)
-    val b = captureBase()
-    val entries = branch match {
-      case None => b.entries
-      case Some(br) => manifestOf(branchHead(b, br))
-    }
-    f(entries, es => readWithLineage(es)) match {
-      case None => None
-      case Some((hits, appendRows, summary)) =>
-        val cached = hits.persist()
-        try {
-          // bound = every data row in the table (hits can't exceed
-          // it; the caller's hit frame has no tighter manifest bound)
-          val bound = entries.filter(_.content == 0)
-            .map(_.recordCount).sum
-          val (delMoved, _) = writeDeleteFiles(cached, bound)
-          val newMoved = writeDataFiles(appendRows, b.meta).files
-          val snapId = nextSnapshotHint
-          val delEntries = statEntries(delMoved, content = 1, snapId)
-          val dataEntries = statEntries(newMoved, content = 0, snapId)
-          val all = entries ++ delEntries ++ dataEntries
-          Some(branch match {
-            case None => commitSnapshot(b, snapId, operation, all,
-              summary)
-            case Some(br) => commitSnapshotOnBranch(b, snapId,
-              operation, br, all, summary)
-          })
-        } finally cached.unpersist()
-    }
   }
 
   /** Entries whose data files survive only if not in `affected` —

@@ -1,8 +1,9 @@
 package graft.lake.sql
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, ExprId}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, ExprId}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -28,23 +29,28 @@ final case class MergeInsertSpec(cond: Option[ExprBox],
   * ([EXT] — the reference demo stops at UPDATE/DELETE; MERGE completes
   * the lakehouse DML surface).
   *
-  * One DISCOVERY full-outer join of the lineage-read target against
-  * the source finds matches, cardinality violations, inserts, and the
-  * per-row clause disposition (first matching clause wins, as in
-  * Spark/Iceberg/Delta). The write then honors `write.merge.mode`:
+  * The source is computed once, with a row id, and kept by a local
+  * checkpoint, so every consumer sees the same rows and a
+  * nondeterministic source runs once.
+  * DISCOVERY is one one-sided join, `target LEFT OUTER JOIN source ON
+  * <cond>`, kept to the matched rows plus the rows a NOT MATCHED BY
+  * SOURCE clause acts on; without such a clause that filter makes it
+  * an inner join, and Spark's own join selection broadcasts a small
+  * source into the target scan. Each kept row carries its clause
+  * disposition (first matching clause wins, as in Spark/Iceberg/Delta)
+  * and the kept set is persisted — its size follows the matched rows,
+  * not the table. The cardinality check, the acted (file, pos) rows and
+  * the updated rows come from it; the inserts are `source LEFT ANTI
+  * JOIN` its matched rows on the source row id, so the target is
+  * scanned once. The write then honors `write.merge.mode`:
   *
   *  - copy-on-write (default): re-plan the lineage read over ONLY the
-  *    affected files, re-join, apply dispositions, replace those files.
-  *  - merge-on-read: position-delete exactly the changed rows and
-  *    append replacements + inserts — a sparse merge over a huge table
-  *    writes O(changed rows), not O(affected file bytes), and no
-  *    second join or file rewrite happens at all.
-  *
-  * At 100 TB the discovery join is the inherent cost of MERGE (the ON
-  * condition is arbitrary — no stats pruning is sound); everything
-  * after it is bounded by the matched rows (MOR) or matched files
-  * (COW), and the shuffle is keyed on the ON condition's equi-part
-  * (Catalyst extracts it).
+  *    affected files, re-join them with the source, apply dispositions,
+  *    replace those files.
+  *  - merge-on-read: position-delete exactly the acted rows and append
+  *    replacements + inserts in one add-only O(delta) commit, the shape
+  *    of an MOR UPDATE — a sparse merge over a huge table writes
+  *    O(changed rows), and no second join or file rewrite happens.
   */
 case class GraftMergeCommand(
     table: GraftSqlTable,
@@ -59,8 +65,8 @@ case class GraftMergeCommand(
 
   import GraftTable.{FileCol, PosCol}
 
-  private val TgtMark = "__graft_tgt"
   private val SrcMark = "__graft_src"
+  private val SrcId = "__graft_src_id"
   private val ActCol = "__graft_act"
   private val KEEP = -1
   private val DELBASE = 1000
@@ -72,15 +78,30 @@ case class GraftMergeCommand(
     val g = table.graft
     val mor = g.properties.getOrElse("write.merge.mode",
       "copy-on-write") == "merge-on-read"
-    if (mor) runMor(session, g) else runCow(session, g)
+    val src = materializedSource(session)
+    try if (mor) runMor(session, g, src) else runCow(session, g, src)
+    finally release(src)
     Nil
   }
 
   // ---- shared pieces ----
 
-  private def sourceFrame(session: SparkSession): DataFrame =
+  /** The source with a row id, computed once so that every consumer
+    * (discovery, inserts, the COW re-join) reads the same rows and a
+    * nondeterministic source runs once. A lazy local checkpoint rather
+    * than a cache: the first job that reads it stores its blocks and
+    * cuts the lineage, so a lost block fails the MERGE instead of
+    * re-running the source with different rows. */
+  private def materializedSource(session: SparkSession): DataFrame =
     ColumnBridge.ofRows(session, source.plan)
+      .withColumn(SrcId, monotonically_increasing_id())
       .withColumn(SrcMark, lit(true))
+      .localCheckpoint(eager = false)
+
+  /** Drop the checkpointed source's stored blocks. */
+  private def release(src: DataFrame): Unit =
+    src.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /** Re-bind a command expression: target attrs resolve against `tgt`,
     * source attrs against `src`. */
@@ -99,16 +120,14 @@ case class GraftMergeCommand(
   /** Target column of an ON equi-conjunct that is bucket-clustered —
     * the storage-partitioned MERGE opportunity: reading the target
     * through its claimed bucket layout leaves only the SOURCE side of
-    * the discovery join to shuffle. */
-  private def bucketKey(g: GraftTable): Option[String] = {
-    import org.apache.spark.sql.catalyst.expressions.EqualTo
+    * a shuffled discovery join to shuffle. */
+  private def bucketKey(g: GraftTable): Option[String] =
     onCond.e.collect {
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if targetIds(a.exprId) && sourceIds(b.exprId) => a.name
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if sourceIds(a.exprId) && targetIds(b.exprId) => b.name
     }.find(g.bucketFieldOf(_).isDefined)
-  }
 
   /** The target's lineage read for the discovery join: the claimed
     * bucket-local form when the layout is provable (no delete files,
@@ -159,73 +178,77 @@ case class GraftMergeCommand(
     }
   }
 
-  /** WHEN NOT MATCHED inserts from the discovery join's source-only
-    * side (first matching clause wins); null when no insert clauses. */
-  private def insertFrame(joined: DataFrame, tgt: DataFrame,
-      src: DataFrame, isIns: Column): DataFrame = {
-    if (notMatched.isEmpty) return null
-    val actCol = notMatched.zipWithIndex.reverse
-      .foldLeft(lit(-1): Column) { case (acc, (spec, i)) =>
-        when(spec.cond.map(reb(tgt, src)).getOrElse(lit(true)), lit(i))
-          .otherwise(acc)
-      }
-    val withAct = joined.filter(isIns).withColumn(ActCol, actCol)
-      .filter(col(ActCol) >= 0)
-    val cols = table.graft.schema.fields.toSeq.map { f =>
-      notMatched.zipWithIndex.reverse.foldLeft(
-        lit(null).cast(f.dataType): Column) { case (acc, (spec, i)) =>
-        when(col(ActCol) === i,
-          spec.values.get(f.name).map(reb(tgt, src))
-            .getOrElse(lit(null)).cast(f.dataType)).otherwise(acc)
-      }.as(f.name)
-    }
-    withAct.select(cols: _*)
+  /** `target LEFT OUTER JOIN source ON <cond>`, kept to the matched
+    * rows (the cardinality check and the insert anti-join need every
+    * one) and the rows a NOT MATCHED BY SOURCE clause acts on, each
+    * with its clause disposition. Without such a clause the filter on
+    * the source mark lets Catalyst plan an inner join. */
+  private def discover(tgt: DataFrame, src: DataFrame): DataFrame = {
+    val isMatched = col(SrcMark).isNotNull
+    val joined = tgt.join(src, reb(tgt, src)(onCond), "left_outer")
+    def act(df: DataFrame): DataFrame =
+      df.withColumn(ActCol, disposition(tgt, src, isMatched, !isMatched))
+    if (notMatchedBySource.isEmpty) act(joined.filter(isMatched))
+    else act(joined).filter(isMatched || col(ActCol) =!= KEEP)
   }
 
-  /** Existence condition for WHEN NOT MATCHED inserts — true on a
-    * discovery-join row iff [[insertFrame]] would emit it (some insert
-    * clause's condition holds). */
-  private def insertExistsCond(tgt: DataFrame, src: DataFrame,
-      isIns: Column): Column =
-    if (notMatched.isEmpty) lit(false)
-    else isIns && notMatched
-      .map(s => s.cond.map(reb(tgt, src)).getOrElse(lit(true)))
-      .reduce(_ || _)
-
-  /** ONE probe pass over the cached discovery join (r17, guide §1.2 —
-    * it previously took three jobs re-scanning the cache: a
-    * cardinality-violation count, an affected-file distinct+collect,
-    * and an insert-existence limit(1)): per-(file, pos)
-    * matched-cardinality and touch/insert flags, re-aggregated per
-    * file and FILTERED so the driver only ever collects touched /
-    * violating files plus the null insert group — the same
-    * affected-file bound as before, never the full file list.
-    * Returns (cardinality violation?, affected file set, inserts?). */
-  private def probeJoin(joined: DataFrame, touchCond: Column,
-      isMatched: Column, insExists: Column)
-      : (Boolean, Set[String], Boolean) = {
-    val perRow = joined.groupBy(col(FileCol), col(PosCol)).agg(
-      count(when(isMatched, 1)).as("__nm"),
-      max(when(touchCond, 1).otherwise(0)).as("__touch"),
-      max(when(insExists, 1).otherwise(0)).as("__ins"))
-    val rows = perRow.groupBy(col(FileCol)).agg(
-        max(when(col("__nm") > 1, 1).otherwise(0)).as("__dup"),
-        max(col("__touch")).as("__touch"),
-        max(col("__ins")).as("__ins"))
-      .filter(col("__dup") === 1 || col("__touch") === 1 ||
-        col("__ins") === 1)
+  /** One aggregation over the persisted discovery rows, partitioned by
+    * target file so both groupings share one shuffle: per file, whether
+    * a target row matched more than one source row, how many rows a
+    * clause acts on, and how many of those it updates. Only files with
+    * an acted row or a violation come back, so the driver collects
+    * O(affected files). Fails on a cardinality violation; returns
+    * (acted rows per file, updated rows). */
+  private def probe(found: DataFrame): (Map[String, Long], Long) = {
+    if (matched.isEmpty && notMatchedBySource.isEmpty)
+      return (Map.empty, 0L)
+    val acted = col(ActCol) =!= KEEP
+    val rows = found.repartition(col(FileCol))
+      .groupBy(col(FileCol), col(PosCol)).agg(
+        count(when(col(SrcMark).isNotNull, 1)).as("__nm"),
+        max(when(acted, 1).otherwise(0)).as("__act"),
+        max(when(acted && col(ActCol) < DELBASE, 1).otherwise(0))
+          .as("__upd"))
+      .groupBy(col(FileCol)).agg(max(col("__nm")).as("__nm"),
+        sum(col("__act")).as("__act"), sum(col("__upd")).as("__upd"))
+      .filter(col("__nm") > 1 || col("__act") > 0)
       .collect()
-    val dup = rows.exists(_.getInt(1) == 1)
-    val affected = rows.filter(r => r.getInt(2) == 1 && !r.isNullAt(0))
-      .map(r => Io.normalize(r.getString(0))).toSet
-    val anyIns = rows.exists(_.getInt(3) == 1)
-    (dup, affected, anyIns)
+    if (rows.exists(_.getLong(1) > 1))
+      throw new UnsupportedOperationException(
+        "MERGE cardinality violation: a target row matched more " +
+          "than one source row")
+    (rows.filter(_.getLong(2) > 0)
+        .map(r => Io.normalize(r.getString(0)) -> r.getLong(2)).toMap,
+      rows.map(_.getLong(3)).sum)
   }
 
-  private def cardinalityViolation(): Nothing =
-    throw new UnsupportedOperationException(
-      "MERGE cardinality violation: a target row matched more " +
-        "than one source row")
+  /** WHEN NOT MATCHED inserts: the source rows no target row matched
+    * (`source LEFT ANTI JOIN` the matched discovery rows on the source
+    * row id), each through the first insert clause whose condition
+    * holds; None without insert clauses. */
+  private def insertFrame(src: DataFrame,
+      found: DataFrame): Option[DataFrame] =
+    Option.when(notMatched.nonEmpty) {
+      val unmatched = src.join(
+        found.filter(col(SrcMark).isNotNull).select(SrcId),
+        Seq(SrcId), "left_anti")
+      val bind = reb(unmatched, unmatched) _
+      val actCol = notMatched.zipWithIndex.reverse
+        .foldLeft(lit(-1): Column) { case (acc, (spec, i)) =>
+          when(spec.cond.map(bind).getOrElse(lit(true)), lit(i))
+            .otherwise(acc)
+        }
+      val cols = table.graft.schema.fields.toSeq.map { f =>
+        notMatched.zipWithIndex.reverse.foldLeft(
+          lit(null).cast(f.dataType): Column) { case (acc, (spec, i)) =>
+          when(col(ActCol) === i,
+            spec.values.get(f.name).map(bind)
+              .getOrElse(lit(null)).cast(f.dataType)).otherwise(acc)
+        }.as(f.name)
+      }
+      unmatched.withColumn(ActCol, actCol).filter(col(ActCol) >= 0)
+        .select(cols: _*)
+    }
 
   /** Size the MERGE write by BYTES instead of by shuffle parallelism
     * (r18, guide §6 — output file sizing). The rewrite/insert frame is
@@ -242,117 +265,67 @@ case class GraftMergeCommand(
     * rebalance would then shuffle to the static partition count —
     * potentially MORE files, not fewer). */
   private def sizedForWrite(session: SparkSession, df: DataFrame): DataFrame =
-    if (df != null &&
-        session.conf.get("spark.sql.adaptive.enabled", "true") == "true")
+    if (session.conf.get("spark.sql.adaptive.enabled", "true") == "true")
       df.hint("rebalance")
     else df
 
   // ---- copy-on-write ----
 
-  private def runCow(session: SparkSession, g: GraftTable): Unit = {
-    val schema = g.schema
-    // the discovery join feeds the cardinality check, affected-file
-    // collect, insert frame, and change probe — persist it so the
-    // full-table join runs ONCE per MERGE, not once per consumer
-    var joinedCached: DataFrame = null
+  private def runCow(session: SparkSession, g: GraftTable,
+      src: DataFrame): Unit = {
+    var found: DataFrame = null
     try g.cowTransaction("merge") { snap =>
-      // MERGE's discovery is a full-outer join against the whole
-      // target — the full entry list is genuinely needed here
       val entries = snap.entries
-      val readLin = snap.readLineage _
-      val src = sourceFrame(session)
-      val tgt1 = targetFrame(g, entries, readLin)
-        .withColumn(TgtMark, lit(true))
-      val joined = tgt1.join(src, reb(tgt1, src)(onCond), "full_outer")
+      found = discover(targetFrame(g, entries, snap.readLineage), src)
         .persist()
-      joinedCached = joined
-      val isMatched = col(TgtMark).isNotNull && col(SrcMark).isNotNull
-      val isNmbs = col(TgtMark).isNotNull && col(SrcMark).isNull
-      val isIns = col(TgtMark).isNull && col(SrcMark).isNotNull
-
-      val matchedTouches = if (matched.isEmpty) lit(false) else isMatched
-      val nmbsTouches =
-        if (notMatchedBySource.isEmpty) lit(false)
-        else isNmbs &&
-          notMatchedBySource.map(whenCond(tgt1, src)).reduce(_ || _)
-      val (dup, affected, anyInserts) = probeJoin(joined,
-        matchedTouches || nmbsTouches, isMatched,
-        insertExistsCond(tgt1, src, isIns))
-      if (dup && (matched.nonEmpty || notMatchedBySource.nonEmpty))
-        cardinalityViolation()
-      val insertRows = insertFrame(joined, tgt1, src, isIns)
-      if (affected.isEmpty && !anyInserts) None
+      val affected = probe(found)._1.keySet
+      val inserts = insertFrame(src, found)
+      if (affected.isEmpty && inserts.forall(_.isEmpty)) None
       else {
         // rewrite ONLY the affected files, re-joined for disposition
-        val rewritten: DataFrame = if (affected.isEmpty) null else {
+        val rewritten = Option.when(affected.nonEmpty) {
           val tgt2 = targetFrame(g, g.victimEntries(entries, affected),
-            readLin).withColumn(TgtMark, lit(true))
-          val j2 = tgt2.join(src, reb(tgt2, src)(onCond), "left_outer")
+            snap.readLineage)
           val m2 = col(SrcMark).isNotNull
-          j2.withColumn(ActCol,
-              disposition(tgt2, src, m2, !m2))
+          tgt2.join(src, reb(tgt2, src)(onCond), "left_outer")
+            .withColumn(ActCol, disposition(tgt2, src, m2, !m2))
             .filter(col(ActCol) < DELBASE) // drop deleted rows
             .select(updatedColumns(tgt2, src): _*)
         }
-        val out = sizedForWrite(session, (rewritten, insertRows) match {
-          case (null, ins) => ins
-          case (rw, null) => rw
-          case (rw, ins) => rw.unionByName(ins)
-        })
-        Some((affected, Some(out), Map(
-          "mode" -> "copy-on-write",
-          "merge-affected-files" -> affected.size.toString)))
+        Some((affected,
+          (rewritten ++ inserts).reduceOption(_ unionByName _)
+            .map(sizedForWrite(session, _)),
+          Map("mode" -> "copy-on-write",
+            "merge-affected-files" -> affected.size.toString)))
       }
-    } finally if (joinedCached != null) joinedCached.unpersist()
+    } finally if (found != null) found.unpersist()
   }
 
   // ---- merge-on-read ----
 
-  private def runMor(session: SparkSession, g: GraftTable): Unit = {
-    // the discovery join is consumed several times (cardinality check,
-    // hits, appended rows, inserts, change probes) — persist it so the
-    // full-table join runs ONCE per MERGE; derived frames are cheap
-    // filters over the cache
-    var joinedCached: DataFrame = null
-    try {
-      g.morTransaction("merge") { (entries, readLin) =>
-        val src = sourceFrame(session)
-        val tgt = targetFrame(g, entries, readLin)
-          .withColumn(TgtMark, lit(true))
-        val joined = tgt.join(src, reb(tgt, src)(onCond), "full_outer")
-          .persist()
-        joinedCached = joined
-        val isMatched = col(TgtMark).isNotNull && col(SrcMark).isNotNull
-        val isNmbs = col(TgtMark).isNotNull && col(SrcMark).isNull
-        val isIns = col(TgtMark).isNull && col(SrcMark).isNotNull
-
-        // every row whose clause fired gets position-deleted; updates
+  private def runMor(session: SparkSession, g: GraftTable,
+      src: DataFrame): Unit = {
+    var found: DataFrame = null
+    try g.morRowChange("merge") { snap =>
+      val tgt = targetFrame(g, snap.entries, snap.readLineage)
+      found = discover(tgt, src).persist()
+      val (acted, updated) = probe(found)
+      val n = acted.values.sum
+      val inserts = insertFrame(src, found)
+      if (n == 0 && inserts.forall(_.isEmpty)) None
+      else {
+        // every row whose clause fired is position-deleted; updates
         // additionally re-append their transformed row
-        val actedCond = col(TgtMark).isNotNull &&
-          disposition(tgt, src, isMatched, isNmbs) =!= KEEP
-        val (dup, actedFiles, anyInserts) = probeJoin(joined, actedCond,
-          isMatched, insertExistsCond(tgt, src, isIns))
-        if (dup && (matched.nonEmpty || notMatchedBySource.nonEmpty))
-          cardinalityViolation()
-        val acted = joined.filter(col(TgtMark).isNotNull)
-          .withColumn(ActCol, disposition(tgt, src, isMatched, isNmbs))
-          .filter(col(ActCol) =!= KEEP)
-        val hits = acted.select(col(FileCol).as("file_path"),
-          col(PosCol).as("pos"))
-        val updatedRows = acted.filter(col(ActCol) < DELBASE)
-          .select(updatedColumns(tgt, src): _*)
-        val insertRows = insertFrame(joined, tgt, src, isIns)
-        val appendRows = if (insertRows == null) updatedRows
-          else updatedRows.unionByName(insertRows)
-
-        // the probe above already materialized the cache and answered
-        // both existence questions in its single pass
-        val anyChange = actedFiles.nonEmpty || anyInserts
-        if (!anyChange) None
-        else Some((hits, sizedForWrite(session, appendRows),
-          Map("mode" -> "merge-on-read")))
+        val isActed = col(ActCol) =!= KEEP
+        val hits = found.filter(isActed)
+          .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
+        val updates = Option.when(updated > 0)(
+          found.filter(isActed && col(ActCol) < DELBASE)
+            .select(updatedColumns(tgt, src): _*))
+        Some((hits, n, (updates ++ inserts).reduceOption(_ unionByName _)
+          .map(sizedForWrite(session, _)), Map("mode" -> "merge-on-read")))
       }
-    } finally if (joinedCached != null) joinedCached.unpersist()
+    } finally if (found != null) found.unpersist()
   }
 
   override def simpleString(maxFields: Int): String =

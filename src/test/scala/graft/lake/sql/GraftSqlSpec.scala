@@ -1749,6 +1749,265 @@ class GraftSqlSpec extends SparkSuite {
       .collect().head.getString(0) === "seen")
   }
 
+  // ---- MERGE: one broadcast-probed pass over the target ----
+
+  private val MergeModes = Seq("copy-on-write", "merge-on-read")
+
+  /** A (k, v) table in `mode` with one data file per key decade
+    * 0-9, 10-19, 20-29 (disjoint key ranges), plus one row per `extra`
+    * key (NULL allowed) in a fourth file; deletes are merge-on-read. */
+  private def mergeTable(mode: String, keyType: String = "BIGINT",
+      extra: Seq[String] = Nil): String = {
+    val ns = freshNs()
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
+    val tbl = s"graft.$ns.m"
+    spark.sql(s"CREATE TABLE $tbl (k $keyType, v STRING) USING graft " +
+      s"TBLPROPERTIES ('write.merge.mode'='$mode', " +
+      "'write.delete.mode'='merge-on-read')")
+    for (d <- 0 until 3)
+      spark.sql(s"INSERT INTO $tbl VALUES " + (d * 10 until d * 10 + 10)
+        .map(k => s"($k, 'v$k')").mkString(", "))
+    if (extra.nonEmpty)
+      spark.sql(s"INSERT INTO $tbl VALUES " +
+        extra.map(k => s"($k, 'x$k')").mkString(", "))
+    tbl
+  }
+
+  private def kv(tbl: String): Seq[(Option[Long], String)] =
+    spark.sql(s"SELECT CAST(k AS BIGINT), v FROM $tbl").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        r.getString(1))).toSeq.sortBy(x => (x._1.getOrElse(-1L), x._2))
+
+  private def base(keys: Range): Seq[(Option[Long], String)] =
+    keys.map(k => (Some(k.toLong), s"v$k"))
+
+  /** Executed plans of every query `body` runs. */
+  private def plansOf(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          d: Long): Unit = captured.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.TestListenerBus.flush(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.TestListenerBus.flush(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    captured.asScala.toSeq
+  }
+
+  private object PlanWalk
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Every node of an executed plan, through adaptive stages,
+    * subqueries and the plans of the cached relations it reads. */
+  private def nodesOf(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    PlanWalk.collectWithSubqueries(p) { case n => n }.flatMap {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        m +: nodesOf(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
+
+  test("MERGE WHEN NOT MATCHED BY SOURCE applies first-match " +
+    "clauses, in both write modes") {
+    for (mode <- MergeModes) {
+      val tbl = mergeTable(mode)
+      spark.sql(
+        s"""MERGE INTO $tbl t USING (SELECT * FROM VALUES
+           |  (15L, 'u15'), (16L, 'gone'), (40L, 'n40') AS s(k, v)) s
+           |ON t.k = s.k
+           |WHEN MATCHED AND s.v = 'gone' THEN DELETE
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+           |WHEN NOT MATCHED BY SOURCE AND t.k < 5 THEN DELETE
+           |WHEN NOT MATCHED BY SOURCE AND t.k >= 25
+           |  THEN UPDATE SET v = 'stale'
+           |""".stripMargin)
+      val want = (base(5 until 15) :+ (Some(15L), "u15")) ++
+        base(17 until 25) ++ (25 until 30).map(k => (Some(k.toLong),
+          "stale")) :+ (Some(40L), "n40")
+      assert(kv(tbl) === want, s"[$mode]")
+    }
+  }
+
+  test("MERGE cardinality violation fails before any commit, in both " +
+    "write modes") {
+    for (mode <- MergeModes) {
+      val tbl = mergeTable(mode)
+      val before = snapshotIds(tbl)
+      val e = intercept[Exception] {
+        spark.sql(
+          s"""MERGE INTO $tbl t USING (SELECT * FROM VALUES
+             |  (3L, 'a'), (3L, 'b'), (50L, 'c') AS s(k, v)) s
+             |ON t.k = s.k
+             |WHEN MATCHED THEN UPDATE SET v = s.v
+             |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+             |""".stripMargin)
+      }
+      assert(e.getMessage.contains("cardinality"), s"[$mode]")
+      assert(snapshotIds(tbl) === before, s"[$mode] nothing committed")
+      assert(kv(tbl) === base(0 until 30), s"[$mode]")
+    }
+  }
+
+  test("MERGE NULL keys, in both write modes: under = a NULL source key " +
+    "never matches and is inserted; under <=> it updates the " +
+    "NULL-keyed target row") {
+    for (mode <- MergeModes) {
+      val tbl = mergeTable(mode, extra = Seq("NULL"))
+      val upsert = (on: String, src: String) => spark.sql(
+        s"""MERGE INTO $tbl t USING (SELECT * FROM VALUES $src
+           |  AS s(k, v)) s
+           |ON $on
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+           |""".stripMargin)
+      upsert("t.k = s.k", "(CAST(NULL AS BIGINT), 'n1')")
+      assert(kv(tbl) === Seq((None, "n1"), (None, "xNULL")) ++
+        base(0 until 30), s"[$mode] = never matches NULL")
+      upsert("t.k = s.k", "(CAST(NULL AS BIGINT), 'n2'), (7L, 'u7')")
+      assert(kv(tbl) === Seq((None, "n1"), (None, "n2"), (None, "xNULL")) ++
+        base(0 until 7) ++ Seq((Some(7L), "u7")) ++ base(8 until 30),
+        s"[$mode] a NULL key beside a real one")
+      spark.sql(s"DELETE FROM $tbl WHERE v IN ('n1', 'n2')")
+      upsert("t.k <=> s.k", "(CAST(NULL AS BIGINT), 'nullsafe')")
+      assert(kv(tbl) === Seq((None, "nullsafe")) ++ base(0 until 7) ++
+        Seq((Some(7L), "u7")) ++ base(8 until 30),
+        s"[$mode] <=> matches the NULL-keyed row")
+    }
+  }
+
+  test("MERGE with a non-equi ON (BETWEEN) and with an INT target key " +
+    "against a BIGINT source key, in both write modes") {
+    for (mode <- MergeModes) {
+      val tbl = mergeTable(mode)
+      spark.sql(
+        s"""MERGE INTO $tbl t USING (SELECT * FROM VALUES
+           |  (3L, 5L, 'r'), (100L, 101L, 'n') AS s(lo, hi, v)) s
+           |ON t.k BETWEEN s.lo AND s.hi
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.lo, s.v)
+           |""".stripMargin)
+      assert(kv(tbl) === base(0 until 3) ++ (3 until 6).map(k =>
+        (Some(k.toLong), "r")) ++ base(6 until 30) :+ (Some(100L), "n"),
+        s"[$mode] BETWEEN")
+
+      val narrow = mergeTable(mode, keyType = "INT")
+      // 2^32 + 5 narrowed to INT would be 5: the BIGINT comparison
+      // must keep it unmatched
+      spark.sql(
+        s"""MERGE INTO $narrow t USING (SELECT * FROM VALUES
+           |  (4294967301L, 'wide'), (6L, 'u6') AS s(k, v)) s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
+      assert(kv(narrow) === base(0 until 6) ++ Seq((Some(6L), "u6")) ++
+        base(7 until 30), s"[$mode] INT target vs BIGINT source")
+    }
+  }
+
+  test("MERGE evaluates a nondeterministic source exactly once, in " +
+    "both write modes: each source row's key and value come from one " +
+    "evaluation, and it lands once, updated or inserted") {
+    import org.apache.spark.sql.functions.udf
+    spark.udf.register("merge_tick",
+      udf(() => MergeTicks.n.incrementAndGet()).asNondeterministic())
+    for (mode <- MergeModes) {
+      val tbl = mergeTable(mode)
+      MergeTicks.n.set(0)
+      val stored = spark.sparkContext.getPersistentRDDs.keySet
+      // an odd tick moves the key out of the target's range, so the
+      // tick decides both the match and the value
+      spark.sql(
+        s"""MERGE INTO $tbl t USING (
+           |  SELECT id + (tick % 2) * 100 AS k, CAST(tick AS STRING) AS v
+           |  FROM (SELECT id, merge_tick() AS tick FROM range(20, 40))) s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+           |""".stripMargin)
+      assert(MergeTicks.n.get === 20, s"[$mode] the source ran once")
+      assert(spark.sparkContext.getPersistentRDDs.keySet === stored,
+        s"[$mode] the MERGE releases the source and discovery blocks")
+      val (kept, merged) = kv(tbl).partition(_._2.startsWith("v"))
+      val ticks = merged.map(_._2.toLong)
+      assert(ticks.sorted === (1L to 20L), s"[$mode] $merged")
+      assert(merged.map(_._1.get % 100).sorted === (20L until 40L),
+        s"[$mode] one row per source row: $merged")
+      assert(merged.forall { case (k, v) =>
+        (k.get >= 100) == (v.toLong % 2 == 1) }, s"[$mode] $merged")
+      val matched = merged.map(_._1.get).filter(_ < 30).toSet
+      assert(kept === base(0 until 30).filterNot(r => matched(r._1.get)),
+        s"[$mode] the untouched target rows")
+      assert(kept.size + merged.size === 30 + 20 - matched.size,
+        s"[$mode]")
+    }
+  }
+
+  test("MERGE plan: an equi-key upsert from a small source broadcasts " +
+    "the source into the target scan and runs no full-outer join, in " +
+    "both write modes") {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      BroadcastHashJoinExec}
+    for (mode <- MergeModes) {
+      val tbl = mergeTable(mode)
+      val plans = plansOf(spark.sql(
+        s"""MERGE INTO $tbl t USING (SELECT * FROM VALUES
+           |  (4L, 'u4'), (24L, 'u24'), (77L, 'n77') AS s(k, v)) s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+           |""".stripMargin))
+      val joins = plans.flatMap(nodesOf).collect { case j: BaseJoinExec => j }
+      assert(!joins.exists(_.joinType == FullOuter),
+        s"[$mode] no full-outer join: ${joins.map(_.joinType)}")
+      val discovery = joins.collect {
+        case j: BroadcastHashJoinExec =>
+          j.buildSide match {
+            case BuildRight => (j.left, j.right)
+            case BuildLeft => (j.right, j.left)
+          }
+      }.filter { case (stream, _) =>
+        stream.output.exists(_.name == graft.lake.GraftTable.FileCol)
+      }
+      assert(discovery.nonEmpty &&
+        discovery.forall(_._2.output.exists(_.name == "__graft_src_id")),
+        s"[$mode] the target scan must stream against the broadcast " +
+          s"source:\n${plans.mkString("\n")}")
+      assert(kv(tbl) === base(0 until 4) ++ Seq((Some(4L), "u4")) ++
+        base(5 until 24) ++ Seq((Some(24L), "u24")) ++ base(25 until 30) :+
+        (Some(77L), "n77"), s"[$mode]")
+    }
+  }
+
+  test("MOR upsert MERGE job count (regression pin)") {
+    val tbl = mergeTable("merge-on-read")
+    val (_, jobs) = graft.SparkJobs.count(spark.sparkContext)(spark.sql(
+      s"""MERGE INTO $tbl t USING (SELECT * FROM VALUES
+         |  (4L, 'u4'), (24L, 'u24'), (77L, 'n77') AS s(k, v)) s
+         |ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET v = s.v
+         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+         |""".stripMargin))
+    // source broadcast (its first read stores the source's local
+    // checkpoint), discovery cache, probe map + result, delete
+    // write (range exchange + write), matched-id broadcast for the
+    // insert anti-join, rebalance + data write. The full-outer
+    // discovery join, its whole-table cache and the two-level probe
+    // over it ran 11 jobs on this shape.
+    assert(jobs === 9)
+  }
+
   test("SQL reads keep parquet pushdown and codegen through the " +
     "substitution rule: filters reach the scan, columns are pruned") {
     val ns = freshNs()
@@ -2298,4 +2557,10 @@ class GraftSqlSpec extends SparkSuite {
         s"[$mode] ids 1 and 41 updated (30-29, 70-29)")
     }
   }
+}
+
+/** Calls of the nondeterministic `merge_tick` UDF (one JVM in local
+  * mode, so executor-side increments land here). */
+object MergeTicks {
+  val n = new java.util.concurrent.atomic.AtomicLong()
 }
