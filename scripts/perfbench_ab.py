@@ -13,8 +13,14 @@ builds it (a few minutes).
 
 Prints, per end-to-end metric of the change tree's BENCHMARK.json: the
 parent and change medians, the parent's quartiles, the change/parent
-ratio of the medians, and in how many pairs the change was better.
-Exits non-zero when a run fails or reports `correct: false`.
+ratio of the medians, in how many pairs the change was better, and a
+bound verdict: `within` when the change's median is no worse than the
+parent's by more than the metric's `bound` (a fraction of the parent's
+median, in the direction `better` names), `OUTSIDE` when it is, and
+`unresolved` when the parent's own spread (IQR / median) exceeds the
+bound, so the runs cannot tell, unless every change run reads better
+than every parent run. Exits non-zero when a run fails or
+reports `correct: false`.
 """
 import argparse
 import json
@@ -49,6 +55,21 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(metric, ps, cs):
+    """Whether the change runs' median is within the metric's bound of
+    the parent runs' median; `unresolved` if the parent's IQR over its
+    median exceeds the bound and the two sets of runs overlap."""
+    bound = metric["bound"]
+    lower = metric["better"] == "lower"
+    pm, cm = statistics.median(ps), statistics.median(cs)
+    q1, q3 = quartiles(ps)
+    if (q3 - q1) > bound * abs(pm):
+        separated = max(cs) < min(ps) if lower else min(cs) > max(ps)
+        return "within" if separated else "unresolved"
+    worse = (cm - pm) if lower else (pm - cm)
+    return "within" if worse <= bound * abs(pm) else "OUTSIDE"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True)
@@ -81,7 +102,7 @@ def main():
     print(f"{a.workload}: {a.pairs} pairs, seeds {a.seed0}.."
           f"{a.seed0 + a.pairs - 1}")
     print(f"{'metric':16} {'parent':>10} {'q1..q3':>21} {'change':>10} "
-          f"{'ratio':>7} {'wins':>6}")
+          f"{'ratio':>7} {'wins':>6} {'bound':>6} {'verdict':>10}")
     for x in metrics:
         name = x["name"]
         pairs = [(value(p["metrics"], name), value(c["metrics"], name))
@@ -97,7 +118,8 @@ def main():
         wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
         ratio = f"{cm / pm:7.3f}" if pm else "      -"
         print(f"{name:16} {pm:10.4g} {q1:10.4g}..{q3:<10.4g} {cm:10.4g} "
-              f"{ratio} {wins:>3}/{len(pairs)}")
+              f"{ratio} {wins:>3}/{len(pairs)} {x['bound']:6.2f} "
+              f"{verdict(x, ps, cs):>10}")
     if bad:
         print("FAILED RUNS:\n  " + "\n  ".join(bad))
         sys.exit(1)

@@ -31,11 +31,6 @@ object FileSummary {
         col("committed_at").as("created_at"),
         lit("manifest-list").as("file_type"), lit("json").as("file_format"))
     val mans = t.allManifests
-      // a pre-segment inline manifest IS its snapshot's list file —
-      // the manifest-lists CTE above already counts it; don't count
-      // the same physical file twice under both types
-      .join(snaps.select(col("manifest_list").as("path")),
-        Seq("path"), "left_anti")
     val manifests = mans
       .join(snaps, mans("added_snapshot_id") === snaps("snapshot_id"), "left")
       // a segment can outlive its creator snapshot (shared by later

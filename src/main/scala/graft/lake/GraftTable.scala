@@ -70,8 +70,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
   // manifest LIST docs and entry SEGMENTS cache separately: a segment
   // is shared by many snapshots, so its parse is paid once per file,
   // not once per referencing snapshot
-  private val listDocCache = GraftTable.lruCache[String,
-    Either[Seq[ManifestEntry], Seq[ManifestSegmentRef]]](64)
+  private val listDocCache =
+    GraftTable.lruCache[String, Seq[ManifestSegmentRef]](64)
   private val segmentCache =
     GraftTable.lruCache[String, Seq[ManifestEntry]](128)
 
@@ -90,10 +90,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * re-read at commit time. */
   private final case class Base(version: Int, meta: TableMeta) {
     def entries: Seq[ManifestEntry] =
-      meta.currentSnapshotId
-        .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-        .map(manifestOf)
-        .getOrElse(Nil)
+      headOf(meta).map(manifestOf).getOrElse(Nil)
   }
 
   private def captureBase(): Base = {
@@ -704,8 +701,13 @@ class GraftTable(val spark: SparkSession, val root: Path,
       br
     })
 
-  def currentSnapshot: Option[SnapshotMeta] =
-    meta.currentSnapshotId.flatMap(id => meta.snapshots.find(_.snapshotId == id))
+  def currentSnapshot: Option[SnapshotMeta] = headOf(meta)
+
+  /** The head snapshot `m` records, resolved within that ONE metadata
+    * version: a second `meta` read could land after a commit plus an
+    * expiry and miss the head id the first read returned. */
+  private def headOf(m: TableMeta): Option[SnapshotMeta] =
+    m.currentSnapshotId.flatMap(id => m.snapshots.find(_.snapshotId == id))
 
   def snapshotOrFail(id: Long): SnapshotMeta =
     meta.snapshots.find(_.snapshotId == id).getOrElse(
@@ -713,24 +715,16 @@ class GraftTable(val spark: SparkSession, val root: Path,
         s"Cannot find snapshot with ID $id (expired or never existed)"))
 
   def manifestOf(s: SnapshotMeta): Seq[ManifestEntry] =
-    manifestCache.computeIfAbsent(s.manifestList, rel =>
-      listDocOf(rel) match {
-        case Left(entries) => entries // pre-segment inline format
-        case Right(refs) => refs.flatMap(r => segmentEntries(r.path))
-      })
+    manifestCache.computeIfAbsent(s.manifestList,
+      _ => segmentsOf(s).flatMap(r => segmentEntries(r.path)))
 
-  private def listDocOf(rel: String)
-      : Either[Seq[ManifestEntry], Seq[ManifestSegmentRef]] =
-    listDocCache.computeIfAbsent(rel, r =>
-      Json.readManifestDoc(Files.readString(root.resolve(r))))
-
-  /** The snapshot's manifest segments (empty for pre-segment inline
-    * manifests and empty tables). */
+  /** The snapshot's manifest segments (empty for an empty table). */
   private[lake] def segmentsOf(s: SnapshotMeta): Seq[ManifestSegmentRef] =
-    listDocOf(s.manifestList).getOrElse(Nil)
+    listDocCache.computeIfAbsent(s.manifestList, rel =>
+      Json.readManifestList(root.resolve(rel)))
 
   /** Segment-file parses (cache misses) — test instrumentation that
-    * lets specs prove the fast-append commit path reads ZERO parent
+    * lets specs prove an append's commit reads ZERO parent
     * segments (O(delta) driver work, not O(table files)). */
   private[lake] val segmentLoads = new java.util.concurrent.atomic.AtomicLong
 
@@ -749,17 +743,10 @@ class GraftTable(val spark: SparkSession, val root: Path,
   /** Entries reachable from these snapshots, walked by DISTINCT
     * segment — shared segments parse and traverse once, so the whole-
     * log sweeps (expiry reachability, orphan reference sets, all_files)
-    * cost O(unique segments × entries), not O(snapshots × files).
-    * Legacy inline manifests contribute their entry arrays directly. */
-  private def entriesAcross(snaps: Seq[SnapshotMeta]): Seq[ManifestEntry] = {
-    val segRels = Seq.newBuilder[String]
-    val legacy = Seq.newBuilder[ManifestEntry]
-    for (s <- snaps) listDocOf(s.manifestList) match {
-      case Right(refs) => segRels ++= refs.map(_.path)
-      case Left(entries) => legacy ++= entries
-    }
-    segRels.result().distinct.flatMap(segmentEntries) ++ legacy.result()
-  }
+    * cost O(unique segments × entries), not O(snapshots × files). */
+  private def entriesAcross(snaps: Seq[SnapshotMeta]): Seq[ManifestEntry] =
+    snaps.flatMap(s => segmentsOf(s).map(_.path)).distinct
+      .flatMap(segmentEntries)
 
   private def currentEntries: Seq[ManifestEntry] =
     currentSnapshot.map(manifestOf).getOrElse(Nil)
@@ -848,18 +835,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     else None
   }
 
-  /** Commit a new snapshot: write its manifest list, then the metadata.
-    * `id` is allocated ONCE per operation (nextSnapshotHint) and shared
-    * with the manifest entries' addedSnapshotId — allocating here again
-    * would drift by the write job's duration and break all_entries'
-    * ADDED-status attribution. */
-  /** Post-commit table totals, the Iceberg snapshot-summary keys. */
-  private def summaryTotals(entries: Seq[ManifestEntry])
-      : Map[String, String] = Map(
-    "total-records" ->
-      entries.filter(_.content == 0).map(_.recordCount).sum.toString,
-    "total-data-files" -> entries.count(_.content == 0).toString,
-    "total-delete-files" -> entries.count(_.content != 0).toString)
+  // ---- commit ----
 
   /** Write one immutable entry segment and return its reference. */
   private def writeSegment(id: Long,
@@ -876,68 +852,13 @@ class GraftTable(val spark: SparkSession, val root: Path,
       maxPath = if (entries.isEmpty) None else Some(entries.map(_.path).max))
   }
 
-  /** Compose the new snapshot's manifest as segment references against
-    * its PARENT's manifest list, writing only what changed (the
-    * Iceberg manifest-reuse discipline that keeps commit metadata
-    * O(delta), not O(table files)):
-    *   - a parent segment whose every entry survives unchanged is
-    *     referenced verbatim (zero bytes written for it);
-    *   - a segment that lost entries is rewritten with its survivors;
-    *   - all entries new to this commit land in ONE fresh segment.
-    * Self-vetting: the reuse plan is only used when the segments
-    * concatenate back to EXACTLY the passed entry list (commit shapes
-    * are `filter(parent) ++ additions`, which always does); anything
-    * else — including `compact = true`, the rewrite_manifests path —
-    * writes the full list as one fresh segment. */
-  private def composeSegments(parent: Option[SnapshotMeta], id: Long,
-      entries: Seq[ManifestEntry],
-      compact: Boolean): Seq[ManifestSegmentRef] = {
-    if (entries.isEmpty) return Nil
-    val parentSegs = if (compact) Nil
-      else parent.map(segmentsOf).getOrElse(Nil)
-    if (parentSegs.isEmpty) return Seq(writeSegment(id, entries))
-    val written = Seq.newBuilder[String]
-    def writeTracked(es: Seq[ManifestEntry]): ManifestSegmentRef = {
-      val r = writeSegment(id, es); written += r.path; r
-    }
-    val parentOf: Map[String, (Int, ManifestEntry)] =
-      parentSegs.zipWithIndex.flatMap { case (ref, i) =>
-        segmentEntries(ref.path).map(e => e.path -> (i, e))
-      }.toMap
-    val survivors = Array.fill(parentSegs.size)(
-      Seq.newBuilder[ManifestEntry])
-    val newcomers = Seq.newBuilder[ManifestEntry]
-    for (e <- entries) parentOf.get(e.path) match {
-      // survival means the ENTRY is unchanged, not just the path —
-      // a same-path entry with different stats/content is a rewrite
-      case Some((i, pe)) if pe == e => survivors(i) += e
-      case _ => newcomers += e
-    }
-    val kept = parentSegs.zipWithIndex.flatMap { case (ref, i) =>
-      val s = survivors(i).result()
-      if (s.isEmpty) None
-      else if (s.size == ref.entryCount) Some(ref) // reused verbatim
-      else Some(writeTracked(s))
-    }
-    val added = newcomers.result()
-    val refs = mergeSmallSegments(id, kept ++ (if (added.isEmpty) Nil
-      else Seq(writeTracked(added))), written)
-    // order self-check: segment concatenation must BE the entry list
-    val flat = refs.flatMap(r => segmentEntries(r.path))
-    val fin =
-      if (flat.map(_.path) == entries.map(_.path)) refs
-      else Seq(writeSegment(id, entries))
-    dropUnreferenced(written.result(), fin)
-    fin
-  }
-
-  /** Eagerly delete segment files written DURING this compose attempt
+  /** Eagerly delete segment files written DURING this commit attempt
     * that the final ref list does not reference (a merge bin folded
-    * them, or the self-check fell back) — they are unpublished
-    * this-attempt files no snapshot can reach, so deleting them saves
-    * metadata-dir litter the orphan sweep would otherwise carry until
-    * its age window passes. Best-effort: a failed delete just leaves
-    * an orphan for the sweep. */
+    * them, or the commit refused) — they are unpublished this-attempt
+    * files no snapshot can reach, so deleting them saves metadata-dir
+    * litter the orphan sweep would otherwise carry until its age
+    * window passes. Best-effort: a failed delete just leaves an orphan
+    * for the sweep. */
   private def dropUnreferenced(written: Seq[String],
       fin: Seq[ManifestSegmentRef]): Unit = {
     val keep = fin.map(_.path).toSet
@@ -953,10 +874,10 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * `commit.manifests.target-size-bytes`, default 8 MiB) are binned
     * into merged segments — so a long-lived table bounds its segment
     * count automatically instead of waiting for a scheduler to run
-    * rewrite_manifests. Adjacency keeps concatenation order, so the
-    * commit's order self-check still holds; amortized cost is the
-    * Iceberg deal: most commits write O(delta), every ~min-count-th
-    * commit also folds the accumulated small segments once. */
+    * rewrite_manifests. Adjacency keeps the entry order; amortized
+    * cost is the Iceberg deal: most commits write O(delta), every
+    * ~min-count-th commit also folds the accumulated small segments
+    * once. */
   private def mergeSmallSegments(id: Long,
       refs: Seq[ManifestSegmentRef],
       written: scala.collection.mutable.Builder[String, Seq[String]])
@@ -992,104 +913,62 @@ class GraftTable(val spark: SparkSession, val root: Path,
     out.result()
   }
 
-  /** Post-commit table totals computed from segment REFS alone — the
-    * refs carry entry/record aggregates precisely so summaries never
-    * read segment bytes. Must agree with [[summaryTotals]]. */
+  /** Post-commit table totals (the Iceberg snapshot-summary keys),
+    * computed from segment REFS alone — the refs carry entry/record
+    * aggregates precisely so summaries never read segment bytes. */
   private def totalsFromRefs(refs: Seq[ManifestSegmentRef])
       : Map[String, String] = Map(
     "total-records" -> refs.map(_.recordCount).sum.toString,
     "total-data-files" -> refs.map(_.dataFileCount).sum.toString,
     "total-delete-files" -> refs.map(_.deleteFileCount).sum.toString)
 
-  /** True O(delta) fast commit for ADD-ONLY operations (Iceberg's
-    * fast-append, generalized): any commit that removes no entries —
-    * a pure append, a MOR position-delete (op=delete), a MOR update
-    * or RowDelta (op=overwrite: delete file + new data files) — is
-    * provably `parent.refs :+ newSegment(added)` from the OPERATION
-    * SHAPE alone — no parent-segment reads, no parent entry-list
-    * materialization, no survivor diff, no concatenation self-check.
-    * Driver work and bytes written are O(added files); the parent
-    * manifest LIST (one small file, O(segments)) is the only parent
-    * metadata touched. Snapshot summary totals come from the refs'
-    * carried aggregates. Returns None — caller falls back to the
-    * checked full-list path — when the parent head still uses a
-    * pre-segment inline manifest (its entry order is only recoverable
-    * by reading it). Amortized exception, same deal as every commit:
-    * once refs reach `commit.manifests.min-count-to-merge`,
-    * [[mergeSmallSegments]] folds adjacent small segments (reading
-    * just the segments it bins). */
-  private def commitAddOnlyFast(base: Base, id: Long,
-      branch: Option[String], op: String, added: Seq[ManifestEntry],
-      summary: Map[String, String],
-      metaTweak: TableMeta => TableMeta = identity)
-      : Option[SnapshotMeta] =
-    commitDeltaFast(base, id, branch, op, Set.empty, added, summary,
-      metaTweak)
-
-  /** [[commitAddOnlyFast]], or on a legacy inline-manifest parent the
-    * checked commit of the head's entries plus `added`, onto `branch`
-    * (main when None). */
-  private def commitAdded(b: Base, id: Long, branch: Option[String],
-      op: String, added: Seq[ManifestEntry], summary: Map[String, String],
-      metaTweak: TableMeta => TableMeta = identity): SnapshotMeta =
-    commitAddOnlyFast(b, id, branch, op, added, summary, metaTweak)
-      .getOrElse {
-        val all =
-          headSnapshot(b, branch).map(manifestOf).getOrElse(Nil) ++ added
-        branch match {
-          case None => commitSnapshot(b, id, op, all, summary,
-            metaTweak = metaTweak)
-          case Some(br) =>
-            commitSnapshotOnBranch(b, id, op, br, all, summary, metaTweak)
-        }
-      }
-
-  /** O(touched) fast commit for REMOVE+ADD operations (COW rewrites,
-    * MERGE): drops every data entry whose absolute path is in
-    * `removedAbs` and appends `added`, reading ONLY the parent
-    * segments whose carried path bounds can contain a removed path —
-    * a 1-file COW on a many-segment table parses one segment. Self-
-    * vetting two ways: a parent ref without bounds is always read
-    * (conservative), and if any removed path is NOT found among the
-    * read segments the whole plan is abandoned (returns None → caller
-    * falls back to the checked [[composeSegments]] path) — a bounds
-    * bug degrades to the slow path, never to a wrong manifest. Entry
-    * order is preserved (survivors keep segment order, additions land
-    * last), matching the checked path's `filter(parent) ++ additions`
-    * shape. `removedAbs` may name delete files too (a permanent
-    * erase drops them all). */
-  private def commitDeltaFast(base: Base, id: Long,
+  /** The one manifest-commit path, onto `branch` (main when None):
+    * the new snapshot's manifest is its parent's segments minus the
+    * entries whose absolute path is in `removedAbs` (data or delete
+    * files), plus `added` in one fresh trailing segment — Iceberg's
+    * filter-parent-manifests-and-add commit. Only the parent segments
+    * whose carried path bounds can hold a removed path are read; one
+    * that lost entries is rewritten with its survivors, every other
+    * one is referenced verbatim, so an append reads no parent segment
+    * and a 1-file COW on a many-segment table parses one. Driver work
+    * and bytes written are O(touched segments + added files), not
+    * O(table files). Survivors keep segment order and additions land
+    * last. An entry whose stats change under the same path (an
+    * ANALYZE restamp) is removed and re-added; [[rewriteManifests]]
+    * removes and re-adds every entry, which compacts the list into
+    * one segment. A removed path that no bound-admitted segment holds
+    * (it never existed, or a bound is wrong) REFUSES the commit before
+    * anything is published: a bounds bug can never produce a wrong
+    * manifest. `id` is allocated ONCE per operation
+    * (nextSnapshotHint) and shared with the added entries'
+    * addedSnapshotId — allocating here again would drift by the write
+    * job's duration and break all_entries' ADDED-status attribution.
+    * Amortized exception, as in Iceberg: once refs reach
+    * `commit.manifests.min-count-to-merge`, [[mergeSmallSegments]]
+    * folds adjacent small segments (reading just the ones it bins). */
+  private def commitDelta(base: Base, id: Long,
       branch: Option[String], op: String, removedAbs: Set[String],
       added: Seq[ManifestEntry],
       summary: Map[String, String],
-      metaTweak: TableMeta => TableMeta = identity)
-      : Option[SnapshotMeta] = {
+      metaTweak: TableMeta => TableMeta = identity): SnapshotMeta = {
     val m = base.meta
-    val parent = branch match {
-      case None => m.currentSnapshotId
-        .flatMap(pid => m.snapshots.find(_.snapshotId == pid))
-      case Some(br) => Some(branchHead(base, br))
-    }
-    val parentRefs = parent match {
-      case None => Nil
-      case Some(p) => listDocOf(p.manifestList) match {
-        case Right(refs) => refs
-        case Left(_) => return None // legacy inline parent
-      }
-    }
+    val parent = headSnapshot(base, branch)
+    val parentRefs = parent.map(segmentsOf).getOrElse(Nil)
     val written = Seq.newBuilder[String]
     // every raw spelling a removed absolute path can have as an
     // entry.path: the absolute string itself (adopted/foreign files)
-    // or root-relative (ordinary writes)
+    // or root-relative (ordinary writes); sorted, so a segment's
+    // bound check is one binary search
     val rootPrefix = root.toAbsolutePath.toString + "/"
-    val removedRaw: Seq[String] = removedAbs.toSeq.flatMap(a =>
+    val removedRaw: IndexedSeq[String] = removedAbs.toIndexedSeq.flatMap(a =>
       if (a.startsWith(rootPrefix))
-        Seq(a, a.stripPrefix(rootPrefix)) else Seq(a))
+        Seq(a, a.stripPrefix(rootPrefix)) else Seq(a)).sorted
     def mayContainRemoved(r: ManifestSegmentRef): Boolean =
       (r.minPath, r.maxPath) match {
         case (Some(lo), Some(hi)) =>
-          removedRaw.exists(p => lo <= p && p <= hi)
-        case _ => true // legacy ref without bounds: must read
+          val i = removedRaw.search(lo).insertionPoint
+          i < removedRaw.size && removedRaw(i) <= hi
+        case _ => true // ref without bounds: must read
       }
     val found = Set.newBuilder[String]
     val survivedRefs: Seq[ManifestSegmentRef] =
@@ -1109,11 +988,13 @@ class GraftTable(val spark: SparkSession, val root: Path,
           }
         }
       }
-    if (removedAbs.nonEmpty && found.result() != removedAbs) {
-      // a removed path was not found in any read segment: either it
-      // never existed or a bound is wrong — abandon, checked path
+    val missing = removedAbs -- found.result()
+    if (missing.nonEmpty) {
       dropUnreferenced(written.result(), Nil)
-      return None
+      throw new IllegalStateException(
+        s"refusing to commit $op on $name: ${missing.size} removed " +
+          s"file(s) are in no parent segment whose path bounds admit " +
+          s"them (e.g. ${missing.min}); nothing was published")
     }
     val addedRefs =
       if (added.isEmpty) Nil
@@ -1124,10 +1005,17 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // a merge bin may have folded the just-written added segment —
     // drop this-attempt files the final list does not reference
     dropUnreferenced(written.result(), refs)
+    // per-ATTEMPT unique list name: snapshot ids are time-derived, so
+    // two same-millisecond racing writers can allocate the same id —
+    // with a deterministic snap-<id>.json the loser's pre-publish
+    // write would silently overwrite the winner's list (the winner's
+    // metadata then points at the loser's file list: lost data). The
+    // UUID suffix makes every attempt's list AND segments immutable;
+    // losers leave unreferenced files for orphan cleanup.
     val manifestRel = s"metadata/snap-$id-${UUID.randomUUID()}.json"
     Io.atomicWrite(root.resolve(manifestRel),
       Json.write(ManifestListDoc(refs)))
-    listDocCache.put(manifestRel, Right(refs))
+    listDocCache.put(manifestRel, refs)
     val branchSummary = branch.map(br => Map("branch" -> br))
       .getOrElse(Map.empty)
     val snap = SnapshotMeta(id, parent.map(_.snapshotId), now(),
@@ -1142,47 +1030,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       case Some(br) => m.copy(snapshots = m.snapshots :+ snap,
         refs = m.refs + (br -> m.refs(br).copy(snapshotId = id)))
     }))
-    Some(snap)
-  }
-
-  private def commitSnapshot(base: Base, id: Long, operation: String,
-      entries: Seq[ManifestEntry], summary: Map[String, String],
-      compactSegments: Boolean = false,
-      metaTweak: TableMeta => TableMeta = identity): SnapshotMeta = {
-    val m = base.meta
-    val parent = m.currentSnapshotId
-      .flatMap(pid => m.snapshots.find(_.snapshotId == pid))
-    // per-ATTEMPT unique manifest name: snapshot ids are time-derived,
-    // so two same-millisecond racing writers can allocate the same id
-    // — with a deterministic snap-<id>.json the loser's pre-publish
-    // manifest write would silently overwrite the winner's manifest
-    // (the winner's metadata then points at the loser's file list:
-    // lost data). A UUID suffix makes every attempt's manifest list
-    // AND segments immutable; losers leave unreferenced files for
-    // orphan cleanup.
-    val manifestRel = writeManifestList(parent, id, entries,
-      compactSegments)
-    val snap = SnapshotMeta(id, m.currentSnapshotId, now(), operation,
-      manifestRel, summary ++ summaryTotals(entries),
-      schemaDdl = Some(m.schemaDdl),
-      physicalNames =
-        if (m.physicalNames.isEmpty) None else Some(m.physicalNames))
-    commitMeta(base, metaTweak(m.copy(snapshots = m.snapshots :+ snap,
-      currentSnapshotId = Some(id))))
     snap
-  }
-
-  /** Segment composition + list write + cache priming, shared by the
-    * main and branch commit paths. */
-  private def writeManifestList(parent: Option[SnapshotMeta], id: Long,
-      entries: Seq[ManifestEntry], compact: Boolean): String = {
-    val refs = composeSegments(parent, id, entries, compact)
-    val manifestRel = s"metadata/snap-$id-${UUID.randomUUID()}.json"
-    Io.atomicWrite(root.resolve(manifestRel),
-      Json.write(ManifestListDoc(refs)))
-    listDocCache.put(manifestRel, Right(refs))
-    manifestCache.put(manifestRel, entries)
-    manifestRel
   }
 
   // ---- reads ----
@@ -1498,8 +1346,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
       }.toMap
       val stamped = entries.map(
         ndvStampOf(b.meta, entries.map(abs), chosen, perFile, k))
-      commitSnapshot(b, newId, "replace", stamped,
-        Map("operation-origin" -> "analyze",
+      // a restamped entry is removed and re-added under its path; one
+      // whose stamp did not change keeps its segment
+      val restamped = entries.zip(stamped).collect {
+        case (e, st) if st != e => st }
+      commitDelta(b, newId, None, "replace", restamped.map(abs).toSet,
+        restamped, Map("operation-origin" -> "analyze",
           "analyzed-columns" -> chosen.mkString(","),
           "stamped-file-sketches" -> stamped.count(_.ndv.nonEmpty)
             .toString),
@@ -1999,32 +1851,25 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .filter(_.operation != "replace")
       .zipWithIndex.flatMap { case (s, ord) =>
         val parentSnap = s.parentId.map(snapshotOrFail)
-        // Per-commit file deltas at SEGMENT granularity when both
-        // sides are segment-form: a segment referenced by BOTH lists
-        // contributes identical paths to both sides, so it cancels in
-        // every diff — only the non-shared segments need reading.
-        // (Entry paths are unique within a manifest, so a path in a
-        // child-only segment cannot also live in a shared one.) For
-        // the dominant CDC window shape — fast-path add-only commits —
-        // the child-only set is the ONE new segment and the parent-
-        // only set is empty: a changelog/streaming micro-batch costs
-        // O(delta) driver work, never O(table entries). The FULL
-        // parent list stays lazy — materialized only by slices that
-        // must replay deletes against parent state.
-        val (childSide, parentSide) =
-          (listDocOf(s.manifestList),
-            parentSnap.map(p => listDocOf(p.manifestList))) match {
-            case (Right(cRefs), pDoc) if pDoc.forall(_.isRight) =>
-              val pRefs = pDoc.map(_.toOption.get).getOrElse(Nil)
-              val cSet = cRefs.map(_.path).toSet
-              val pSet = pRefs.map(_.path).toSet
-              (cRefs.filterNot(r => pSet(r.path))
-                .flatMap(r => segmentEntries(r.path)),
-                pRefs.filterNot(r => cSet(r.path))
-                  .flatMap(r => segmentEntries(r.path)))
-            case _ => // legacy inline manifest on either side
-              (manifestOf(s), parentSnap.map(manifestOf).getOrElse(Nil))
-          }
+        // Per-commit file deltas at SEGMENT granularity: a segment
+        // referenced by BOTH lists contributes identical paths to both
+        // sides, so it cancels in every diff — only the non-shared
+        // segments need reading. (Entry paths are unique within a
+        // manifest, so a path in a child-only segment cannot also live
+        // in a shared one.) For the dominant CDC window shape —
+        // add-only commits — the child-only set is the ONE new segment
+        // and the parent-only set is empty: a changelog/streaming
+        // micro-batch costs O(delta) driver work, never O(table
+        // entries). The FULL parent list stays lazy — materialized only
+        // by slices that must replay deletes against parent state.
+        val cRefs = segmentsOf(s)
+        val pRefs = parentSnap.map(segmentsOf).getOrElse(Nil)
+        val cSet = cRefs.map(_.path).toSet
+        val pSet = pRefs.map(_.path).toSet
+        val childSide = cRefs.filterNot(r => pSet(r.path))
+          .flatMap(r => segmentEntries(r.path))
+        val parentSide = pRefs.filterNot(r => cSet(r.path))
+          .flatMap(r => segmentEntries(r.path))
         val childPaths = childSide.map(_.path).toSet
         val parentPaths = parentSide.map(_.path).toSet
         val addedData = childSide.filter(e =>
@@ -2146,17 +1991,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * overlap tests run as an executor-side scan of the segment files
     * and only the SURVIVORS come back. Planning a selective read of a
     * million-file table costs the driver O(survivors), not O(table).
-    * Below the threshold (or on a legacy inline manifest) this is
-    * exactly [[pruneByPredicate]] over [[manifestOf]]. */
+    * Below the threshold this is exactly [[pruneByPredicate]] over
+    * [[manifestOf]]. */
   private[lake] def prunedEntriesOf(s: SnapshotMeta,
-      bind: DataFrame => Column): Seq[ManifestEntry] =
-    listDocOf(s.manifestList) match {
-      case Right(refs)
-          if refs.map(_.entryCount.toLong).sum
-            >= metadataDistributedThreshold =>
-        prunedDistributed(refs, bind)
-      case _ => pruneByPredicate(manifestOf(s), analyzeConjuncts(bind))
-    }
+      bind: DataFrame => Column): Seq[ManifestEntry] = {
+    val refs = segmentsOf(s)
+    if (refs.map(_.entryCount.toLong).sum >= metadataDistributedThreshold)
+      prunedDistributed(refs, bind)
+    else pruneByPredicate(manifestOf(s), analyzeConjuncts(bind))
+  }
 
   /** Executor-side stats pruning: ships the analyzed conjuncts plus the
     * schema/mapping/bucket context to a typed filter over the segment
@@ -2336,17 +2179,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
       if (branch.isEmpty) ndvFoldTweak(b.meta, written, snapId)
       else ndvFoldIdentity
     val stamped = newEntries.map(ndv.stamp)
-    // O(delta) fast path: a pure append never reads parent segments
-    commitAddOnlyFast(b, snapId, branch, "append", stamped, summary,
-      ndv.metaTweak).getOrElse {
-      branch match { // legacy inline-manifest parent: checked path
-        case None => commitSnapshot(b, snapId, "append",
-          b.entries ++ stamped, summary, metaTweak = ndv.metaTweak)
-        case Some(br) => commitSnapshotOnBranch(b, snapId, "append", br,
-          manifestOf(branchHead(b, br)) ++ stamped, summary,
-          ndv.metaTweak)
-      }
-    }
+    // removes nothing, so the commit reads no parent segment
+    commitDelta(b, snapId, branch, "append", Set.empty, stamped, summary,
+      ndv.metaTweak)
   }
 
   /** Incremental read for streaming: rows of data files added by
@@ -2369,18 +2204,16 @@ class GraftTable(val spark: SparkSession, val root: Path,
         s.operation == "append" && !s.summary.contains("branch"))
     val appendIds = snaps.map(_.snapshotId).toSet
     // ref-provenance prune: within snapshot A's own manifest, A's
-    // additions live only in segments A itself wrote (the fast-path
+    // additions live only in segments A itself wrote (the commit's
     // new segment, or a merge-on-commit bin — both carry
     // ref.addedSnapshotId == A), so parent-written segments are never
     // read. A streaming micro-batch over appends costs O(delta)
     // driver work, not O(commits × table entries). The entry-level
     // addedSnapshotId filter still applies after the read (a merged
     // bin also carries older entries).
-    val entries = snaps.flatMap(s => listDocOf(s.manifestList) match {
-      case Right(refs) => refs.filter(r => appendIds(r.addedSnapshotId))
-        .flatMap(r => segmentEntries(r.path))
-      case Left(es) => es // legacy inline manifest
-    })
+    val entries = snaps.flatMap(s => segmentsOf(s)
+      .filter(r => appendIds(r.addedSnapshotId))
+      .flatMap(r => segmentEntries(r.path)))
       .filter(e => e.content == 0 && appendIds(e.addedSnapshotId))
       .distinctBy(_.path)
     if (entries.isEmpty) emptyDf
@@ -2446,8 +2279,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       addedSnapshotId = snapId))
     val summary = Map("mode" -> "snapshot-fork",
       "source-table" -> sourceRoot.toString)
-    commitAddOnlyFast(b, snapId, None, "append", adopted, summary).getOrElse(
-      commitSnapshot(b, snapId, "append", b.entries ++ adopted, summary))
+    commitDelta(b, snapId, None, "append", Set.empty, adopted, summary)
   }
 
   def addFiles(sourceDir: Path): SnapshotMeta = {
@@ -2535,10 +2367,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
           tracked.map(_.name), k)
       }), snapId)
     val stamped = newEntries.map(ndv.stamp)
-    commitAddOnlyFast(b, snapId, None, "append", stamped, summary,
-      ndv.metaTweak).getOrElse(
-      commitSnapshot(b, snapId, "append", b.entries ++ stamped,
-        summary, metaTweak = ndv.metaTweak))
+    commitDelta(b, snapId, None, "append", Set.empty, stamped, summary,
+      ndv.metaTweak)
   }
 
   /** Rewrite-free adoption of a hive-partitioned directory — migrate's
@@ -2647,9 +2477,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
       "adopted-base-path" -> baseAbs.toString,
       "added-data-files" -> entries.size.toString,
       "added-records" -> entries.map(_.recordCount).sum.toString)
-    commitAddOnlyFast(b, snapId, None, "append", entries, summary)
-      .getOrElse(commitSnapshot(b, snapId, "append",
-        b.entries ++ entries, summary))
+    commitDelta(b, snapId, None, "append", Set.empty, entries, summary)
   }
 
   /** INSERT OVERWRITE (truncate + insert) as ONE atomic snapshot: the
@@ -2682,12 +2510,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         replaced.count(_.content == 0).toString,
       "added-data-files" -> newEntries.size.toString,
       "added-records" -> newEntries.map(_.recordCount).sum.toString)
-    branch match {
-      case None => commitSnapshot(b, snapId, "overwrite", newEntries,
-        summary)
-      case Some(br) => commitSnapshotOnBranch(b, snapId, "overwrite",
-        br, newEntries, summary)
-    }
+    commitDelta(b, snapId, branch, "overwrite", replaced.map(abs).toSet,
+      newEntries, summary)
   }
 
   /** D8/D9 DELETE WHERE — honors `write.delete.mode` like the demo's
@@ -2840,8 +2664,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // a MOR delete is ADD-ONLY (it only appends position-delete files),
     // so neither planning nor commit needs the full entry list: hit
     // discovery prunes through prunedEntriesOf (executor-side past the
-    // distributed threshold) and the commit takes the O(delta) fast
-    // path — whole-op driver work is O(candidates + new files)
+    // distributed threshold) and the commit reads no parent segment —
+    // whole-op driver work is O(candidates + new files)
     val headSnap = headSnapshot(b, branch)
     val pruned = headSnap.map(prunedEntriesOf(_, bind)).getOrElse(Nil)
     val tgt = claimedOr(pruned, claimKey)
@@ -2859,7 +2683,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
       val delEntries = statEntries(moved, content = 1, snapId)
       val summary =
         Map("deleted-records" -> n.toString, "mode" -> "merge-on-read")
-      Some(commitAdded(b, snapId, branch, "delete", delEntries, summary))
+      Some(commitDelta(b, snapId, branch, "delete", Set.empty, delEntries,
+        summary))
     } finally hits.unpersist()
   }
 
@@ -2867,8 +2692,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * head when routed, else the base's current snapshot. */
   private def headSnapshot(b: Base,
       branch: Option[String]): Option[SnapshotMeta] = branch match {
-    case None => b.meta.currentSnapshotId
-      .flatMap(id => b.meta.snapshots.find(_.snapshotId == id))
+    case None => headOf(b.meta)
     case Some(br) => Some(branchHead(b, br))
   }
 
@@ -2882,7 +2706,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val branch = resolveBranch(explicitBranch)
     val b = captureBase()
     // add-only like morDelete (position-delete files + new data files):
-    // pruned planning + O(delta) fast commit
+    // pruned planning + an O(delta) commit
     val headSnap = headSnapshot(b, branch)
     val pruned = headSnap.map(prunedEntriesOf(_, bind)).getOrElse(Nil)
     val tgt = claimedOr(pruned, claimKey)
@@ -2903,7 +2727,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * of the write branch (MOR MERGE): `f` returns the position-delete
     * hits as a (file_path, pos) frame with their exact count, the rows
     * to append, and the summary. Add-only like [[morUpdate]]: the
-    * commit takes the O(delta) path. */
+    * commit reads no parent segment. */
   private[lake] def morRowChange(operation: String)(
       f: CowSnapshot =>
         Option[(DataFrame, Long, Option[DataFrame], Map[String, String])])
@@ -2926,7 +2750,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val snapId = nextSnapshotHint
     val added = statEntries(delMoved, content = 1, snapId) ++
       statEntries(newMoved, content = 0, snapId)
-    commitAdded(b, snapId, branch, op, added, summary)
+    commitDelta(b, snapId, branch, op, Set.empty, added, summary)
   }
 
   /** Equality delete (content=2): any live row matching a key tuple in
@@ -2949,8 +2773,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
     if (entries.isEmpty) return None
     val summary =
       Map("mode" -> "equality", "equality-columns" -> cols.mkString(","))
-    // add-only (one equality-delete file): O(delta) fast commit
-    Some(commitAdded(b, snapId, branch, "delete", entries, summary))
+    // add-only (one equality-delete file): an O(delta) commit
+    Some(commitDelta(b, snapId, branch, "delete", Set.empty, entries,
+      summary))
   }
 
   /** Stage `keys` (logical names) as one equality-delete file under
@@ -3022,8 +2847,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
         ndvFoldTweak(b.meta, movedData, snapId)
       else ndvFoldIdentity
     val addedStamped = added.map(ndv.stamp)
-    // add-only (delete file + new data files): O(delta) fast commit
-    commitAdded(b, snapId, branch, op, addedStamped, summary, ndv.metaTweak)
+    // add-only (delete file + new data files): an O(delta) commit
+    commitDelta(b, snapId, branch, op, Set.empty, addedStamped, summary,
+      ndv.metaTweak)
   }
 
   /** Generic COW transaction: `f` receives the base snapshot's entries
@@ -3067,15 +2893,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
         // segment-narrowed commit: only parent segments whose path
         // bounds can hold an affected file are read; commit driver
         // work is O(touched segments + new files), not O(table)
-        Some(commitDeltaFast(b, snapId, branch, operation, affected,
-          newEntries, summary, metaTweak).getOrElse {
-          branch match {
-            case None => commitSnapshot(b, snapId, operation,
-              committed, summary, metaTweak = metaTweak)
-            case Some(br) => commitSnapshotOnBranch(b, snapId,
-              operation, br, committed, summary, metaTweak)
-          }
-        })
+        Some(commitDelta(b, snapId, branch, operation, affected,
+          newEntries, summary, metaTweak))
     }
   }
 
@@ -3252,30 +3071,6 @@ class GraftTable(val spark: SparkSession, val root: Path,
     b.meta.snapshots.find(_.snapshotId == ref.snapshotId)
       .getOrElse(throw new IllegalStateException(
         s"branch $branch points at expired snapshot ${ref.snapshotId}"))
-  }
-
-  /** Commit a snapshot onto a BRANCH: parent is the branch head, only
-    * the branch pointer advances — main readers are untouched. */
-  private def commitSnapshotOnBranch(base: Base, id: Long,
-      operation: String, branch: String, entries: Seq[ManifestEntry],
-      summary: Map[String, String],
-      metaTweak: TableMeta => TableMeta = identity): SnapshotMeta = {
-    val head = branchHead(base, branch)
-    // segment composition diffs against the BRANCH head (this commit's
-    // parent); unique names per attempt — see commitSnapshot
-    val manifestRel = writeManifestList(Some(head), id, entries,
-      compact = false)
-    val snap = SnapshotMeta(id, Some(head.snapshotId), now(), operation,
-      manifestRel,
-      summary ++ Map("branch" -> branch) ++ summaryTotals(entries),
-      schemaDdl = Some(base.meta.schemaDdl),
-      physicalNames = if (base.meta.physicalNames.isEmpty) None
-        else Some(base.meta.physicalNames))
-    commitMeta(base, metaTweak(base.meta.copy(
-      snapshots = base.meta.snapshots :+ snap,
-      refs = base.meta.refs +
-        (branch -> base.meta.refs(branch).copy(snapshotId = id)))))
-    snap
   }
 
   /** Entries whose data files survive only if not in `affected` —
@@ -3668,8 +3463,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * retained snapshot is reachable by definition), checked against
     * the full retained segment scan — so expiring history on a
     * million-file table costs the driver O(actually-deleted files),
-    * never an O(table files) reachable-set. Below the threshold (or
-    * with legacy inline manifests) the original driver walk runs. */
+    * never an O(table files) reachable-set. Below the threshold the
+    * original driver walk runs. */
   private def sweepExpired(retained: Seq[SnapshotMeta],
       removed: Seq[SnapshotMeta]): Unit = {
     // segments are SHARED across snapshots: only metadata files no
@@ -3851,9 +3646,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     require(!added.exists(e => headPaths.contains(e.path)),
       s"cannot cherry-pick snapshot $snapshotId: its added files are " +
         "already present at the current head")
-    val newEntries = b.entries.filterNot(e =>
-      removed.contains(e.path)) ++ added
-    commitSnapshot(b, nextSnapshotHint, snap.operation, newEntries,
+    commitDelta(b, nextSnapshotHint, None, snap.operation,
+      b.entries.filter(e => removed(e.path)).map(abs).toSet, added,
       Map("cherry-picked-snapshot-id" -> snapshotId.toString))
   }
 
@@ -3952,9 +3746,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val summary = extraSummary ++ Map(
       "added-data-files" -> newEntries.size.toString,
       "added-records" -> newEntries.map(_.recordCount).sum.toString)
-    commitAddOnlyFast(b, snapId, Some(branch), "append", newEntries, summary)
-      .getOrElse(commitSnapshotOnBranch(b, snapId, "append", branch,
-        manifestOf(branchHead(b, branch)) ++ newEntries, summary))
+    commitDelta(b, snapId, Some(branch), "append", Set.empty, newEntries,
+      summary)
   }
 
   /** Read at a named ref — `SELECT ... VERSION AS OF 'ref-name'`. */
@@ -4123,18 +3916,16 @@ class GraftTable(val spark: SparkSession, val root: Path,
     }
     val written = writeDataFiles(toWrite, b.meta,
       sketch = fileNdvEnabled(b.meta))
-    val keep = entries.filter(e => e.content == 0 && !candidateSet(abs(e)))
-    // all deletes were applied while reading the candidates
-    val dropDeletes = rewriteAll || hasDeletes
-    val keptDeletes = if (dropDeletes) Nil else entries.filter(_.content != 0)
     // compaction is the path that UNMASKS rows (deletes applied into
     // the rewrite): stamping the compacted files' sketches is what
     // makes a MOR-deleted table refold-eligible again
     val newEntries = statEntries(written.files, content = 0, snapId)
       .map(ndvStampTweak(b.meta, written))
-    Some(commitSnapshot(b, snapId, "replace",
-      keep ++ keptDeletes ++ newEntries,
-      Map("rewritten-data-files" -> candidates.size.toString,
+    // the victims go: the candidates, and every delete file, all of
+    // them applied while reading the candidates (any delete file makes
+    // every data file a candidate)
+    Some(commitDelta(b, snapId, None, "replace", victims.map(abs).toSet,
+      newEntries, Map("rewritten-data-files" -> candidates.size.toString,
         "target-file-size-bytes" -> target.toString)))
   }
 
@@ -4232,7 +4023,6 @@ class GraftTable(val spark: SparkSession, val root: Path,
       StructType.fromDDL("file_path STRING, pos BIGINT"))
     val stillValid = delRows.join(broadcast(liveDf),
       col("file_path") === col("live_path"), "left_semi")
-    val keep = entries.filter(_.content != 1)
     val snapId = nextSnapshotHint
     // survivors are bounded by the existing delete records — size the
     // write from the manifest counts, no extra count job; zero
@@ -4240,8 +4030,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val bound = posDel.map(_.recordCount).sum
     val (moved, n) = writeDeleteFiles(stillValid, math.max(1L, bound))
     val newEntries = statEntries(moved, content = 1, snapId)
-    Some(commitSnapshot(b, snapId, "replace", keep ++ newEntries,
-      Map("removed-delete-files" -> posDel.size.toString,
+    Some(commitDelta(b, snapId, None, "replace", posDel.map(abs).toSet,
+      newEntries, Map("removed-delete-files" -> posDel.size.toString,
         "surviving-delete-records" -> n.toString)))
   }
 
@@ -4253,22 +4043,24 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * (no adds/removes to emit) and incremental scans are unaffected;
     * only subsequent planning reads one segment instead of many. The
     * segment-sprawl antidote for long-lived tables where thousands of
-    * O(delta) commits each left a small segment behind. */
+    * O(delta) commits each left a small segment behind. The commit
+    * removes every entry and re-adds them all, in order, so
+    * [[commitDelta]] drops every parent segment and writes the one
+    * fresh segment. */
   def rewriteManifests(minSegments: Int = 2): Option[SnapshotMeta] = {
     require(minSegments >= 1, s"minSegments must be >= 1")
     val b = captureBase()
-    val cur = b.meta.currentSnapshotId
-      .flatMap(id => b.meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(return None)
+    val cur = headOf(b.meta).getOrElse(return None)
     val segs = segmentsOf(cur)
     // a single-segment list is already compact: rewriting it would
     // commit a pointless replace snapshot FOREVER on a scheduler loop
     // whose policy says min-count=1 — floor the trigger at 2
     if (segs.size < math.max(2, minSegments)) return None
-    Some(commitSnapshot(b, nextSnapshotHint, "replace", manifestOf(cur),
+    val entries = manifestOf(cur)
+    Some(commitDelta(b, nextSnapshotHint, None, "replace",
+      entries.map(abs).toSet, entries,
       Map("manifests-replaced" -> segs.size.toString,
-        "manifests-created" -> "1"),
-      compactSegments = true))
+        "manifests-created" -> "1")))
   }
 
   // ---- metadata tables (S3/D15) ----
@@ -4276,7 +4068,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
   def history: DataFrame = {
     import spark.implicits._
     val m = meta
-    val ancestors = Iterator.iterate(currentSnapshot)(s =>
+    val ancestors = Iterator.iterate(headOf(m))(s =>
       s.flatMap(_.parentId).flatMap(id => m.snapshots.find(_.snapshotId == id)))
       .takeWhile(_.isDefined).flatten.map(_.snapshotId).toSet
     m.snapshots.map(s => (tsMs(s.timestampMs), s.snapshotId, s.parentId,
@@ -4434,18 +4226,11 @@ class GraftTable(val spark: SparkSession, val root: Path,
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .getOrElse(100000L)
 
-  /** Total entries across these snapshots' manifests from segment refs
-    * only; None when a legacy inline manifest hides the count. */
-  private def refEntryCount(snaps: Seq[SnapshotMeta]): Option[Long] = {
-    val per = snaps.map(s => listDocOf(s.manifestList) match {
-      case Right(refs) => Some(refs.map(_.entryCount.toLong).sum)
-      case Left(_) => None
-    })
-    if (per.contains(None)) None else Some(per.flatten.sum)
-  }
-
+  /** Whether these snapshots' manifests reach the distributed
+    * threshold, counted from segment refs alone. */
   private def serveDistributed(snaps: Seq[SnapshotMeta]): Boolean =
-    refEntryCount(snaps).exists(_ >= metadataDistributedThreshold)
+    snaps.map(s => segmentsOf(s).map(_.entryCount.toLong).sum).sum >=
+      metadataDistributedThreshold
 
   private def filesDistributed(segRels: Seq[String]): DataFrame =
     if (segRels.isEmpty) filesOf(Nil)
@@ -4540,8 +4325,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * manifest list references, one row per distinct file with the
     * snapshot that wrote it (Iceberg's all_manifests; the manifest
     * LISTS themselves surface as `snapshots.manifest_list`, exactly
-    * the two-level split file_summary_utils.py:45-79 queries). A
-    * pre-segment inline manifest surfaces as its own file. */
+    * the two-level split file_summary_utils.py:45-79 queries). */
   def allManifests: DataFrame = {
     import spark.implicits._
     meta.snapshots.flatMap(segmentRows).distinct
@@ -4551,17 +4335,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
 
   private def segmentRows(s: SnapshotMeta)
       : Seq[(String, Long, Long, Int, Int, Int, Long)] =
-    listDocOf(s.manifestList) match {
-      case Left(entries) => // inline format: the list file IS the manifest
-        Seq((root.resolve(s.manifestList).toString, s.snapshotId,
-          Files.size(root.resolve(s.manifestList)), entries.size,
-          entries.count(_.content == 0), entries.count(_.content != 0),
-          entries.filter(_.content == 0).map(_.recordCount).sum))
-      case Right(refs) => refs.map(r =>
-        (root.resolve(r.path).toString, r.addedSnapshotId, r.sizeBytes,
-          r.entryCount, r.dataFileCount, r.deleteFileCount,
-          r.recordCount))
-    }
+    segmentsOf(s).map(r =>
+      (root.resolve(r.path).toString, r.addedSnapshotId, r.sizeBytes,
+        r.entryCount, r.dataFileCount, r.deleteFileCount, r.recordCount))
 
   def metadataLogEntries: DataFrame = {
     import spark.implicits._

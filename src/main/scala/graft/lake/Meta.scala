@@ -88,9 +88,7 @@ final case class ManifestSegmentRef(
     minPath: Option[String] = None,
     maxPath: Option[String] = None)
 
-/** The manifest-list document a `snap-*.json` holds. (Pre-segment
-  * metadata stored a bare entry ARRAY in the same file; readers sniff
-  * the first byte and accept both.) */
+/** The manifest-list document a `snap-*.json` holds. */
 final case class ManifestListDoc(segments: Seq[ManifestSegmentRef])
 
 final case class SnapshotMeta(
@@ -189,13 +187,16 @@ object Json {
     mapper.readValue(s, classOf[TableMeta])
   def readManifest(s: String): Seq[ManifestEntry] =
     mapper.readValue(s, classOf[Array[ManifestEntry]]).toSeq
-  /** Parse a `snap-*.json`: Right(segment refs) for the manifest-list
-    * format, Left(entries) for the pre-segment inline-array format. */
-  def readManifestDoc(s: String)
-      : Either[Seq[ManifestEntry], Seq[ManifestSegmentRef]] =
+  /** Parse a `snap-*.json` manifest list into its segment refs. A bare
+    * entry array there is the pre-segment inline format, which no
+    * reader serves: it refuses, naming the file. */
+  def readManifestList(p: Path): Seq[ManifestSegmentRef] = {
+    val s = Files.readString(p)
     if (s.dropWhile(_.isWhitespace).startsWith("["))
-      Left(readManifest(s))
-    else Right(mapper.readValue(s, classOf[ManifestListDoc]).segments)
+      throw new IllegalStateException(s"$p holds a pre-segment inline " +
+        "manifest (a bare entry array), which is no longer readable")
+    mapper.readValue(s, classOf[ManifestListDoc]).segments
+  }
 }
 
 /** The commit boundary of a GraftLake table — the one operation that

@@ -39,6 +39,8 @@ class GraftTablePropSpec extends SparkSuite {
   private case object Orphans extends Op
   private case class BranchCycle(pick: Int, n: Int,
       publish: Boolean) extends Op
+  private case class Overwrite(n: Int) extends Op
+  private case object Analyze extends Op
 
   private val genOp: Gen[Op] = Gen.frequency(
     3 -> Gen.choose(1, 4).map(Append),
@@ -54,13 +56,17 @@ class GraftTablePropSpec extends SparkSuite {
     1 -> Gen.const(Orphans),
     1 -> Gen.zip(Gen.choose(0, 7), Gen.choose(1, 3),
       Gen.oneOf(true, false)).map { case (p, n, pub) =>
-        BranchCycle(p, n, pub) })
+        BranchCycle(p, n, pub) },
+    1 -> Gen.choose(1, 3).map(Overwrite),
+    1 -> Gen.const(Analyze))
 
   // composite-key deletes that masked a row, over the whole property
   private var pairMasks = 0
 
+  // every sequence starts from three rows, so its first DML ops act
+  // on rows instead of skipping on an empty table
   private val genOps: Gen[List[Op]] =
-    Gen.choose(4, 8).flatMap(n => Gen.listOfN(n, genOp))
+    Gen.choose(4, 8).flatMap(n => Gen.listOfN(n, genOp)).map(Append(3) :: _)
 
   /** Sequences run against every combination of delete/update write
     * modes, so COW and MOR paths both face the same random workloads. */
@@ -178,6 +184,22 @@ class GraftTablePropSpec extends SparkSuite {
         val to = if (fnName == "first_name") "fn_alt" else "first_name"
         t.renameColumn(fnName, to)
         fnName = to
+      case Overwrite(n) =>
+        val rows = freshRows(n)
+        t.overwriteAll(spark.createDataFrame(rows.asJava, curSchema))
+        model = rows.map(r => M(r.getString(0), Some(r.getString(1))))
+          .toVector
+        snap()
+      case Analyze =>
+        // the per-file ANALYZE needs a delete-free head: compact the
+        // delete files away first, then the ANALYZE restamps every data
+        // entry with its file's sketch in a data-neutral `replace`
+        // commit
+        if (t.currentSnapshot.exists(
+            t.manifestOf(_).exists(_.content != 0)))
+          t.rewriteDataFiles()
+        t.computeTableStats(Seq(fnName))
+        snap()
       case BranchCycle(pick, n, publish) =>
         // stage append + delete on a branch; main must not move until
         // (and unless) the branch is published via fastForward
@@ -243,8 +265,8 @@ class GraftTablePropSpec extends SparkSuite {
     // 6. O(delta) manifest discipline never silently degrades: for
     //    every retained parent→child commit, a parent segment whose
     //    entries ALL survive unchanged in the child manifest must be
-    //    referenced VERBATIM (same file) by the child's list — if the
-    //    composition fell back to a full rewrite, this catches it
+    //    referenced VERBATIM (same file) by the child's list — a
+    //    commit that rewrote a segment it did not touch fails here
     val byId2 = t.meta.snapshots.map(s => s.snapshotId -> s).toMap
     t.meta.snapshots.foreach { s =>
       s.parentId.flatMap(byId2.get).foreach { p =>
@@ -260,6 +282,20 @@ class GraftTablePropSpec extends SparkSuite {
                 s"${p.snapshotId}→${s.snapshotId}) after $ops")
         }
       }
+    }
+    // 7. every retained snapshot's summary totals equal the counts
+    //    over its manifest as a fresh handle (empty caches) reads it
+    val fresh = GraftTable.load(spark, t.root)
+    fresh.meta.snapshots.foreach { s =>
+      val es = fresh.manifestOf(s)
+      val data = es.filter(_.content == 0)
+      val want = Map(
+        "total-records" -> data.map(_.recordCount).sum.toString,
+        "total-data-files" -> data.size.toString,
+        "total-delete-files" -> (es.size - data.size).toString)
+      assert(want.forall { case (k, v) => s.summary.get(k).contains(v) },
+        s"snapshot ${s.snapshotId} summary ${s.summary} disagrees with " +
+          s"its manifest $want after $ops")
     }
     true
   }

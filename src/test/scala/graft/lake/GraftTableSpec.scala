@@ -1746,6 +1746,75 @@ class GraftTableSpec extends SparkSuite {
     assert(t.rewriteManifests().isEmpty)
   }
 
+  test("a commit whose removed file lies outside every parent " +
+      "segment's path bounds refuses before publishing: version, rows " +
+      "and files stay unchanged") {
+    val cat = new GraftCatalog(spark, freshWarehouse())
+    cat.createNamespace("d")
+    val t = cat.createTable("d", "t", piiSchema,
+      Map("write.delete.mode" -> "copy-on-write"))
+    t.append(seedDf) // the segment holding case-1..3
+    t.append(spark.createDataFrame(Seq(Row("case-8", "Zed",
+      "z@example.com", "key8", "s8", "sk8",
+      java.sql.Date.valueOf("2024-05-01"))).asJava, piiSchema))
+    val head = t.currentSnapshot.get
+    val refs = t.segmentsOf(head)
+    assert(refs.size === 2)
+    // a bounds bug: the seed segment's bounds sort after every entry
+    // path it holds, so no removal can find its entries through them
+    val bad = refs.head.copy(minPath = Some("zzz-a"), maxPath = Some("zzz-b"))
+    Files.writeString(t.root.resolve(head.manifestList),
+      Json.write(ManifestListDoc(bad +: refs.tail)))
+    val t2 = GraftTable.load(spark, t.root) // parses the edited list
+    val v = t2.version
+    def rows(g: GraftTable) = g.read().collect().map(_.toSeq).toSet
+    def files(g: GraftTable) =
+      g.files.select("file_path").collect().map(_.getString(0)).toSet
+    val rowsBefore = rows(t2)
+    val filesBefore = files(t2)
+    val e = intercept[IllegalStateException](
+      t2.delete(col("case_id") === "case-2"))
+    assert(e.getMessage.contains("nothing was published"), e.getMessage)
+    val t3 = GraftTable.load(spark, t.root)
+    assert(t3.version === v)
+    assert(t3.currentSnapshot.map(_.snapshotId) === Some(head.snapshotId))
+    assert(rows(t3) === rowsBefore && rowsBefore.size === 4)
+    assert(files(t3) === filesBefore)
+  }
+
+  test("currentSnapshot and history resolve the head within ONE " +
+      "metadata version: a commit plus a retain-last-1 expiry landing " +
+      "between two reads cannot hide the head") {
+    val t = newTable()
+    t.append(seedDf)
+    val other = GraftTable.load(spark, t.root)
+    var armed = false
+    // the first version read after arming lets another handle commit
+    // twice and expire every older snapshot before this read returns
+    val racy = new GraftTable(spark, t.root) {
+      override def version: Int = {
+        val v = super.version
+        if (armed) {
+          armed = false
+          other.append(seedDf.limit(1))
+          other.append(seedDf.limit(1))
+          Thread.sleep(2)
+          other.expireSnapshots(retainLast = 1)
+        }
+        v
+      }
+    }
+    val head = t.currentSnapshot.get.snapshotId
+    armed = true
+    assert(racy.currentSnapshot.map(_.snapshotId) === Some(head))
+    val head2 = t.currentSnapshot.get.snapshotId
+    armed = true
+    val hist = racy.history.collect()
+      .map(r => r.getAs[Long]("snapshot_id") ->
+        r.getAs[Boolean]("is_current_ancestor")).toMap
+    assert(hist === Map(head2 -> true))
+  }
+
   test("merge-on-commit bounds segment sprawl: a commit whose list " +
       "reaches min-count-to-merge folds adjacent small segments into " +
       "one; below the threshold commits stay O(delta); disabling the " +
