@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.{BloomMightContain, CharGrams, DotProduct, NGrams, PqAdc, PqEncode, SignPack, SimHash64}
 
@@ -10,8 +12,16 @@ import graft.functions.{BloomMightContain, CharGrams, DotProduct, NGrams, PqAdc,
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
   * public SparkSessionExtensions surface. Injects the GraftLake SQL
   * planning rule (reads + row-level UPDATE/DELETE for
-  * `graft.<ns>.<table>` relations) and the bucket-local scan claim,
-  * and registers the eight native kernels by name.
+  * `graft.<ns>.<table>` relations), the bucket-local scan claim, and
+  * `graft.plans.ParamLiterals`, which rewrites the inlined literal
+  * operands of comparisons and arithmetic in filters and projections
+  * to `ParamLiteral`s just before whole-stage codegen, so a lookup with
+  * a new key reuses the compiled class of the last one. It registers
+  * the eight native kernels by name.
+  *
+  * Every query returns the same rows on a session without these
+  * extensions; only the generated code differs (it inlines every
+  * literal, so each new key compiles its stages again).
   *
   * The engine's own queries never need that registration: they build
   * each kernel directly as a Column (`graft.functions.vec`,
@@ -31,6 +41,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // distribute filters/projections over the claim so pushdown and
     // column pruning reach the per-bucket parquet scans
     ext.injectOptimizerRule(_ => graft.plans.ClaimPushdown)
+    // constant-independent generated code: runs just before
+    // CollapseCodegenStages on every plan, adaptive or not
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.ParamLiterals
+    })
     ext.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProduct].getCanonicalName, "vec_dot"),

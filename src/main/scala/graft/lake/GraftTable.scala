@@ -709,8 +709,10 @@ class GraftTable(val spark: SparkSession, val root: Path,
   private def headOf(m: TableMeta): Option[SnapshotMeta] =
     m.currentSnapshotId.flatMap(id => m.snapshots.find(_.snapshotId == id))
 
-  def snapshotOrFail(id: Long): SnapshotMeta =
-    meta.snapshots.find(_.snapshotId == id).getOrElse(
+  def snapshotOrFail(id: Long): SnapshotMeta = snapshotIn(meta, id)
+
+  private def snapshotIn(m: TableMeta, id: Long): SnapshotMeta =
+    m.snapshots.find(_.snapshotId == id).getOrElse(
       throw new IllegalArgumentException(
         s"Cannot find snapshot with ID $id (expired or never existed)"))
 
@@ -1036,31 +1038,55 @@ class GraftTable(val spark: SparkSession, val root: Path,
   // ---- reads ----
 
   /** Current-snapshot read (ref demo.py:114 `SELECT * FROM pii_data`). */
-  def read(): DataFrame = wapBranch.filter(meta.refs.contains) match {
-    // audit reads see the staged branch state; a conf naming a branch
-    // that no write created yet falls back to main (Iceberg behavior)
-    case Some(br) => readRef(br)
-    case None => readEntries(currentEntries)
+  def read(): DataFrame = readIn { m =>
+    wapBranch.filter(m.refs.contains) match {
+      // audit reads see the staged branch state; a conf naming a branch
+      // that no write created yet falls back to main (Iceberg behavior)
+      case Some(br) => readSnapshot(m, snapshotIn(m, refIdIn(m, br)))
+      case None => readEntries(headOf(m).map(manifestOf).getOrElse(Nil),
+        StructType.fromDDL(m.schemaDdl), m.physicalNames)
+    }
+  }
+
+  /** `read` over ONE captured metadata version: the snapshot, the
+    * schema and the physical-name mapping all come from `m`, so a
+    * commit plus an expiry landing mid-read cannot resolve the head
+    * from one version and its schema or manifest from another. When
+    * that expiry deleted a manifest the captured version still names,
+    * the read starts over from the version published since. */
+  private def readIn[A](read: TableMeta => A): A = {
+    val b = captureBase()
+    try read(b.meta)
+    catch {
+      case _: java.nio.file.NoSuchFileException if version != b.version =>
+        readIn(read)
+    }
   }
 
   /** The table schema as of `snapshotId` (snapshots commit with the
     * schema that was current; pre-evolution metadata falls back to the
     * current schema). */
-  def schemaAt(snapshotId: Long): StructType =
-    snapshotOrFail(snapshotId).schemaDdl.map(StructType.fromDDL)
-      .getOrElse(schema)
+  def schemaAt(snapshotId: Long): StructType = {
+    val m = meta
+    schemaOf(m, snapshotIn(m, snapshotId))
+  }
+
+  private def schemaOf(m: TableMeta, s: SnapshotMeta): StructType =
+    StructType.fromDDL(s.schemaDdl.getOrElse(m.schemaDdl))
 
   /** Time travel (ref demo.py:261 option("snapshot-id", id)); throws for
     * expired snapshots exactly like the demo shows (demo.py:300-306).
     * Reads with the schema AS OF the snapshot, so columns added later
     * don't appear and columns dropped later still do. */
-  def readAt(snapshotId: Long): DataFrame = {
-    val s = snapshotOrFail(snapshotId)
-    // resolve file columns through the mapping AS OF that snapshot, so
-    // time travel across later renames still reads the right bytes
-    readEntries(manifestOf(s), schemaAt(snapshotId),
+  def readAt(snapshotId: Long): DataFrame =
+    readIn(m => readSnapshot(m, snapshotIn(m, snapshotId)))
+
+  /** Snapshot `s` of `m` with its own schema, through the mapping AS OF
+    * that snapshot, so time travel across later renames still reads the
+    * right bytes. */
+  private def readSnapshot(m: TableMeta, s: SnapshotMeta): DataFrame =
+    readEntries(manifestOf(s), schemaOf(m, s),
       s.physicalNames.getOrElse(Map.empty))
-  }
 
   /** Bucket-local (storage-partitioned) read — the shuffle-free join
     * path for tables clustered `bucket(n, key)`: returns a scan whose
@@ -1220,14 +1246,15 @@ class GraftTable(val spark: SparkSession, val root: Path,
   /** Stats-pruned read: min/max manifest stats choose the file list
     * before the scan (the Iceberg manifest-pruning analog, SURVEY §4);
     * the predicate is then applied in full inside the scan. */
-  def readWhere(pred: Column): DataFrame = {
+  def readWhere(pred: Column): DataFrame = readIn { m =>
     // same spark.wap.branch audit routing as read()
-    val snap = wapBranch.filter(meta.refs.contains) match {
-      case Some(br) => Some(snapshotOrFail(refSnapshotId(br)))
-      case None => currentSnapshot
+    val snap = wapBranch.filter(m.refs.contains) match {
+      case Some(br) => Some(snapshotIn(m, refIdIn(m, br)))
+      case None => headOf(m)
     }
-    val pruned = snap.map(prunedEntriesOf(_, _ => pred)).getOrElse(Nil)
-    readEntries(pruned).filter(pred)
+    val pruned = snap.map(prunedEntriesOf(m, _, _ => pred)).getOrElse(Nil)
+    readEntries(pruned, StructType.fromDDL(m.schemaDdl), m.physicalNames)
+      .filter(pred)
   }
 
   /** Runtime join-driven file pruning — the dynamic-partition-pruning
@@ -1968,12 +1995,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * hit discovery) — at 100 TB this is what turns `UPDATE ... WHERE
     * case_id='x'` into a scan of the files whose min/max admit 'x', not
     * a full-table scan. */
-  private def pruneByPredicate(entries: Seq[ManifestEntry],
+  private def pruneByPredicate(m: TableMeta, entries: Seq[ManifestEntry],
       conjuncts: Seq[Expression]): Seq[ManifestEntry] = {
-    // hoisted: each `meta` access re-reads and re-parses the metadata
-    // file — per-entry-per-conjunct lookups would dominate pruning on
-    // a many-thousand-file table
-    val m = meta
     val sch = StructType.fromDDL(m.schemaDdl)
     val buckets = m.properties.get(ClusterProp)
       .map(ClusterSpec.parseList).getOrElse(Nil)
@@ -1993,12 +2016,12 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * million-file table costs the driver O(survivors), not O(table).
     * Below the threshold this is exactly [[pruneByPredicate]] over
     * [[manifestOf]]. */
-  private[lake] def prunedEntriesOf(s: SnapshotMeta,
+  private[lake] def prunedEntriesOf(m: TableMeta, s: SnapshotMeta,
       bind: DataFrame => Column): Seq[ManifestEntry] = {
     val refs = segmentsOf(s)
     if (refs.map(_.entryCount.toLong).sum >= metadataDistributedThreshold)
-      prunedDistributed(refs, bind)
-    else pruneByPredicate(manifestOf(s), analyzeConjuncts(bind))
+      prunedDistributed(m, refs, bind)
+    else pruneByPredicate(m, manifestOf(s), analyzeConjuncts(m, bind))
   }
 
   /** Executor-side stats pruning: ships the analyzed conjuncts plus the
@@ -2008,18 +2031,17 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * cannot disagree on a file. Survivors come back sorted by
     * (content, path): entry ORDER is a commit-composition concern, and
     * this path feeds reads only (file sets), never commits. */
-  private def prunedDistributed(refs: Seq[ManifestSegmentRef],
+  private def prunedDistributed(m: TableMeta, refs: Seq[ManifestSegmentRef],
       bind: DataFrame => Column): Seq[ManifestEntry] = {
     // only the comparison shapes mayMatch can prune on cross the wire:
     // anything else returns true there anyway, and a non-serializable
     // conjunct (a surviving subquery fragment) would otherwise fail
     // Task-not-serializable only past the distributed threshold —
     // i.e. only on large tables, where the driver path is conservative
-    val conjuncts = analyzeConjuncts(bind).filter(GraftTable.prunable)
+    val conjuncts = analyzeConjuncts(m, bind).filter(GraftTable.prunable)
     if (conjuncts.isEmpty)
       return entriesDataset(refs.map(_.path))
         .collect().toSeq.sortBy(e => (e.content, e.path))
-    val m = meta
     val sch = StructType.fromDDL(m.schemaDdl)
     val mapping = m.physicalNames
     val buckets = m.properties.get(ClusterProp)
@@ -2667,7 +2689,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // distributed threshold) and the commit reads no parent segment —
     // whole-op driver work is O(candidates + new files)
     val headSnap = headSnapshot(b, branch)
-    val pruned = headSnap.map(prunedEntriesOf(_, bind)).getOrElse(Nil)
+    val pruned = headSnap.map(prunedEntriesOf(b.meta, _, bind)).getOrElse(Nil)
     val tgt = claimedOr(pruned, claimKey)
     val hits = tgt.filter(bind(tgt))
       .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
@@ -2708,7 +2730,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     // add-only like morDelete (position-delete files + new data files):
     // pruned planning + an O(delta) commit
     val headSnap = headSnapshot(b, branch)
-    val pruned = headSnap.map(prunedEntriesOf(_, bind)).getOrElse(Nil)
+    val pruned = headSnap.map(prunedEntriesOf(b.meta, _, bind)).getOrElse(Nil)
     val tgt = claimedOr(pruned, claimKey)
     val hits = tgt.filter(bind(tgt)).cache()
     try {
@@ -2910,7 +2932,7 @@ class GraftTable(val spark: SparkSession, val root: Path,
     lazy val entries: Seq[ManifestEntry] =
       head.map(manifestOf).getOrElse(Nil)
     def pruned(bind: DataFrame => Column): Seq[ManifestEntry] =
-      head.map(prunedEntriesOf(_, bind)).getOrElse(Nil)
+      head.map(prunedEntriesOf(meta, _, bind)).getOrElse(Nil)
     def readLineage(es: Seq[ManifestEntry]): DataFrame =
       readWithLineage(es)
   }
@@ -3002,8 +3024,8 @@ class GraftTable(val spark: SparkSession, val root: Path,
     val key = sch.fields.find(_.name.equalsIgnoreCase(keyColumn))
       .getOrElse(throw new IllegalArgumentException(
         s"unknown column: $keyColumn"))
-    val conjuncts = analyzeConjuncts(bind)
-    val survivors = pruneByPredicate(data, conjuncts)
+    val conjuncts = analyzeConjuncts(m, bind)
+    val survivors = pruneByPredicate(m, data, conjuncts)
     val proven: ManifestEntry => Boolean = conjuncts match {
       case Seq(EqualTo(a: AttributeReference, l: Literal))
           if GraftTable.exactStats(a.dataType) && l.value != null =>
@@ -3751,14 +3773,16 @@ class GraftTable(val spark: SparkSession, val root: Path,
   }
 
   /** Read at a named ref — `SELECT ... VERSION AS OF 'ref-name'`. */
-  def readRef(name: String): DataFrame = readAt(refSnapshotId(name))
+  def readRef(name: String): DataFrame =
+    readIn(m => readSnapshot(m, snapshotIn(m, refIdIn(m, name))))
 
   /** The PUBLISHED main-branch state, ignoring `spark.wap.branch` —
     * what an explicit `branch=main` read must serve: re-routing it to
     * staged data would be the silent-wrong-answer the option exists
     * to rule out. */
-  def readMainBranch(): DataFrame =
-    meta.currentSnapshotId.map(readAt).getOrElse(emptyDf)
+  def readMainBranch(): DataFrame = readIn(m => headOf(m)
+    .map(readSnapshot(m, _))
+    .getOrElse(emptyDfOf(StructType.fromDDL(m.schemaDdl))))
 
   /** Latest MAIN-ancestry snapshot committed at or before `ms` — the
     * Iceberg snapshot-log semantics behind `TIMESTAMP AS OF` and the
@@ -3770,15 +3794,17 @@ class GraftTable(val spark: SparkSession, val root: Path,
     ancestorsOf(None).filter(_.timestampMs <= ms)
       .sortBy(s => (s.timestampMs, s.snapshotId)).lastOption
 
-  def refSnapshotId(name: String): Long = {
+  def refSnapshotId(name: String): Long = refIdIn(meta, name)
+
+  private def refIdIn(m: TableMeta, name: String): Long = {
     // "main" resolves to the published head (it is never a stored
     // ref — createRef reserves the name), so VERSION AS OF 'main'
     // and branch plumbing treat it exactly like fastForward does
     if (name == "main")
-      return meta.currentSnapshotId.getOrElse(
+      return m.currentSnapshotId.getOrElse(
         throw new IllegalArgumentException(
           "branch main has no snapshots yet"))
-    meta.refs.getOrElse(name, throw new UnknownRefException(name))
+    m.refs.getOrElse(name, throw new UnknownRefException(name))
       .snapshotId
   }
 
@@ -4842,9 +4868,9 @@ class GraftTable(val spark: SparkSession, val root: Path,
     * inserts exactly this cast when an NTZ column (Spark 4's parquet
     * inference) meets an LTZ literal, which would otherwise defeat the
     * AttributeReference patterns in mayMatch. */
-  private def analyzeConjuncts(bind: DataFrame => Column)
+  private def analyzeConjuncts(m: TableMeta, bind: DataFrame => Column)
       : Seq[Expression] = {
-    val df = emptyDf
+    val df = emptyDfOf(StructType.fromDDL(m.schemaDdl))
     val analyzed = df.filter(bind(df)).queryExecution.analyzed
     val conds = analyzed.collect { case f: logical.Filter => f.condition }
     def split(e: Expression): Seq[Expression] = e match {

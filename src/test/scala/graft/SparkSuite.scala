@@ -8,9 +8,30 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   override def afterAll(): Unit = () // session shared across suites
+
+  /** `f` with `conf` set on the shared session; every key is restored
+    * (or unset) afterwards. */
+  def withConf[A](conf: Map[String, String])(f: => A): A = {
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSuite {
+  /** The two ways an expression can run: whole-stage codegen with no
+    * interpreted fallback, and codegen off entirely. */
+  val codegenModes: Seq[(String, Map[String, String])] = Seq(
+    "codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")

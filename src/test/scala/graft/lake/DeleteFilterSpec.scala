@@ -21,23 +21,6 @@ import graft.SparkSuite
   * off entirely. */
 class DeleteFilterSpec extends SparkSuite {
 
-  private val modes = Seq(
-    "codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.fallback" -> "false",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-    "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-
-  private def withConf[A](conf: Map[String, String])(f: => A): A = {
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def newTable(ddl: String, dirPrefix: String = "graft-dfspec-")
       : GraftTable = GraftTable.create(spark,
     graft.ScratchDirs.create(dirPrefix).resolve("t"), "default.t",
@@ -56,7 +39,7 @@ class DeleteFilterSpec extends SparkSuite {
       : Long = {
     val want = AntiJoinDeletes.read(t, t.manifestOf(s),
       t.schemaAt(s.snapshotId), s.physicalNames.getOrElse(Map.empty))
-    for ((mode, conf) <- modes) withConf(conf) {
+    for ((mode, conf) <- SparkSuite.codegenModes) withConf(conf) {
       assertSameRows(read, want, s"$mode read of snapshot ${s.snapshotId}")
     }
     want.count()

@@ -1815,6 +1815,46 @@ class GraftTableSpec extends SparkSuite {
     assert(hist === Map(head2 -> true))
   }
 
+  test("readMainBranch, readRef, readWhere and read resolve the head, " +
+      "its schema and its mapping within ONE metadata version: a commit " +
+      "plus a retain-last-1 expiry between two reads cannot make them " +
+      "throw") {
+    val t = newTable()
+    t.append(seedDf)
+    val other = GraftTable.load(spark, t.root)
+    var armed = false
+    // as above: the first version read after arming lets another handle
+    // commit twice and expire every older snapshot, including the head
+    // that version names, and the manifest list of that head
+    val racy = new GraftTable(spark, t.root) {
+      override def version: Int = {
+        val v = super.version
+        if (armed) {
+          armed = false
+          other.append(seedDf.limit(1))
+          other.append(seedDf.limit(1))
+          Thread.sleep(2)
+          other.expireSnapshots(retainLast = 1)
+        }
+        v
+      }
+    }
+    val reads = Seq[(String, GraftTable => org.apache.spark.sql.DataFrame)](
+      "readMainBranch" -> (_.readMainBranch()),
+      "readRef(main)" -> (_.readRef("main")),
+      "readWhere" -> (_.readWhere(col("case_id") =!= "none")),
+      "read" -> (_.read()))
+    for ((name, read) <- reads) {
+      val before = t.read().count()
+      armed = true
+      val n = read(racy).count()
+      assert(!armed, s"$name never read the version")
+      // either head the read could have resolved: the one its first
+      // version named, or the one published by the racing commits
+      assert(n === before || n === before + 2, name)
+    }
+  }
+
   test("merge-on-commit bounds segment sprawl: a commit whose list " +
       "reaches min-count-to-merge folds adjacent small segments into " +
       "one; below the threshold commits stay O(delta); disabling the " +

@@ -98,12 +98,12 @@ class MetadataRelationsSpec extends SparkSuite {
       "position_deletes and partitions the same relations") {
     val t = mkTable()
     val pred = col("id") >= 150L && col("id") <= 260L
-    val driverPruned = t.prunedEntriesOf(t.currentSnapshot.get, _ => pred)
+    val driverPruned = t.prunedEntriesOf(t.meta, t.currentSnapshot.get, _ => pred)
     val driverRows = rowsOf(t.readWhere(pred))
     val driverPos = rowsOf(t.positionDeletes)
     val driverParts = rowsOf(t.partitionsTable)
     withThreshold(0) {
-      val distPruned = t.prunedEntriesOf(t.currentSnapshot.get, _ => pred)
+      val distPruned = t.prunedEntriesOf(t.meta, t.currentSnapshot.get, _ => pred)
       assert(distPruned.map(_.path).sorted === driverPruned.map(_.path).sorted,
         "the two planning paths chose different files")
       assert(distPruned.toSet === driverPruned.toSet)
@@ -124,11 +124,11 @@ class MetadataRelationsSpec extends SparkSuite {
       (1L to 4000L).map(i => Row(i, s"g${i % 13}", i)).asJava, schema),
       Seq("id"), nFiles = 32)
     val pred = col("id") === 1234L && col("grp") === "g12"
-    val driverPruned = t.prunedEntriesOf(t.currentSnapshot.get, _ => pred)
+    val driverPruned = t.prunedEntriesOf(t.meta, t.currentSnapshot.get, _ => pred)
     val driverParts = rowsOf(t.partitionsTable)
     assert(driverPruned.size < 32, "stats pruning should prune")
     withThreshold(0) {
-      val distPruned = t.prunedEntriesOf(t.currentSnapshot.get, _ => pred)
+      val distPruned = t.prunedEntriesOf(t.meta, t.currentSnapshot.get, _ => pred)
       assert(distPruned.toSet === driverPruned.toSet)
       assert(rowsOf(t.partitionsTable) === driverParts)
       assert(rowsOf(t.readWhere(pred)) ===
